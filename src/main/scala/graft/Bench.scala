@@ -14,12 +14,10 @@ object Bench {
     // JIT + parquet-footer warmup on the smallest SF so measured times are
     // steady-state query time, not first-query class-loading.
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    // Start the session memos (CorpusMemo/EmbMemo/TokMemo) from a clean
-    // slate so the build ledger below captures EVERY one-time build this
-    // run pays, and drop any ledger entries the warmup produced.
-    graft.operators.Dedup.clearCorpusMemo()
-    graft.operators.Similarity.clearEmbMemo()
-    graft.operators.TextOps.clearTokMemo()
+    // Start the session memos from a clean slate so the build ledger
+    // below captures EVERY one-time build this run pays, and drop any
+    // ledger entries the warmup produced.
+    SessionMemo.clearAll()
     MemoLedger.drain()
 
     def storageBytes(): Long =
@@ -40,43 +38,43 @@ object Bench {
       // burst can span two consecutive runs, and one extra run on a
       // genuinely-slow query is cheap insurance against reporting a
       // phantom regression.
+      var threw = false
       def once(): Double = {
         spark.catalog.clearCache()
         val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); false }
-        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name: $e"); threw = true; -1.0
+        }
       }
       val first = once()
       val base = Seq(first, once()).filter(_ >= 0)
       val times = if (base.nonEmpty && base.min > 3.0) base :+ once() else base
       storagePeak = math.max(storagePeak, storageBytes())
-      // Free each memo once its last consumer family completes (families
-      // run in name order): CorpusMemo serves d..p and t34 (so it lives
-      // to the end), EmbMemo serves s only and is freed there — the peak
-      // (both artifact sets resident) spans just the s-family and is
-      // reported below. Every freed result is already materialized
-      // through the noop sink.
-      val family = name.take(1)
-      val nextFamily = sorted.lift(i + 1).map(_._1.take(1))
-      if (!nextFamily.contains(family)) family match {
-        case "s" => graft.operators.Similarity.clearEmbMemo()
-        case "t" =>
-          graft.operators.Dedup.clearCorpusMemo()
-          graft.operators.TextOps.clearTokMemo()
-        case _ => ()
-      }
+      // Free the emb memo once the s-family, its only consumer, completes
+      // (families run in name order) — the peak (corpus and emb artifact
+      // sets both resident) then spans just the s-family and is reported
+      // below. The corpus and tok memos serve t to the end of the run.
+      // Every freed result is already materialized through the noop sink;
+      // a consumer running after the free would rebuild its artifact, and
+      // `memo_rebuilds` below reports that.
+      if (name.startsWith("s") && !sorted.lift(i + 1).exists(_._1.startsWith("s")))
+        SessionMemo.emb.clear()
       // (min, first-run): the min is the graded MARGINAL number (memo-hit,
       // JIT-warm); the first-run time INCLUDES any memo builds this query
       // triggered, so a memo-rerouted query's speedup can be read honestly
       // — reported below as the additive `queries_cold` field (round 17,
       // VERDICT r16 item 8; additions-only, the graded fields are
       // unchanged).
-      name -> ((if (times.nonEmpty) times.filter(_ >= 0).min else -1.0), first)
+      name -> ((if (times.nonEmpty) times.filter(_ >= 0).min else -1.0), first, threw)
     }
-    val marginal = results.map { case (n, (m, _)) => n -> m }
-    val cold = results.map { case (n, (_, f)) => n -> f }
+    val marginal = results.map { case (n, (m, _, _)) => n -> m }
+    val cold = results.map { case (n, (_, f, _)) => n -> f }
+    // A query that threw on any timed run: listed, and the run exits
+    // nonzero below — it must never just make the total smaller.
+    val failed = results.collect { case (n, (_, _, true)) => n }
     // One-time memo builds, each counted once (see MemoLedger): the
     // honest total is marginal query costs + build costs — exactly what
     // one release-grade pass over the inventory pays.
@@ -91,11 +89,21 @@ object Bench {
     val buildDetail = builds.sortBy(b => (b.memo, b.artifact))
       .map(b => "\"" + b.memo + ":" + b.artifact + f"""\":${b.sec}%.3f""")
       .mkString("{", ",", "}")
+    // An artifact built twice means a memo was freed before its last
+    // consumer ran — in memo_builds that shows only as a duplicate key.
+    val rebuilds = builds.groupBy(b => b.memo + ":" + b.artifact)
+      .collect { case (k, bs) if bs.size > 1 => k }.toSeq.sorted
+    if (rebuilds.nonEmpty)
+      System.err.println(s"[bench] memo artifacts built more than once: ${rebuilds.mkString(", ")}")
+    if (failed.nonEmpty)
+      System.err.println(s"[bench] failed queries: ${failed.mkString(", ")}")
+    def fmtList(xs: Seq[String]): String = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     val storagePeakMb = storagePeak / 1e6
     val line =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,""" +
       f""""memo_build_sec":$memoBuildSec%.3f,"memo_builds":$buildDetail,""" +
       f""""queries_cold":${fmtMap(cold)},""" +
+      f""""memo_rebuilds":${fmtList(rebuilds)},"queries_failed":${fmtList(failed)},""" +
       f""""memo_storage_peak_mb":$storagePeakMb%.1f,"sf":"$sfDir"}"""
     // The full 180-query line is ~7 KB — larger than the driver's stdout
     // tail window, which truncated its head two rounds running and left
@@ -130,5 +138,6 @@ object Bench {
     catch { case e: Throwable => System.err.println(s"[bench] spark.stop: $e") }
     System.out.println(compact)
     System.out.flush()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

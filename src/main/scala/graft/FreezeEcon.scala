@@ -23,26 +23,26 @@ object FreezeEcon {
     def runQ(n: String): Double =
       wall(SparkEntry.queries(n)(spark, d).write.format("noop").mode("overwrite").save())
 
-    val families = Seq[(String, String => Unit, String => Unit, Seq[String], () => Unit)](
+    val families = Seq[(String, String => Unit, String => Unit, Seq[String], SessionMemo)](
       ("dedup", p => operators.ReleaseArtifacts.write(spark, d, p),
         p => operators.ReleaseArtifacts.open(spark, d, p),
         Seq("d02_dedup_minhash_lsh", "d06_dedup_clusters", "d36_release_dedup_report",
           "d09_decontaminate", "d19_eval_leak_report", "d35_contam_ngram_curve"),
-        () => operators.Dedup.clearCorpusMemo()),
+        SessionMemo.corpus),
       ("embedding", p => operators.ReleaseArtifacts.writeEmbedding(spark, d, p),
         p => operators.ReleaseArtifacts.openEmbedding(spark, d, p),
         Seq("s01_ann_cosine_topk", "s04_ann_ivf", "s08_ann_pq"),
-        () => operators.Similarity.clearEmbMemo()),
+        SessionMemo.emb),
       ("tokenizer", p => operators.ReleaseArtifacts.writeTokenizer(spark, d, p),
         p => operators.ReleaseArtifacts.openTokenizer(spark, d, p),
         Seq("t21_bpe_merges", "t25_bpe_encode", "t43_bpe_fertility"),
-        () => operators.TextOps.clearTokMemo()))
+        SessionMemo.tok))
 
-    families.foreach { case (fam, write, open, queries, clear) =>
+    families.foreach { case (fam, write, open, queries, memo) =>
       val p = s"$base/$fam"
-      clear()
+      memo.clear()
       val tFreeze = wall(write(p))
-      clear()
+      memo.clear()
       MemoLedger.drain()
       val tOpen = wall(open(p))
       val reads = queries.map(q => q -> runQ(q))
@@ -54,7 +54,7 @@ object FreezeEcon {
       }
       require(builds.isEmpty,
         s"$fam read path ran builds: ${builds.map(_.artifact).mkString(",")}")
-      clear()
+      memo.clear()
     }
     spark.stop()
   }

@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Shared infrastructure for the session memos (Dedup.CorpusMemo,
-  * Similarity.EmbMemo, TextOps.TokMemo): a build-cost ledger, a
-  * pre-checkpoint plan hook, and the corpus content stamp.
+/** Shared infrastructure for the session memos ([[SessionMemo]]: the
+  * corpus, emb and tok families): a build-cost ledger, a pre-checkpoint
+  * plan hook, and the corpus content stamp.
   *
   * The ledger exists for honest bench accounting: a memoized artifact is
   * built exactly once per (session, corpus), inside whichever query runs
@@ -19,7 +19,8 @@ import org.apache.spark.sql.DataFrame
   * eagerly `localCheckpoint`ed at build, so by the time a consumer query's
   * plan is explained the build is a checkpointed leaf — invisible to
   * `PlanAudit`. Build sites route their pre-checkpoint DataFrame through
-  * [[audited]]; PlanAudit installs the hook (after clearing the memos so
+  * [[audited]] as `memo:<artifact key>` (see [[SessionMemo.checkpointed]]);
+  * PlanAudit installs the hook (after clearing the memos so
   * every build re-runs) and audits each build plan as its own entry.
   *
   * The content stamp guards against serving stale artifacts when the files
@@ -42,7 +43,7 @@ object MemoLedger {
   /** Time one memo-artifact build and record its EXCLUSIVE wall time —
     * elapsed minus the wall time of nested builds started inside it.
     * Builds nest by design (e.g. the verified-pairs build re-enters
-    * `artifact()` for hs → sigs → banded → bucketIds → cand), and each
+    * its memo for hs → sigs → banded → bucketIds → cand), and each
     * nested build records its own entry; recording the parent's raw
     * elapsed would count every child once per enclosing ancestor, so a
     * ledger SUM (Bench's `memo_build_sec`) would exceed the true

@@ -297,9 +297,7 @@ object PlanAudit {
     * coverage is order-independent because every build re-runs under the
     * hook. */
   def auditAll(spark: SparkSession, sfDir: String): Seq[Audit] = {
-    graft.operators.Dedup.clearCorpusMemo()
-    graft.operators.Similarity.clearEmbMemo()
-    graft.operators.TextOps.clearTokMemo()
+    SessionMemo.clearAll()
     val memoAudits = scala.collection.mutable.ArrayBuffer.empty[Audit]
     val seen = scala.collection.mutable.Set.empty[String]
     graft.MemoLedger.planHook = Some((name, df) => {

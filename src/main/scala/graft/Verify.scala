@@ -11,16 +11,20 @@ object Verify {
     val only = args.lift(2).map(_.split(",").toSet)
     val spark = GraftSession.get("graft-verify")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    // A failing query must not just drop out of the dump: the rest are
+    // still dumped, then the run exits nonzero naming every failure.
+    val failed = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      spark.catalog.clearCache()
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      .flatMap { case (name, fn) =>
+        spark.catalog.clearCache()
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
+        }
       }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -37,5 +41,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.sorted.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

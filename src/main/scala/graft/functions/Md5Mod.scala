@@ -38,14 +38,6 @@ object Md5Mod {
   }
   def partitionOf(key: String, n: Int): Int =
     partitionOf(key.getBytes("UTF-8"), n)
-
-  /** Register `md5_mod(key, n)` in the session's function registry so it is
-    * usable from both SQL text and `expr("md5_mod(k, 4)")` columns. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_mod",
-      exprs => Md5Mod(exprs.head, exprs(1).eval().asInstanceOf[Number].intValue()),
-      "scala_udf")
 }
 
 /** RDD partitioner with the reference's exact md5-mod routing. */

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
@@ -67,12 +66,4 @@ object RollingMinHash {
     }
     minH
   }
-
-  /** Register `rolling_min_hash(text, window)` for SQL/expr use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_min_hash",
-      exprs => RollingMinHash(
-        exprs.head, exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
 }

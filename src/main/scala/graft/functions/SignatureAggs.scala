@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -408,27 +407,5 @@ object SignatureAggs {
     override def withNewInputAggBufferOffset(n: Int): LongVecSum = copy(inputAggBufferOffset = n)
     override protected def withNewChildInternal(c: Expression): LongVecSum = copy(child = c)
     override def prettyName: String = "long_vec_sum"
-  }
-
-  /** Register the sketch aggregates in the session so they are usable as
-    * `expr("minhash_sig(h)")` / `expr("simhash_sig(h)")` /
-    * `expr("bounded_min_ids(id, k)")` (k a literal) in DataFrame aggs and
-    * in SQL text. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig", exprs => MinHashSig(exprs.head).toAggregateExpression(), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_sig", exprs => SimHashSig(exprs.head).toAggregateExpression(), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bounded_min_ids", exprs => BoundedMinIds(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "top_k_pairs", exprs => TopKPairs(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Number].intValue()).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "long_vec_sum", exprs => LongVecSum(exprs.head).toAggregateExpression(),
-      "built-in")
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Q
+import graft.{Q, SessionMemo}
 import graft.functions.TextFns._
 import graft.functions.VectorFns
 import graft.sources.Tables
@@ -43,8 +43,10 @@ import graft.sources.Tables
   *     is then computed redundantly by every branch that arrives before the
   *     first one finishes materializing it (observed as racing "Block
   *     already exists" warnings and N× the work). An eager checkpoint runs
-  *     the producing stage exactly once; on a cluster the same call runs
-  *     with reliable checkpointing.
+  *     the producing stage exactly once. `localCheckpoint` is NOT
+  *     reliable: it truncates lineage and keeps the blocks in executor
+  *     storage, so a lost block (a dead executor) fails its consumer
+  *     instead of being recomputed.
   */
 object Dedup {
 
@@ -80,7 +82,9 @@ object Dedup {
     }
   }
 
-  /** [[spread]] for the probe mains (TemplateProbe's legacy arms). */
+  /** [[spread]] as the reference arm for SizingSpec and
+    * ShingleFromTokensSpec, which compare the shared token-array path
+    * against spreading the raw text. */
   private[graft] def spreadDocs(docs: DataFrame): DataFrame = spread(docs)
 
   /** Round-robin fan-out for a typed-map OUTPUT whose input partition
@@ -206,7 +210,6 @@ object Dedup {
     * [[graft.functions.SignatureAggs.MinHashSig]] aggregate (one 64-lane
     * buffer per group instead of 64 aggregate columns). */
   def signaturesFromHashes(hs: DataFrame): DataFrame = {
-    graft.functions.SignatureAggs.register(hs.sparkSession)
     hs.select(col("doc_id"), pmod(col("sh_h"), lit(MersennePrime)).as("h"))
       .groupBy("doc_id")
       .agg(expr("minhash_sig(h)").as("sig"))
@@ -255,7 +258,6 @@ object Dedup {
     * pre-cap self-join entirely — pair expansion happens from the bounded
     * arrays, ≤ cap²/2 pairs per bucket by construction. */
   private def bucketIds(banded: DataFrame, cap: Int): DataFrame = {
-    graft.functions.SignatureAggs.register(banded.sparkSession)
     banded.groupBy("band", "bucket")
       .agg(expr(s"bounded_min_ids(doc_id, ${cap + 1})").as("ids"))
       .filter(size(col("ids")) <= cap)
@@ -284,7 +286,6 @@ object Dedup {
     * recompute, for any id order, any slicing. That identity is what
     * makes dirty-bucket view maintenance batch-equal to d36. */
   private[graft] def boundedBucketIds(banded: DataFrame, cap: Int): DataFrame = {
-    graft.functions.SignatureAggs.register(banded.sparkSession)
     banded.groupBy("band", "bucket")
       .agg(expr(s"bounded_min_ids(doc_id, ${cap + 1})").as("ids"))
   }
@@ -380,7 +381,8 @@ object Dedup {
     * runs 33 s absolute vs 71 s for round 9's uncapped join — the cap
     * HALVES the wall at scale on top of removing the k² hazard. */
   def cappedPairCounts(hs: DataFrame, dfCap: Int): DataFrame = {
-    // Round 17 A/B (PairProbe, sf0.1, interleaved min-of-3): a
+    // Round 17 A/B (OPTIMIZATION_r17 item 3; the deleted PairProbe main,
+    // commit 66fe07c; sf0.1, interleaved min-of-3): a
     // bounded_min_ids aggregate + array pair expansion — one hs pass, one
     // row per shingle through the shuffle — measured 1.13 s vs 0.95 s for
     // this merge-join form, so the rewrite was REVERTED. Why the "fewer
@@ -462,165 +464,65 @@ object Dedup {
     jaccardPairsHashed(hashedShingles(sh).localCheckpoint(), candidates)
 
   // ------------------------------------------- corpus artifact session memo
-  /** Session-scoped memo of corpus-derived dedup artifacts over the shipped
-    * `documents` table — the d09/d19 contam memo generalized to the whole
-    * LSH candidate kernel. A dozen inventory queries (d02/d06/d08/d12/d15/
-    * d16/d27 through the verified-pair and cluster tables; d04/d34 through
-    * the df-capped Jaccard; d32/d34 through the band table; d09/d19/d21/
-    * d35 through the n-gram shingle tables) rebuild the same shingle →
-    * signature → band-bucket → candidate → verified-pair chain over the
-    * SAME corpus back-to-back. In production each link is a per-release
-    * artifact computed once and read by every downstream report — the
-    * 100 TB design point: a pipeline does not re-tokenize the corpus per
-    * query. The memo holds one `localCheckpoint` per artifact, keyed by
-    * (session, dir): same-session same-corpus calls reuse it (checkpoint
-    * blocks live exactly as long as the owning session, so the session
-    * identity in the key guarantees a restarted session recomputes); a
-    * DIFFERENT corpus frees every retained checkpoint (see
-    * [[freeCheckpoint]] — `Dataset.unpersist` is a no-op for these) and
-    * rebuilds, so at most one corpus's artifact set is ever retained.
-    * Bench accounting: every build is timed in [[graft.MemoLedger]] and
-    * added to the bench TOTAL as an explicit line item, so each consumer
-    * query's number is its marginal (join/rollup-only) cost while the
-    * one-time kernel build is counted exactly once — the production
-    * composition reading (a release process runs the whole report family
-    * over one artifact set), with nothing hidden by min-of-N timing.
-    * Generic `...From(docs)` operators are untouched: specs, streaming,
-    * and rehearsals that synthesize their own corpora never touch the
-    * memo. */
-  private[operators] object CorpusMemo {
-    // Key includes the corpus CONTENT STAMP (file mtimes+sizes), so an
-    // in-session rewrite of the same path evicts instead of serving stale
-    // artifacts. Contract: ONE active corpus per session, and callers must
-    // EXECUTE results before switching corpora — eviction frees checkpoint
-    // blocks that are unrecomputable by design, so a lazy DataFrame held
-    // across a corpus switch fails with missing blocks (the eviction warns
-    // loudly for exactly this case). Builds run under the Dedup lock: a
-    // concurrent caller blocks for the build's duration — the documented
-    // single-threaded-driver assumption (Verify/Bench/PlanAudit all run
-    // queries sequentially); revisit with per-key futures if a concurrent
-    // driver ever exists.
-    private var key: Option[(SparkSession, String, Long)] = None
-    private val arts = scala.collection.mutable.LinkedHashMap.empty[String, DataFrame]
-    private val scalarArts = scala.collection.mutable.LinkedHashMap.empty[String, Any]
-    /** The one key-switch/evict path (callers hold the Dedup lock):
-      * a new (session, corpus, stamp) key frees every checkpointed
-      * artifact — loudly, because still-lazy DataFrames from the
-      * previous corpus are invalid by design. */
-    private def ensureKey(k: (SparkSession, String, Long)): Unit =
-      if (!key.contains(k)) {
-        if (arts.nonEmpty)
-          System.err.println(s"[corpusmemo] corpus switch ${key.map(_._2)} -> ${k._2}: " +
-            s"freeing ${arts.size} checkpointed artifacts — any still-lazy " +
-            "DataFrame from the previous corpus is now invalid (execute " +
-            "results before switching corpora)")
-        arts.valuesIterator.foreach(freeCheckpoint)
-        arts.clear()
-        scalarArts.clear()
-        key = Some(k)
-      }
-    def artifact(spark: SparkSession, d: String, name: String)(build: => DataFrame): DataFrame =
-      Dedup.synchronized {
-        ensureKey((spark, d, graft.MemoLedger.dirStamp(d)))
-        arts.get(name) match {
-          case Some(df) => df
-          case None =>
-            val df = graft.MemoLedger.timed("corpus", name)(build)
-            arts.update(name, df)
-            df
-        }
-      }
-    /** Install a pre-built artifact (the persisted-release read path):
-      * parquet-backed, so eviction's freeCheckpoint is a no-op on it.
-      * NOT a delegation to [[artifact]]: install must (a) OVERWRITE any
-      * same-key artifact the session already built — the open() contract
-      * promises the parquet-backed table, and artifact() would silently
-      * keep the session checkpoint — and (b) skip the build ledger (an
-      * install is a table registration, not a build; ledgering it would
-      * pollute Bench's memo_builds with ~0 s phantom entries). */
-    def install(spark: SparkSession, d: String, name: String, df: DataFrame): Unit =
-      Dedup.synchronized {
-        ensureKey((spark, d, graft.MemoLedger.dirStamp(d)))
-        arts.remove(name).foreach(freeCheckpoint)
-        arts.update(name, df)
-      }
-    /** Session-scoped memo of a corpus-derived SCALAR (e.g. d10's append
-      * split point — one max(doc_id) job per run before this existed).
-      * Same key/eviction discipline as the DataFrame artifacts; builds
-      * are ledgered so Bench's accounting still counts them once. */
-    def scalar[T](spark: SparkSession, d: String, name: String)(build: => T): T =
-      Dedup.synchronized {
-        ensureKey((spark, d, graft.MemoLedger.dirStamp(d)))
-        scalarArts.getOrElseUpdate(name,
-          graft.MemoLedger.timed("corpus", name)(build)).asInstanceOf[T]
-      }
-    def clear(): Unit = Dedup.synchronized {
-      arts.valuesIterator.foreach(freeCheckpoint)
-      arts.clear()
-      scalarArts.clear()
-      key = None
-    }
-  }
+  // The corpus artifacts below live in `SessionMemo.corpus` — the
+  // d09/d19 contam memo generalized to the whole LSH candidate kernel
+  // over the shipped `documents` table. A dozen inventory queries
+  // (d02/d06/d08/d12/d15/d16/d27 through the verified-pair and cluster
+  // tables; d04/d34 through the df-capped Jaccard; d32/d34 through the
+  // band table; d09/d19/d21/d35 through the n-gram shingle tables)
+  // rebuild the same shingle → signature → band-bucket → candidate →
+  // verified-pair chain over the SAME corpus back-to-back; a pipeline
+  // does not re-tokenize the corpus per query.
 
-  /** Free every CorpusMemo checkpoint (Bench calls this once the last
-    * consumer family completes, bounding peak executor storage; PlanAudit
-    * calls it so memo builds re-run under its plan hook). Callers must
-    * have EXECUTED all memo-derived results first. */
-  def clearCorpusMemo(): Unit = CorpusMemo.clear()
+  /** Free every corpus-memo artifact. Kept as a named entry point because
+    * the benchmark harness (`perfbench`) calls it between passes. */
+  def clearCorpusMemo(): Unit = SessionMemo.corpus.clear()
 
   /** The corpus token-array table, memoized — ONE tokenize pass (and one
     * spread shuffle) serving every per-n shingle table below. */
   private[operators] def corpusTokenArrays(spark: SparkSession, d: String): DataFrame =
-    CorpusMemo.artifact(spark, d, "toks")(
-      graft.MemoLedger.audited("memo:toks")(
-        spreadTokenArrays(Tables.documents(spark, d))).localCheckpoint())
+    SessionMemo.corpus.checkpointed(spark, d, "toks")(
+      spreadTokenArrays(Tables.documents(spark, d)))
 
   /** The corpus's hashed word-n-gram shingle table, memoized — the widest-
     * shared artifact: every d-family kernel starts here. Built from the
     * shared token arrays (round 17): the contam@{3,5,8} chain used to
     * re-tokenize the corpus per n. */
   def corpusShingleHashes(spark: SparkSession, d: String, n: Int = 3): DataFrame =
-    CorpusMemo.artifact(spark, d, s"hs@$n")(
-      graft.MemoLedger.audited(s"memo:hs@$n")(
-        hashedShinglesFromTokens(corpusTokenArrays(spark, d), n)).localCheckpoint())
+    SessionMemo.corpus.checkpointed(spark, d, s"hs@$n")(
+      hashedShinglesFromTokens(corpusTokenArrays(spark, d), n))
 
   /** MinHash signature table over [[corpusShingleHashes]], memoized
     * (read by the band build and d22's lane compare). */
   private[operators] def corpusSigs(spark: SparkSession, d: String): DataFrame =
-    CorpusMemo.artifact(spark, d, "sigs")(
-      graft.MemoLedger.audited("memo:sigs")(
-        signaturesFromHashes(corpusShingleHashes(spark, d))).localCheckpoint())
+    SessionMemo.corpus.checkpointed(spark, d, "sigs")(
+      signaturesFromHashes(corpusShingleHashes(spark, d)))
 
   /** (doc_id, band, bucket) LSH band table over the corpus, memoized —
     * the session-grade form of d10's persisted band index. */
   def corpusBanded(spark: SparkSession, d: String): DataFrame =
-    CorpusMemo.artifact(spark, d, "banded")(
-      graft.MemoLedger.audited("memo:banded")(
-        bandBuckets(corpusSigs(spark, d))).localCheckpoint())
+    SessionMemo.corpus.checkpointed(spark, d, "banded")(
+      bandBuckets(corpusSigs(spark, d)))
 
   /** The capped band-bucket membership table (band, bucket, ids ≤ cap,
     * sorted), memoized — ONE aggregation of the band table shared by
     * self-join candidates (d02 family), the bipartite probe (d32), and
     * the per-band operating curve (d34). */
   private[operators] def corpusBucketIds(spark: SparkSession, d: String): DataFrame =
-    CorpusMemo.artifact(spark, d, s"bucketIds@$BandBucketCap")(
-      graft.MemoLedger.audited("memo:bucketIds")(
-        bucketIds(corpusBanded(spark, d), BandBucketCap)).localCheckpoint())
+    SessionMemo.corpus.checkpointed(spark, d, s"bucketIds@$BandBucketCap")(
+      bucketIds(corpusBanded(spark, d), BandBucketCap))
 
   /** BandBucketCap'd LSH candidate pairs (a < b) over the corpus,
     * memoized. */
   private[operators] def corpusCand(spark: SparkSession, d: String): DataFrame =
-    CorpusMemo.artifact(spark, d, "cand")(
-      graft.MemoLedger.audited("memo:cand")(
-        pairsFromBucketIds(corpusBucketIds(spark, d))).localCheckpoint())
+    SessionMemo.corpus.checkpointed(spark, d, "cand")(
+      pairsFromBucketIds(corpusBucketIds(spark, d)))
 
   /** Exact Jaccard over every LSH candidate pair, UNthresholded (each
     * consumer applies its own ≥-threshold filter), memoized. */
   def corpusVerifiedPairs(spark: SparkSession, d: String): DataFrame =
-    CorpusMemo.artifact(spark, d, "verified")(
-      graft.MemoLedger.audited("memo:verified")(
-        jaccardPairsHashed(corpusShingleHashes(spark, d), Some(corpusCand(spark, d))))
-        .localCheckpoint())
+    SessionMemo.corpus.checkpointed(spark, d, "verified")(
+      jaccardPairsHashed(corpusShingleHashes(spark, d), Some(corpusCand(spark, d))))
 
   /** The df-capped candidate pair-count table (a, b, n_common) over the
     * corpus — the shared TRUNK of the capped family, memoized: d04/d12/
@@ -628,29 +530,26 @@ object Dedup {
     * derives containment. One rare-shingle pairing join serves both
     * score families. */
   private[operators] def corpusCappedPairCounts(spark: SparkSession, d: String): DataFrame =
-    CorpusMemo.artifact(spark, d, s"cappedPairs@$ShingleDfCap")(
-      graft.MemoLedger.audited("memo:cappedPairs")(
-        cappedPairCounts(corpusShingleHashes(spark, d), ShingleDfCap))
-        .localCheckpoint())
+    SessionMemo.corpus.checkpointed(spark, d, s"cappedPairs@$ShingleDfCap")(
+      cappedPairCounts(corpusShingleHashes(spark, d), ShingleDfCap))
 
   /** Exact Jaccard over the df-capped shared-shingle candidates (d04's
     * kernel; also d12's n-gram detector and d34's truth set), memoized —
     * the size-attach + divide over [[corpusCappedPairCounts]]. */
   def corpusCappedJaccard(spark: SparkSession, d: String): DataFrame =
-    CorpusMemo.artifact(spark, d, "cappedJaccard")(
-      graft.MemoLedger.audited("memo:cappedJaccard")(
-        jaccardFromCounts(corpusShingleHashes(spark, d),
-          corpusCappedPairCounts(spark, d))).localCheckpoint())
+    SessionMemo.corpus.checkpointed(spark, d, "cappedJaccard")(
+      jaccardFromCounts(corpusShingleHashes(spark, d),
+        corpusCappedPairCounts(spark, d)))
 
   /** Near-dup cluster component table at `threshold` (unordered — d06
     * orders it, d15/d27 re-aggregate it), memoized. */
   private[operators] def corpusClusterTable(spark: SparkSession, d: String,
       threshold: Double, maxIters: Int): DataFrame =
-    CorpusMemo.artifact(spark, d, s"clusters@$threshold@$maxIters") {
+    SessionMemo.corpus(spark, d, s"clusters@$threshold@$maxIters") {
       val pairs = corpusVerifiedPairs(spark, d)
         .filter(col("jaccard") >= threshold)
         .select(col("a"), col("b")).localCheckpoint()
-      val out = graft.MemoLedger.audited(s"memo:clusters@$threshold")(
+      val out = graft.MemoLedger.audited(s"memo:clusters@$threshold@$maxIters")(
         connectedComponents(pairs, maxIters)
           .groupBy("label").agg(collect_list("doc_id").as("ids"), count(lit(1)).as("cluster_size"))
           .filter(col("cluster_size") > 1)
@@ -773,7 +672,6 @@ object Dedup {
   /** doc_id, simhash: 64-bit signature, bitwise majority of token hashes,
     * via the native [[graft.functions.SignatureAggs.SimHashSig]] aggregate. */
   def simhashSignatures(docs: DataFrame): DataFrame = {
-    graft.functions.SignatureAggs.register(docs.sparkSession)
     spread(docs).select(col("doc_id"), explode(tokens(col("text"))).as("t"))
       .select(col("doc_id"), md5Hash60(col("t")).as("h"))
       .groupBy("doc_id")
@@ -1348,29 +1246,27 @@ object Dedup {
     * corpus), then d37 runs at join+rollup marginal cost. */
   private def baseReleaseVerdict(spark: SparkSession, d: String,
       threshold: Double): DataFrame =
-    CorpusMemo.artifact(spark, d, s"baseVerdict@$threshold") {
-      graft.MemoLedger.audited(s"memo:baseVerdict@$threshold") {
-        // Round 17: the base-release kernel's PER-DOC stages (shingles,
-        // signatures, band rows) filter from the shared corpus memos — a
-        // doc's shingles/sig/bands depend only on its own text, so the
-        // filtered shared tables ARE the slice's tables (the established
-        // filter-of-shared pattern; d37's oracle runs the full kernel
-        // CTEs on the slice and re-proves the composition every run).
-        // POPULATION-dependent stages stay on the slice, which is their
-        // own-population semantics: bucket caps + candidate generation
-        // (from the filtered band table), the exact-Jaccard verify, the
-        // component closure, and the fp window. Round 16 re-ran the
-        // whole pipeline — tokenize/shingle/sig included — on the 80%
-        // slice; that was the single biggest corpus memo build.
-        val base = col("doc_id") % 10 < 8
-        val docsB = Tables.documents(spark, d).filter(base)
-        val hsB = corpusShingleHashes(spark, d).filter(base)
-        val candsB = lshCandidatesFromBanded(corpusBanded(spark, d).filter(base))
-        val pairsB = jaccardPairsHashed(hsB, Some(candsB))
-          .filter(col("jaccard") >= threshold)
-          .select(col("a"), col("b")).localCheckpoint()
-        keepListCore(docsB, clustersFromPairs(pairsB, 50))
-      }.localCheckpoint()
+    SessionMemo.corpus.checkpointed(spark, d, s"baseVerdict@$threshold") {
+      // Round 17: the base-release kernel's PER-DOC stages (shingles,
+      // signatures, band rows) filter from the shared corpus memos — a
+      // doc's shingles/sig/bands depend only on its own text, so the
+      // filtered shared tables ARE the slice's tables (the established
+      // filter-of-shared pattern; d37's oracle runs the full kernel
+      // CTEs on the slice and re-proves the composition every run).
+      // POPULATION-dependent stages stay on the slice, which is their
+      // own-population semantics: bucket caps + candidate generation
+      // (from the filtered band table), the exact-Jaccard verify, the
+      // component closure, and the fp window. Round 16 re-ran the
+      // whole pipeline — tokenize/shingle/sig included — on the 80%
+      // slice; that was the single biggest corpus memo build.
+      val base = col("doc_id") % 10 < 8
+      val docsB = Tables.documents(spark, d).filter(base)
+      val hsB = corpusShingleHashes(spark, d).filter(base)
+      val candsB = lshCandidatesFromBanded(corpusBanded(spark, d).filter(base))
+      val pairsB = jaccardPairsHashed(hsB, Some(candsB))
+        .filter(col("jaccard") >= threshold)
+        .select(col("a"), col("b")).localCheckpoint()
+      keepListCore(docsB, clustersFromPairs(pairsB, 50))
     }
 
   val releaseDelta = Q(
@@ -1785,7 +1681,7 @@ object Dedup {
       // ZERO-ROW corpus is NULL (the empty daily-refresh case d10's own
       // docs call the norm) — split 0 then makes both sides empty and the
       // keep-list is the empty manifest, not a ROW_VALUE_IS_NULL crash.
-      val split = CorpusMemo.scalar(s, d, "d10split") {
+      val split = SessionMemo.corpus(s, d, "d10split") {
         val mx = docs.agg(max("doc_id")).head()
         if (mx.isNullAt(0)) 0L else mx.getLong(0) * 4 / 5
       }
@@ -1797,22 +1693,17 @@ object Dedup {
       // tokenized once per session, every wave probes stored counts.
       val hs = corpusShingleHashes(s, d)
       val cHs = hs.filter(col("doc_id") < split)
-      val cBands = CorpusMemo.artifact(s, d, s"d10bands@$split")(
-        graft.MemoLedger.audited("memo:d10bands")(
-          bandBuckets(signaturesFromHashes(cHs))).localCheckpoint())
-      val cCnts = CorpusMemo.artifact(s, d, s"d10bandCounts@$split")(
-        graft.MemoLedger.audited("memo:d10bandCounts")(
-          cBands.groupBy("band", "bucket").agg(count(lit(1)).as("cn")))
-          .localCheckpoint())
+      val cBands = SessionMemo.corpus.checkpointed(s, d, s"d10bands@$split")(
+        bandBuckets(signaturesFromHashes(cHs)))
+      val cCnts = SessionMemo.corpus.checkpointed(s, d, s"d10bandCounts@$split")(
+        cBands.groupBy("band", "bucket").agg(count(lit(1)).as("cn")))
       // The resident fingerprint table is the third persisted-index half
       // (writeDedupIndex ships fp/bands/band_counts): memoized, so a
       // wave's exact gate probes stored fingerprints instead of
       // re-hashing 4/5 of the corpus text per run.
-      val cFps = CorpusMemo.artifact(s, d, s"d10fp@$split")(
-        graft.MemoLedger.audited("memo:d10fp")(
-          docs.filter(col("doc_id") < split)
-            .select(md5(normText(col("text"))).as("fp")))
-          .localCheckpoint())
+      val cFps = SessionMemo.corpus.checkpointed(s, d, s"d10fp@$split")(
+        docs.filter(col("doc_id") < split)
+          .select(md5(normText(col("text"))).as("fp")))
       incrementalKeepListFrom(
         cFps,
         ids => cHs.join(broadcast(ids), Seq("doc_id"), "leftsemi"),
@@ -1931,8 +1822,8 @@ object Dedup {
     * one corpus-hot shingle on both sides of the split yields
     * df_corpus·df_eval pair rows (the builder's boiler-corpus accounting
     * measured 9.978e8 such rows at 10× before the cap). */
-  /** Qualified-pair memo, one [[CorpusMemo]] artifact per n: d09 and d19
-    * are two rollups (corpus-keyed / eval-keyed) of the SAME pair
+  /** Qualified-pair memo, one [[graft.SessionMemo.corpus]] artifact per
+    * n: d09 and d19 are two rollups (corpus-keyed / eval-keyed) of the SAME pair
     * evidence, and a release process runs both — recomputing the shingle
     * pass + df qualification per report doubled the cost the df-cap
     * reroute added. d35's three-n sweep retains all three entries
@@ -1940,7 +1831,7 @@ object Dedup {
     * evict-and-recompute churn; the shingle side reads the memoized
     * per-n table, so one tokenize pass per (corpus, n) serves the whole
     * contamination family. Bench accounting: the contam-memo stance
-    * documented at [[CorpusMemo]]. */
+    * documented at [[graft.SessionMemo]]. */
   /** Free the checkpoint blocks behind a `localCheckpoint`ed DataFrame.
     * `Dataset.unpersist` is a NO-OP for these (localCheckpoint persists
     * the RDD directly, bypassing the cache manager), and ContextCleaner
@@ -1957,14 +1848,13 @@ object Dedup {
     }
 
   private[operators] def contamSplitPairs(spark: SparkSession, d: String, n: Int): DataFrame =
-    CorpusMemo.artifact(spark, d, s"contam@$n") {
+    SessionMemo.corpus.checkpointed(spark, d, s"contam@$n") {
       val sh = corpusShingleHashes(spark, d, n)
-      graft.MemoLedger.audited(s"memo:contam@$n")(
-        cappedContamPairs(
-          sh.filter(col("doc_id") % 19 =!= 0),
-          sh.filter(col("doc_id") % 19 === 0)
-            .select(col("doc_id").as("eval_doc"), col("sh_h")),
-          ShingleDfCap)).localCheckpoint()
+      cappedContamPairs(
+        sh.filter(col("doc_id") % 19 =!= 0),
+        sh.filter(col("doc_id") % 19 === 0)
+          .select(col("doc_id").as("eval_doc"), col("sh_h")),
+        ShingleDfCap)
     }
 
   /** Benchmark decontamination: find training-corpus documents sharing any
@@ -2475,10 +2365,8 @@ object Dedup {
     * output is contamination-sized (flagged rows only), ≪ corpus. */
   private[operators] def corpusSemContam(spark: SparkSession, d: String,
       nEval: Int, threshold: Double): DataFrame =
-    CorpusMemo.artifact(spark, d, s"semContam@$nEval@$threshold")(
-      graft.MemoLedger.audited(s"memo:semContam@$nEval@$threshold")(
-        embeddingDecontaminateFrom(Tables.embeddings(spark, d), nEval, threshold))
-        .localCheckpoint())
+    SessionMemo.corpus.checkpointed(spark, d, s"semContam@$nEval@$threshold")(
+      embeddingDecontaminateFrom(Tables.embeddings(spark, d), nEval, threshold))
 
   /** Core of d17 over any (vec_id, embedding) frame; eval = vec_id < nEval. */
   def embeddingDecontaminateFrom(e: DataFrame,
@@ -3236,8 +3124,9 @@ object Dedup {
     * measured failure for a codegen rewrite of the per-doc span dedup,
     * but that attempt re-tokenized per consumer; over pre-split token
     * arrays the stream is one explode of a transform() with no
-    * SerializeFromObject boundary, and TemplateProbe measured it ahead
-    * of the flatMap form. Row-identical: pos is 1-based over the same
+    * SerializeFromObject boundary, and an interleaved A/B measured it
+    * ahead of the flatMap form (OPTIMIZATION_r17 item 4; the deleted
+    * TemplateProbe main, commit 12c9b58). Row-identical: pos is 1-based over the same
     * token array, sh_h present exactly when i + 3 ≤ len (null else). */
   def templateScrubFromTokens(toksTab: DataFrame, minDf: Int): DataFrame = {
     val stream = toksTab
@@ -3633,10 +3522,8 @@ object Dedup {
     * per (session, corpus, stamp, g, minTokens), read marginally. */
   private[operators] def corpusCdcChunks(spark: SparkSession, d: String,
       g: Int = 8, minTokens: Int = 3): DataFrame =
-    CorpusMemo.artifact(spark, d, s"cdc@$g@$minTokens")(
-      graft.MemoLedger.audited(s"memo:cdc@$g@$minTokens")(
-        cdcChunksFromTokens(corpusTokenArrays(spark, d), g, minTokens))
-        .localCheckpoint())
+    SessionMemo.corpus.checkpointed(spark, d, s"cdc@$g@$minTokens")(
+      cdcChunksFromTokens(corpusTokenArrays(spark, d), g, minTokens))
 
   def cdcDedup(docs: DataFrame, g: Int = 8, minTokens: Int = 3): DataFrame =
     cdcDedupFromChunks(docs, cdcChunks(docs, g, minTokens))
@@ -4343,8 +4230,8 @@ object Dedup {
     * corpus freeze — corpus size, exact-dup group/dropped counts, the
     * verified near-dup pair count at the operating threshold, cluster
     * count and mass, and the final keep count. Every number is a 1-row
-    * rollup of the session's memoized kernel artifacts ([[CorpusMemo]]),
-    * which is the query's point: a release process computes the
+    * rollup of the session's memoized kernel artifacts
+    * ([[graft.SessionMemo.corpus]]), which is the query's point: a release process computes the
     * signature / pair / cluster tables ONCE and the gate report reads
     * them for free — the d09/d19 composition stance promoted to the
     * whole kernel, made queryable (and oracle-checked end-to-end against
@@ -4526,7 +4413,7 @@ object Dedup {
     * epochs its document count suggests. Lives in the pipeline family —
     * it composes d07's verdict with t03's word tokenization, and both
     * parities are inherited: the keep bit reads the session-memoized
-    * cluster/keep kernel ([[CorpusMemo]] — marginal cost by
+    * cluster/keep kernel ([[graft.SessionMemo.corpus]] — marginal cost by
     * construction), the token column is t03's oracle-exact word_tokens,
     * and the oracle recomputes the verdict independently (fingerprint
     * window + recursive-CTE closure, d07's SQL verbatim).

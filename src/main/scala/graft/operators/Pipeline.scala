@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Q
+import graft.{Q, SessionMemo}
 import graft.functions.TextFns._
 import graft.sources.Tables
 
@@ -609,9 +609,8 @@ object Pipeline {
     * overloads). */
   private def corpusStagedDocs(spark: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
-    Dedup.CorpusMemo.artifact(spark, d, "staged")(
-      graft.MemoLedger.audited("memo:staged")(
-        stagedDocs(Tables.documents(spark, d))).localCheckpoint())
+    SessionMemo.corpus.checkpointed(spark, d, "staged")(
+      stagedDocs(Tables.documents(spark, d)))
 
   private def stagedDocs(docs: DataFrame): DataFrame = {
     val toks = tokens(col("text"))

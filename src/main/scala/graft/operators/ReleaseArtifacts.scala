@@ -3,10 +3,11 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.SessionMemo
 
 /** Durable release-artifact layouts — the production form of the three
-  * session memos ([[Dedup.CorpusMemo]], Similarity's EmbMemo, TextOps'
-  * TokMemo), and the 100 TB design point their scaladocs name: a pipeline
+  * session memo families ([[graft.SessionMemo]]: corpus, emb, tok), and
+  * the 100 TB design point their scaladocs name: a pipeline
   * computes its corpus-derived artifacts ONCE per corpus freeze and every
   * downstream consumer READS them. Session checkpoints die with the
   * driver; these layouts survive it. Three families, one contract:
@@ -188,7 +189,7 @@ object ReleaseArtifacts {
       threshold: Double = 0.5): Unit = {
     verifyManifest(readManifest(spark, path), d, path, dedupParams(threshold))
     tableKeys(threshold).foreach { case (table, key) =>
-      Dedup.CorpusMemo.install(spark, d, key, spark.read.parquet(s"$path/$table"))
+      SessionMemo.corpus.install(spark, d, key, spark.read.parquet(s"$path/$table"))
     }
   }
 
@@ -281,30 +282,30 @@ object ReleaseArtifacts {
     verifyManifest(readManifest(spark, path), d, path,
       embParams(nCells, kmeansIters, pqM, pqK, pqIters, lshBits, lshTables,
         lshSeed, bfQueries, bfK))
-    Similarity.installEmbArtifact(spark, d, "e", spark.read.parquet(s"$path/e"))
+    SessionMemo.emb.install(spark, d, "e", spark.read.parquet(s"$path/e"))
     val ivfCb: Array[(Int, Array[Double])] =
       spark.read.parquet(s"$path/ivf_codebook").collect()
         .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
         .sortBy(_._1)
-    Similarity.installEmbArtifact(spark, d, s"ivf@$nCells@$kmeansIters",
+    SessionMemo.emb.install(spark, d, s"ivf@$nCells@$kmeansIters",
       (ivfCb, spark.read.parquet(s"$path/ivf_cells")))
     val pqRows = spark.read.parquet(s"$path/pq_codebooks").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     val pqCbs: Array[Array[Array[Double]]] =
       pqRows.groupBy(_._1).toSeq.sortBy(_._1)
         .map(_._2.sortBy(_._2).map(_._3).toArray).toArray
-    Similarity.installEmbArtifact(spark, d, s"pq@$pqM@$pqK@$pqIters",
+    SessionMemo.emb.install(spark, d, s"pq@$pqM@$pqK@$pqIters",
       (pqCbs, spark.read.parquet(s"$path/pq_codes")))
     val tuning = spark.read.parquet(s"$path/pq_tuning").collect()
       .map(r => (r.getInt(0), r.getDouble(1), r.getBoolean(2)))
       .sortBy(_._1)
-    Similarity.installEmbArtifact(spark, d,
+    SessionMemo.emb.install(spark, d,
       s"pqRerank@$pqM@$pqK@$pqIters@$bfQueries@$bfK",
       (tuning.find(_._3).map(_._1).getOrElse(Similarity.RerankLadder.head),
         tuning.map(t => (t._1, t._2)).toSeq))
-    Similarity.installEmbArtifact(spark, d, s"lsh@$lshBits@$lshTables@$lshSeed",
+    SessionMemo.emb.install(spark, d, s"lsh@$lshBits@$lshTables@$lshSeed",
       spark.read.parquet(s"$path/lsh"))
-    Similarity.installEmbArtifact(spark, d, s"bf@$bfQueries@$bfK",
+    SessionMemo.emb.install(spark, d, s"bf@$bfQueries@$bfK",
       spark.read.parquet(s"$path/bf"))
   }
 
@@ -339,8 +340,8 @@ object ReleaseArtifacts {
       spark.read.parquet(s"$path/merges").orderBy("rank").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
         .toSeq
-    TextOps.installTokArtifact(spark, d, s"bpe@$nMerges", merges)
-    TextOps.installTokArtifact(spark, d, s"enc@$nMerges",
+    SessionMemo.tok.install(spark, d, s"bpe@$nMerges", merges)
+    SessionMemo.tok.install(spark, d, s"enc@$nMerges",
       spark.read.parquet(s"$path/encoded"))
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Q
+import graft.{Q, SessionMemo}
 import graft.functions.TextFns._
 import graft.sources.Tables
 
@@ -253,12 +253,10 @@ object TextOps {
     * engine hashes (asserted: length == octet_length in m02's oracle). */
   val winnow = Q(
     "t07_winnow_fingerprint",
-    (s, d) => {
-      graft.functions.RollingMinHash.register(s)
+    (s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"), expr("rolling_min_hash(text, 32)").as("winnow_fp"))
-        .transform(graft.Present.byNames("doc_id"))
-    },
+        .transform(graft.Present.byNames("doc_id")),
     Some("""WITH RECURSIVE pows(k, p) AS (
               SELECT 0, 1::HUGEINT
               UNION ALL
@@ -1020,78 +1018,24 @@ object TextOps {
   }
 
   // ------------------------------------- tokenizer artifact session memo
-  /** Session memo of the TRAINED BPE merge table per (session, corpus,
-    * content-stamp, nMerges) — [[graft.operators.Dedup]]'s CorpusMemo /
-    * Similarity's EmbMemo stance on the tokenizer axis: a pipeline trains
-    * its tokenizer ONCE per release and every encode/measure pass reads
-    * the shipped merge table; t21 (the artifact itself), t25 (encode) and
-    * t43 (fertility) must measure the SAME tokenizer, not each re-run the
-    * 8-round training loop. The artifact is a driver-side nMerges-row seq
-    * (nothing to checkpoint or free); the key's content stamp evicts on
-    * in-session corpus rewrites. Builds run under the TextOps lock
-    * (single-threaded-driver assumption, as for the other two memos).
-    * Generic [[bpeMerges]] stays memo-free for planted-corpus specs. */
-  private object TokMemo {
-    private var key: Option[(SparkSession, String, Long)] = None
-    private val arts = scala.collection.mutable.LinkedHashMap.empty[String, Any]
-    private def freeOne(v: Any): Unit = v match {
-      case df: DataFrame => Dedup.freeCheckpoint(df)
-      case _ => ()
-    }
-    private def free(): Unit = {
-      arts.valuesIterator.foreach(freeOne)
-      arts.clear()
-    }
-    /** The one key-switch/evict path (callers hold the TextOps lock) —
-      * CorpusMemo.ensureKey's shape. */
-    private def ensureKey(k: (SparkSession, String, Long)): Unit =
-      if (!key.contains(k)) {
-        if (arts.nonEmpty)
-          System.err.println(s"[tokmemo] corpus switch ${key.map(_._2)} -> ${k._2}: " +
-            s"freeing ${arts.size} tokenizer artifacts — any still-lazy " +
-            "DataFrame from the previous corpus is now invalid")
-        free()
-        key = Some(k)
-      }
-    def artifact[T](spark: SparkSession, d: String, name: String)(build: => T): T =
-      TextOps.synchronized {
-        ensureKey((spark, d, graft.MemoLedger.dirStamp(d)))
-        arts.get(name) match {
-          case Some(v) => v.asInstanceOf[T]
-          case None =>
-            val v = graft.MemoLedger.timed("tok", name)(build)
-            arts.update(name, v)
-            v
-        }
-      }
-    /** Install a pre-built artifact (the persisted-release read path).
-      * NOT a delegation to [[artifact]]: install overwrites any same-key
-      * session artifact (the open() contract promises the parquet-backed
-      * value) and skips the build ledger (a registration, not a build). */
-    def install(spark: SparkSession, d: String, name: String, v: Any): Unit =
-      TextOps.synchronized {
-        ensureKey((spark, d, graft.MemoLedger.dirStamp(d)))
-        arts.remove(name).foreach(freeOne)
-        arts.update(name, v)
-      }
-    def clear(): Unit = TextOps.synchronized { free(); key = None }
-  }
+  // The tokenizer artifacts below live in `SessionMemo.tok` — the
+  // corpus memo's stance on the tokenizer axis: a pipeline trains its
+  // tokenizer ONCE per release and every encode/measure pass reads the
+  // shipped merge table; t21 (the artifact itself), t25 (encode) and t43
+  // (fertility) must measure the SAME tokenizer, not each re-run the
+  // 8-round training loop. The merge table is a driver-side nMerges-row
+  // seq (nothing to checkpoint or free). Generic `bpeMerges` stays
+  // memo-free for planted-corpus specs.
 
-  /** Install a pre-built tokenizer artifact into the session memo — the
-    * persisted-release read path ([[ReleaseArtifacts.openTokenizer]]). */
-  private[operators] def installTokArtifact(spark: SparkSession, d: String,
-      name: String, v: Any): Unit = TokMemo.install(spark, d, name, v)
-
-  /** Free the memoized tokenizer artifacts (merge table rows + the
-    * encoded-corpus checkpoint). Bench calls this after the t-family;
-    * PlanAudit calls it so the encode build re-runs under its plan hook. */
-  def clearTokMemo(): Unit = TokMemo.clear()
+  /** Free every tokenizer-memo artifact. Kept as a named entry point
+    * because the benchmark harness (`perfbench`) calls it between passes. */
+  def clearTokMemo(): Unit = SessionMemo.tok.clear()
 
   /** The corpus's trained BPE merges, memoized: (rank, left, right,
     * pair_count) rows in rank order. */
   def corpusBpeMerges(spark: SparkSession, d: String,
       nMerges: Int = 8): Seq[(Long, String, String, Long)] =
-    TokMemo.artifact(spark, d, s"bpe@$nMerges")(
+    SessionMemo.tok(spark, d, s"bpe@$nMerges")(
       bpeMerges(Tables.documents(spark, d), nMerges).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
         .toSeq)
@@ -1104,11 +1048,9 @@ object TextOps {
     * the occurrence shuffle + vocabulary fold. */
   def corpusBpeEncoded(spark: SparkSession, d: String,
       nMerges: Int = 8): DataFrame =
-    TokMemo.artifact(spark, d, s"enc@$nMerges")(
-      graft.MemoLedger.audited(s"memo:enc@$nMerges")(
-        bpeEncoded(Tables.documents(spark, d),
-          corpusBpeMerges(spark, d, nMerges).map(t => (t._2, t._3))))
-        .localCheckpoint())
+    SessionMemo.tok.checkpointed(spark, d, s"enc@$nMerges")(
+      bpeEncoded(Tables.documents(spark, d),
+        corpusBpeMerges(spark, d, nMerges).map(t => (t._2, t._3))))
 
   val bpeTrain = Q(
     "t21_bpe_merges",
@@ -2430,9 +2372,8 @@ object TextOps {
     * p17's reweighting step each ran the full bigram-LM build; one
     * ledgered build now serves both (checkpointed — #sources² rows). */
   def corpusLmTransferMatrix(spark: SparkSession, d: String): DataFrame =
-    TokMemo.artifact(spark, d, "lmMatrix")(
-      graft.MemoLedger.audited("memo:lmMatrix")(
-        lmTransferMatrix(Tables.documents(spark, d))).localCheckpoint())
+    SessionMemo.tok.checkpointed(spark, d, "lmMatrix")(
+      lmTransferMatrix(Tables.documents(spark, d)))
 
   val lmTransfer = Q(
     "t40_lm_transfer",

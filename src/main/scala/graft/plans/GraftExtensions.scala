@@ -10,8 +10,12 @@ import graft.functions.{AsciiSymHist, ByteEnergy, DotProduct, Md5Mod, NfcNormali
   * Injects the custom expressions/aggregates as session functions, so any
   * session built `.withExtensions(new GraftExtensions)` — or configured with
   * `spark.sql.extensions=graft.plans.GraftExtensions` on a cluster — gets
-  * `md5_mod`, `rolling_min_hash`, `minhash_sig`, `simhash_sig` in SQL and
-  * `expr()` without per-operator registration calls.
+  * every custom function (`md5_mod`, `rolling_min_hash`, the vector and
+  * byte kernels, and the `minhash_sig`, `simhash_sig`, `bounded_min_ids`,
+  * `top_k_pairs`, `long_vec_sum` aggregates) in SQL and `expr()`. This is
+  * the ONE place they are registered: every engine session is built
+  * through [[graft.GraftSession.builder]], which installs these
+  * extensions, so operators never re-register per call.
   *
   * Deliberately NO custom optimizer rules or planner strategies: the survey
   * (SURVEY.md §4) found zero rewrites Catalyst doesn't already do for this
@@ -63,5 +67,19 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("simhash_sig"),
       info("simhash_sig", "simhash_sig(h) - 64-bit SimHash signature aggregate"),
       (exprs: Seq[Expression]) => SignatureAggs.SimHashSig(exprs.head).toAggregateExpression()))
+    e.injectFunction((
+      FunctionIdentifier("bounded_min_ids"),
+      info("bounded_min_ids", "bounded_min_ids(id, k) - the k smallest ids, sorted (k a literal)"),
+      (exprs: Seq[Expression]) => SignatureAggs.BoundedMinIds(exprs.head,
+        exprs(1).eval().asInstanceOf[Number].intValue()).toAggregateExpression()))
+    e.injectFunction((
+      FunctionIdentifier("top_k_pairs"),
+      info("top_k_pairs", "top_k_pairs(score, id, k) - the k best (score desc, id) pairs (k a literal)"),
+      (exprs: Seq[Expression]) => SignatureAggs.TopKPairs(exprs.head, exprs(1),
+        exprs(2).eval().asInstanceOf[Number].intValue()).toAggregateExpression()))
+    e.injectFunction((
+      FunctionIdentifier("long_vec_sum"),
+      info("long_vec_sum", "long_vec_sum(v) - elementwise sum of array<long> vectors"),
+      (exprs: Seq[Expression]) => SignatureAggs.LongVecSum(exprs.head).toAggregateExpression()))
   }
 }

@@ -248,7 +248,6 @@ class MapReduceParitySpec extends SparkSpec {
     val df = docs.toDF("doc_id", "text")
 
     // t07 winnow fingerprint — engine expression vs naive O(n·w) recompute.
-    graft.functions.RollingMinHash.register(spark)
     val gotFp = df.select(col("doc_id"), expr("rolling_min_hash(text, 32)").as("fp"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     def naiveMinHash(text: String, w: Int): Long = {
@@ -285,7 +284,6 @@ class MapReduceParitySpec extends SparkSpec {
   }
 
   test("md5_mod registered SQL function matches the partitioner") {
-    Md5Mod.register(spark)
     val r = spark.sql("SELECT md5_mod('hello', 2) AS p, md5_mod('world', 2) AS q").collect()(0)
     assert(r.getInt(0) == 0 && r.getInt(1) == 1)
   }

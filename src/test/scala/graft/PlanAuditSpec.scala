@@ -9,7 +9,14 @@ package graft
 class PlanAuditSpec extends SparkSpec {
 
   test("no inventory plan has a cartesian product or unannounced BNLJ") {
+    MemoLedger.drain()
     val audits = PlanAudit.auditAll(spark, sf)
+    // Each memo build plan is audited under its artifact's one name: the
+    // audit label is "memo:" + the key the ledger recorded for the build.
+    val built = MemoLedger.drain().map("memo:" + _.artifact).toSet
+    audits.map(_.name).filter(_.startsWith("memo:")).foreach { n =>
+      assert(built(n), s"$n is not the name of a ledgered memo build")
+    }
     assert(audits.count(a => !a.name.startsWith("memo:") &&
       !a.name.startsWith("view:")) == SparkEntry.queries.size)
     // The memo plan hook must have produced build-plan audits of its own

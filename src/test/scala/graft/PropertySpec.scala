@@ -552,7 +552,6 @@ class PropertySpec extends SparkSpec {
     // cap+1 (the over-cap sentinel the caller filters on) — always the
     // SMALLEST, always sorted, independent of row order and partitioning.
     import spark.implicits._
-    graft.functions.SignatureAggs.register(spark)
     for (seed <- 1 to 12) {
       val rng = new scala.util.Random(seed)
       val limit = 1 + rng.nextInt(9) // the caller's cap+1
@@ -571,7 +570,6 @@ class PropertySpec extends SparkSpec {
 
   test("top_k_pairs == sort-by-(score desc, id)-take-k reference over random inputs incl. NaN and ties") {
     import spark.implicits._
-    graft.functions.SignatureAggs.register(spark)
     for (seed <- 1 to 12) {
       val rng = new scala.util.Random(seed)
       val k = 1 + rng.nextInt(8)
@@ -601,7 +599,6 @@ class PropertySpec extends SparkSpec {
 
   test("long_vec_sum == elementwise reference over random vectors and partitionings") {
     import spark.implicits._
-    graft.functions.SignatureAggs.register(spark)
     for (seed <- 1 to 8) {
       val rng = new scala.util.Random(seed)
       val dim = 1 + rng.nextInt(16)

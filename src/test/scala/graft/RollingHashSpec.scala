@@ -10,7 +10,6 @@ class RollingHashSpec extends SparkSpec {
 
   test("codegen path matches interpreted eval and the Scala reference") {
     import spark.implicits._
-    RollingMinHash.register(spark)
     val docs = Seq(
       "the quick brown fox jumps over the lazy dog and keeps running far",
       "short", "", "aaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaa")
@@ -26,7 +25,6 @@ class RollingHashSpec extends SparkSpec {
 
   test("near-identical documents share the fingerprint, disjoint ones do not") {
     import spark.implicits._
-    RollingMinHash.register(spark)
     val base = (1 to 40).map(i => s"tok$i").mkString(" ")
     val nearDup = base + " extra"
     val other = (100 to 140).map(i => s"xyz$i").mkString(" ")

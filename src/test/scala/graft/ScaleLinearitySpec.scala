@@ -26,7 +26,7 @@ class ScaleLinearitySpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
 
     // d02/d04 are timed through their GENERIC From-kernels, not the
-    // inventory registrations: the CorpusMemo makes the registered forms
+    // inventory registrations: the corpus memo makes the registered forms
     // report the session-MARGINAL (memo-hit) wall, which doesn't contain
     // the candidate-generation work this ceiling exists to guard. (Since
     // round 15 the build cost itself is no longer discardable — Bench

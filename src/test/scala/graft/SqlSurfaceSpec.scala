@@ -42,8 +42,6 @@ class SqlSurfaceSpec extends SparkSpec {
 
   test("every custom function is reachable from SQL text (extension-injected)") {
     Tables.registerViews(spark, sf)
-    graft.functions.RollingMinHash.register(spark)
-    graft.functions.SignatureAggs.register(spark)
     // One statement exercising the whole custom-function surface the way a
     // SQL-only user would: shuffle routing, winnowing, vec math,
     // quantization audit, and both signature aggregates.

@@ -17,12 +17,16 @@ for t in ["region","nation","customer","supplier","part","orders",
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
 names = sorted(os.path.basename(p) for p in glob.glob(f"{out_dir}/*") if os.path.isdir(p))
-n_pass = n_fail = 0
+n_pass = n_fail = n_rows_only = 0
+# A query with an oracle but no dump (it threw in Verify, or was never
+# dumped) is a failure, not a silent omission.
+for name in sorted(set(oracle) - set(names)):
+    print(f"[FAIL-miss] {name}: no dump directory"); n_fail += 1
 for name in names:
     files = glob.glob(f"{out_dir}/{name}/*.parquet")
     got = pd.concat([pd.read_parquet(f) for f in files]) if files else pd.DataFrame()
     if name not in oracle:
-        print(f"[rows-only] {name}: {len(got)} rows")
+        print(f"[rows-only] {name}: {len(got)} rows"); n_rows_only += 1
         continue
     try:
         exp = con.execute(oracle[name]).df()
@@ -70,5 +74,5 @@ for name in names:
     except AssertionError as ex:
         print(f"[FAIL-vals] {name}: {str(ex).splitlines()[-1] if str(ex) else ex}")
         n_fail += 1
-print(f"\n{n_pass} pass, {n_fail} fail, {len(names)-n_pass-n_fail} rows-only")
+print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
 sys.exit(1 if n_fail else 0)
