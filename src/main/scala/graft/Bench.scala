@@ -20,9 +20,14 @@ object Bench {
     SessionMemo.clearAll()
     MemoLedger.drain()
 
+    // Memo-held checkpoint storage only: other queries' finished
+    // localCheckpoints linger until ContextCleaner runs after a driver GC,
+    // so a whole-session sum would rise and fall with GC timing.
     def storageBytes(): Long =
-      try spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum
-      catch { case _: Throwable => 0L }
+      try {
+        val held = SessionMemo.heldRddIds
+        spark.sparkContext.getRDDStorageInfo.filter(i => held(i.id)).map(_.memSize).sum
+      } catch { case _: Throwable => 0L }
     var storagePeak = 0L
 
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)

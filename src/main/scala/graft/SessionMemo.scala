@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** A session-scoped memo of corpus-derived artifacts — the one memo
@@ -35,18 +36,27 @@ final class SessionMemo(val family: String) {
   private var key: Option[(SparkSession, String, Long)] = None
   private val arts = scala.collection.mutable.LinkedHashMap.empty[String, Any]
 
-  /** Free the checkpoint blocks of a DataFrame held directly or inside a
-    * tuple (an index's codebook travels with its table as a pair);
-    * parquet-backed installs and driver-side values have nothing to free. */
-  private def free(v: Any): Unit = v match {
-    case df: DataFrame => graft.operators.Dedup.freeCheckpoint(df)
-    case (a, b) => free(a); free(b)
-    case _ => ()
+  /** The checkpoint RDDs of a DataFrame held directly or inside a tuple
+    * (an index's codebook travels with its table as a pair);
+    * parquet-backed installs and driver-side values hold none. */
+  private def checkpoints(v: Any): Iterator[RDD[_]] = v match {
+    case df: DataFrame => graft.operators.Dedup.checkpointRdd(df).iterator
+    case (a, b) => checkpoints(a) ++ checkpoints(b)
+    case _ => Iterator.empty
   }
+
+  private def free(v: Any): Unit = checkpoints(v).foreach(_.unpersist(false))
 
   private def freeAll(): Unit = {
     arts.valuesIterator.foreach(free)
     arts.clear()
+  }
+
+  /** Ids of the checkpoint RDDs behind the held artifacts — the storage
+    * this memo owns, as opposed to other queries' checkpoints that
+    * ContextCleaner has not reclaimed yet. */
+  def rddIds: Set[Int] = synchronized {
+    arts.valuesIterator.flatMap(checkpoints).map(_.id).toSet
   }
 
   /** The one key-switch/evict path (callers hold the lock). */
@@ -108,4 +118,7 @@ object SessionMemo {
   val tok = new SessionMemo("tok")
 
   def clearAll(): Unit = { corpus.clear(); emb.clear(); tok.clear() }
+
+  /** Checkpoint RDD ids held by all three families. */
+  def heldRddIds: Set[Int] = corpus.rddIds ++ emb.rddIds ++ tok.rddIds
 }

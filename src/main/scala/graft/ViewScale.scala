@@ -59,8 +59,8 @@ object ViewScale {
         fpW.write.mode("overwrite").parquet(s"$stateF/waves/batch=$i/fp")
         hsW.write.mode("overwrite").parquet(s"$stateF/waves/batch=$i/hs")
         graft.operators.Dedup.releaseReportFromTables(
-          spark.read.parquet(s"$stateF/waves/*/fp"),
-          spark.read.parquet(s"$stateF/waves/*/hs"))
+          graft.streaming.ViewStreams.releaseWaves(spark, stateF, "fp"),
+          graft.streaming.ViewStreams.releaseWaves(spark, stateF, "hs"))
           .write.mode("overwrite").parquet(s"$stateF/gen=$i")
       }
       incTot += tI; fullTot += tF

@@ -1,6 +1,6 @@
 package graft.functions
 
-import java.math.BigInteger
+import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
@@ -12,12 +12,14 @@ import org.apache.spark.Partitioner
 
 /** `partition = int(md5(key), 16) % n` — the reference's shuffle routing
   * function (reference `mapreduce/worker/__main__.py:62-65`), as a Catalyst
-  * expression so bit-exact partition parity is available where asserted
-  * (e.g. reference `tests/test_worker_08.py:226-243`: md5 mod 2 routes
+  * expression so bit-exact partition parity is available in SQL (e.g.
+  * reference `tests/test_worker_08.py:226-243`: md5 mod 2 routes
   * `""`,`bye`,`hello`→0 and `world`,`goodbye`,`hadoop`→1).
   *
-  * Parity-only operator (never on the 100 TB hot path — normal queries use
-  * Spark's Murmur3 `repartition`), so CodegenFallback is acceptable here.
+  * The kernel, [[Md5Mod.partitionOf]], also routes every shuffled record
+  * of every [[graft.operators.MapReduceJob]] through [[Md5Partitioner]].
+  * Catalyst queries use Spark's Murmur3 `repartition`, so the expression
+  * itself is rare and CodegenFallback is acceptable here.
   */
 case class Md5Mod(child: Expression, n: Int)
     extends UnaryExpression with CodegenFallback {
@@ -31,13 +33,27 @@ case class Md5Mod(child: Expression, n: Int)
 }
 
 object Md5Mod {
+  private val md5 = ThreadLocal.withInitial[MessageDigest](() => MessageDigest.getInstance("MD5"))
+
+  /** `int(md5(keyBytes).hexdigest(), 16) % n` without the hex string or a
+    * `BigInteger`: the 16 digest bytes, read big-endian, ARE that integer,
+    * so Horner's rule reduces it mod `n` one byte at a time
+    * (`r < n < 2^31`, so `r << 8` fits a Long). One digest per thread —
+    * this runs once per shuffled record. */
   def partitionOf(keyBytes: Array[Byte], n: Int): Int = {
-    val md = MessageDigest.getInstance("MD5")
-    val hex = md.digest(keyBytes).map("%02x".format(_)).mkString
-    new BigInteger(hex, 16).mod(BigInteger.valueOf(n.toLong)).intValue()
+    if (n < 1) throw new ArithmeticException(s"md5_mod: modulus $n not positive")
+    val digest = md5.get().digest(keyBytes)
+    val m = n.toLong
+    var r = 0L
+    var i = 0
+    while (i < digest.length) {
+      r = ((r << 8) | (digest(i) & 0xff)) % m
+      i += 1
+    }
+    r.toInt
   }
   def partitionOf(key: String, n: Int): Int =
-    partitionOf(key.getBytes("UTF-8"), n)
+    partitionOf(key.getBytes(StandardCharsets.UTF_8), n)
 }
 
 /** RDD partitioner with the reference's exact md5-mod routing. */

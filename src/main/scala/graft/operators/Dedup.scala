@@ -1842,9 +1842,14 @@ object Dedup {
     * prove no live reference to the DataFrame remains (the freed blocks
     * are unrecomputable). */
   private[graft] def freeCheckpoint(df: DataFrame): Unit =
+    checkpointRdd(df).foreach(_.unpersist(false))
+
+  /** The RDD holding a `localCheckpoint`ed DataFrame's blocks; None for a
+    * plan that is not checkpoint-backed (nothing to free or count). */
+  private[graft] def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => () // not a checkpoint-backed plan; nothing to free
+      case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
+      case _ => None
     }
 
   private[operators] def contamSplitPairs(spark: SparkSession, d: String, n: Int): DataFrame =

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
-import graft.functions.{Md5Mod, Md5Partitioner}
+import graft.functions.Md5Partitioner
 
 /** Hadoop-streaming-style MapReduce facade — the reference's user contract
   * (reference `mapreduce/submit.py:80-88` job descriptor; map → md5-hash
@@ -89,9 +89,12 @@ object MapReduceJob {
     * `wc_reduce.sh:14`): split on space/tab AND literal brackets — the
     * reference's `tr '[ \t]' '\n'` treats SET1 as the four literal chars
     * `[`, space, tab, `]`, so brackets are token separators too. Empty
-    * tokens are kept (blank lines count under the empty key). */
+    * tokens are kept (blank lines count under the empty key). A
+    * character class is not on `String.split`'s one-char fast path, so
+    * the pattern is compiled once here instead of once per line. */
+  private val wcSeparators = java.util.regex.Pattern.compile("[ \t\\[\\]]")
   val wcMapper: String => IterableOnce[(String, String)] =
-    line => line.toLowerCase.split("[ \t\\[\\]]", -1).map(w => (w, "1"))
+    line => wcSeparators.split(line.toLowerCase, -1).map(w => (w, "1"))
   val wcReducer: (String, Iterator[String]) => IterableOnce[String] =
     (key, vals) => Iterator.single(s"$key\t${vals.map(_.toInt).sum}")
 

@@ -482,6 +482,12 @@ object Similarity {
     // The probe cell set is queries×nProbe ints — collecting it makes the
     // IN literal, which is what lets the scan prune partitions statically.
     val probeCells = queries.select("cell").distinct().as[Int].collect().toSeq.sorted
+    // Checked here, not left to the read: Spark would first log a stack
+    // trace for the missing path, then fail without naming the cause.
+    val livePath = new org.apache.hadoop.fs.Path(indexPath)
+    if (!livePath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(livePath))
+      throw new java.io.FileNotFoundException(s"IVF index $indexPath is missing: a " +
+        "compaction swap crashed or is in progress; ivfCompactIndex restores it")
     val live = spark.read.parquet(indexPath)
     val corpus = tombstones(spark, indexPath)
       // Deleted rows are masked at read time; the set is bounded by one

@@ -539,7 +539,7 @@ object ViewStreams {
         "bucket store from the accumulated wave index as a base generation")
     val live = if (upgrading) Seq.empty else live0
     val foldHs =
-      if (upgrading) spark.read.parquet(s"$statePath/waves/*/hs") else hsWave
+      if (upgrading) releaseWaves(spark, statePath, "hs") else hsWave
     val waveBanded = Dedup.bandBuckets(Dedup.signaturesFromHashes(foldHs))
       .localCheckpoint()
     val dirty = waveBanded.select("band", "bucket").distinct().localCheckpoint()
@@ -605,7 +605,7 @@ object ViewStreams {
       .localCheckpoint()
     val involved = needVerify.select(col("a").as("doc_id"))
       .unionAll(needVerify.select(col("b").as("doc_id"))).distinct()
-    val hsInvolved = spark.read.parquet(s"$statePath/waves/*/hs")
+    val hsInvolved = releaseWaves(spark, statePath, "hs")
       .join(involved, Seq("doc_id"), "leftsemi")
     val verifiedNew = Dedup.jaccardPairsHashed(hsInvolved, Some(needVerify))
     graft.MemoLedger.planHook.foreach(_("view:release_fold", verifiedNew))
@@ -625,7 +625,7 @@ object ViewStreams {
     val currentVerified =
       (if (isBase) genVerified else prevVerified.unionAll(genVerified))
         .join(curPairs, Seq("a", "b"), "leftsemi")
-    val fpsAll = spark.read.parquet(s"$statePath/waves/*/fp")
+    val fpsAll = releaseWaves(spark, statePath, "fp")
     Dedup.releaseReportFromVerified(fpsAll, currentVerified, threshold)
       .write.mode("overwrite").parquet(s"$genDir/report")
     // Commit: the _BASE marker (when compacting) lands before the root
@@ -637,6 +637,17 @@ object ViewStreams {
     pruneReleaseSuperseded(spark, fs, gens, isBase)
     Seq(waveBanded, dirty, updatedDirty, needVerify, prevBuckets)
       .foreach(Dedup.freeCheckpoint)
+  }
+
+  /** Every release wave's `table` (`fp` or `hs`) as one frame. The waves
+    * are expanded here and read as explicit paths, not handed to Spark as
+    * one glob path: `FileStreamSink.hasMetadata` logs a
+    * FileNotFoundException stack trace for every single glob-path read. */
+  private[graft] def releaseWaves(spark: SparkSession, statePath: String,
+      table: String): DataFrame = {
+    val pattern = new Path(statePath, s"waves/*/$table")
+    val fs = pattern.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    spark.read.parquet(fs.globStatus(pattern).map(_.getPath.toString).toSeq: _*)
   }
 
   /** The release view's LIVE generations: the latest BASE generation

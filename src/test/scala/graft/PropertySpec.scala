@@ -1,5 +1,10 @@
 package graft
 
+import java.math.BigInteger
+import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
+import java.util.concurrent.{Callable, Executors}
+
 import org.scalacheck.Gen
 import graft.functions.{Md5Mod, RollingMinHash}
 
@@ -25,6 +30,34 @@ class PropertySpec extends SparkSpec {
 
   test("md5 routing: n=1 sends everything to partition 0") {
     samples(keyGen).foreach(k => assert(Md5Mod.partitionOf(k, 1) == 0))
+  }
+
+  // The reference's formula written out (`int(md5(key).hexdigest(), 16) % n`),
+  // the oracle for the byte-wise kernel.
+  private def referenceRoute(k: String, n: Int): Int = {
+    val hex = MessageDigest.getInstance("MD5").digest(k.getBytes(StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString
+    new BigInteger(hex, 16).mod(BigInteger.valueOf(n.toLong)).intValue()
+  }
+  private lazy val routingKeys: Seq[String] =
+    Seq("", " ", "a", "hello", "naïve", "日本", "😀\t[x]", "x" * 1024, "日本語" * 400) ++
+      samples(keyGen)
+
+  test("md5 routing: kernel == int(hexdigest, 16) mod n over ASCII, UTF-8 and 1 KB keys") {
+    for (k <- routingKeys; n <- Seq(1, 2, 3, 7, 8, 16, 1000003, Int.MaxValue))
+      assert(Md5Mod.partitionOf(k, n) == referenceRoute(k, n), s"n=$n key=${k.take(16)}")
+  }
+
+  test("md5 routing: concurrent callers on 8 threads get the serial results") {
+    val keys = routingKeys ++ (0 until 5000).map(i => s"key-$i")
+    val serial = keys.map(Md5Mod.partitionOf(_, 1000003))
+    val pool = Executors.newFixedThreadPool(8)
+    try {
+      val runs = (1 to 8).map(_ => pool.submit(new Callable[Seq[Int]] {
+        def call(): Seq[Int] = keys.map(Md5Mod.partitionOf(_, 1000003))
+      }))
+      runs.foreach(r => assert(r.get() == serial))
+    } finally pool.shutdown()
   }
 
   test("rolling min hash: deterministic, monotone under append, total on short/empty") {

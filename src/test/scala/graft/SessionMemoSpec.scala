@@ -6,9 +6,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** The [[SessionMemo]] contract: hits, nesting within and across
-  * families, eviction on a corpus rewrite, install, clear. Each test uses
-  * its own families over a temp corpus dir, so the engine's three memos
-  * are never touched. */
+  * families, eviction on a corpus rewrite, install, clear, held RDD ids.
+  * Each test uses its own families over a temp corpus dir, so the
+  * engine's three memos are never touched. */
 class SessionMemoSpec extends SparkSpec {
 
   private def corpusDir(): Path = {
@@ -97,7 +97,9 @@ class SessionMemoSpec extends SparkSpec {
     val (_, inPair) = memo(spark, d, "pair")(
       (Array(1.0), spark.range(2).toDF("id").localCheckpoint()))
     assert(persisted(df) && persisted(inPair))
+    assert(memo.rddIds == Set(rddId(df), rddId(inPair)))
     memo.clear()
+    assert(memo.rddIds.isEmpty)
     assert(!persisted(df) && !persisted(inPair))
     MemoLedger.drain()
     var builds = 0

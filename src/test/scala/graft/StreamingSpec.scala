@@ -947,8 +947,8 @@ class StreamingSpec extends SparkSpec {
     fp0.write.mode("overwrite").parquet(s"$state/waves/batch=0/fp")
     hs0.write.mode("overwrite").parquet(s"$state/waves/batch=0/hs")
     Dedup.releaseReportFromTables(
-      spark.read.parquet(s"$state/waves/*/fp"),
-      spark.read.parquet(s"$state/waves/*/hs"))
+      ViewStreams.releaseWaves(spark, state, "fp"),
+      ViewStreams.releaseWaves(spark, state, "hs"))
       .write.mode("overwrite").parquet(s"$state/gen=0")
     // A reader on not-yet-upgraded legacy state reads the legacy report.
     assert(ViewStreams.releaseView(spark, state).collect().length == 1)
