@@ -45,7 +45,7 @@ final class SessionMemo(val family: String) {
     case _ => Iterator.empty
   }
 
-  private def free(v: Any): Unit = checkpoints(v).foreach(_.unpersist(false))
+  private def free(v: Any): Unit = checkpoints(v).foreach(org.apache.spark.CheckpointBlocks.free)
 
   private def freeAll(): Unit = {
     arts.valuesIterator.foreach(free)

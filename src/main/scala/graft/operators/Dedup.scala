@@ -74,13 +74,8 @@ object Dedup {
     * session parallelism the repartition is skipped outright — at 100 TB
     * the scan already spreads the text and the round-robin shuffle would
     * move the full payload for nothing (guide §2.4). */
-  private def spread(docs: DataFrame): DataFrame = {
-    val sel = docs.select(col("doc_id"), col("text"))
-    Sizing.spreadCount(sel) match {
-      case Some(n) => sel.repartition(n)
-      case None    => sel
-    }
-  }
+  private def spread(docs: DataFrame): DataFrame =
+    Sizing.spread(docs.select(col("doc_id"), col("text")))
 
   /** [[spread]] as the reference arm for SizingSpec and
     * ShingleFromTokensSpec, which compare the shared token-array path
@@ -1842,7 +1837,7 @@ object Dedup {
     * prove no live reference to the DataFrame remains (the freed blocks
     * are unrecomputable). */
   private[graft] def freeCheckpoint(df: DataFrame): Unit =
-    checkpointRdd(df).foreach(_.unpersist(false))
+    checkpointRdd(df).foreach(org.apache.spark.CheckpointBlocks.free)
 
   /** The RDD holding a `localCheckpoint`ed DataFrame's blocks; None for a
     * plan that is not checkpoint-backed (nothing to free or count). */
@@ -2166,10 +2161,7 @@ object Dedup {
       // materialization per the round-3 shared-subtree rule; spread first
       // so the single-file embeddings scan runs on every core (no-op once
       // the scan's own splits reach the session parallelism — round 17).
-      .transform(df => Sizing.spreadCount(df) match {
-        case Some(n) => df.repartition(n)
-        case None    => df
-      })
+      .transform(Sizing.spread)
       .localCheckpoint()
     val a = e.select(col("bucket"), col("vec_id").as("a"),
       col("emb").as("ea"), col("nrm").as("na"))

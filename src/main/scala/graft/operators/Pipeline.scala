@@ -572,6 +572,56 @@ object Pipeline {
             FROM rates ORDER BY source"""))
 
   // ---------------------------------------- survival funnel (p07)
+  /** [[stagedDocs]] memoized per (corpus, stamp): one ledgered,
+    * checkpointed build serves p07, p11 and p14 (planted-corpus specs
+    * keep passing raw frames through the generic overloads). */
+  private def corpusStagedDocs(spark: org.apache.spark.sql.SparkSession,
+      d: String): DataFrame =
+    SessionMemo.corpus.checkpointed(spark, d, "staged")(
+      stagedDocs(Tables.documents(spark, d)))
+
+  /** The raw→clean→gate→unique staging shared VERBATIM by p07 (doc
+    * counts), p11 (token masses) and p14 (independent gates) — one code
+    * path, not copies to patch in lockstep.
+    *
+    * Features only, one row per document: `doc_id`, `source`, the gate
+    * inputs (`n_tokens`, `stop_hits`, `n_word_chars`), `clean`,
+    * `gate_keep`, `fp`, and both outputs of ONE fp-partitioned window —
+    * `unique_keep` (p07/p11's representative among gate survivors) and
+    * `rep_all` (p14's unconditional min(doc_id)). `text` is dropped once
+    * the features are computed: no consumer reads it, so it neither rides
+    * the fp shuffle nor lands in the checkpoint. The scan is round-robin
+    * spread with [[Sizing.spread]] first (a single-file corpus scans
+    * as one split), so the tokenizer, the regex passes and the md5 run on
+    * every core; the guard skips the exchange once the scan's own splits
+    * reach the session parallelism. */
+  private[graft] def stagedDocs(docs: DataFrame): DataFrame = {
+    val toks = tokens(col("text"))
+    val blockPat = "\\b(customer|supplier|order)\\b"
+    val feats = Sizing.spread(docs.select(col("doc_id"), col("source"), col("text")))
+      .select(
+        col("doc_id"), col("source"), col("text"),
+        size(toks).cast("long").as("n_tokens"),
+        stopwordHits(toks, stopwords("en")).cast("long").as("stop_hits"),
+        charClassCount(lower(col("text")), "[a-z0-9]").cast("long").as("n_word_chars"))
+      .withColumn("clean", regexp_count(col("text"), lit(blockPat)) === 0)
+      // safeFrac: zero-token docs would ANSI-throw on the frac conjuncts;
+      // 3VL keeps gate_keep FALSE because n_tokens >= 20 already failed.
+      .withColumn("gate_keep",
+        col("clean") &&
+          col("n_tokens") >= 20 && col("n_tokens") <= 5000 &&
+          safeFrac(col("stop_hits"), col("n_tokens")) >= 0.02 &&
+          safeFrac(col("n_word_chars"), col("n_tokens")) >= 3.0 &&
+          safeFrac(col("n_word_chars"), col("n_tokens")) <= 10.0)
+      .withColumn("fp", md5(normText(col("text"))))
+      .drop("text")
+    val byFp = Window.partitionBy("fp")
+    val rep = min(when(col("gate_keep"), col("doc_id"))).over(byFp)
+    feats
+      .withColumn("unique_keep", col("gate_keep") && col("doc_id") === rep)
+      .withColumn("rep_all", min(col("doc_id")).over(byFp))
+  }
+
   /** p07: per-source stage-attrition funnel — the "where does my data
     * go" dashboard. Every curation run drops documents at each stage;
     * this query reports, per source, the CUMULATIVE survivor counts
@@ -592,50 +642,11 @@ object Pipeline {
     * representative choice cannot flip (p01's ordering argument,
     * extended to the blocklist stage).
     *
-    * Scale shape: map-only feature scan, ONE fingerprint-keyed window,
-    * one source-keyed aggregate with map-side partials. Output =
-    * #sources rows.
+    * Scale shape: a read of the `corpus:staged` memo (built once per
+    * corpus: spread feature scan, ONE fingerprint-keyed window — see
+    * [[stagedDocs]]), then one source-keyed aggregate with map-side
+    * partials. Output = #sources rows.
     */
-  /** The raw→clean→gate→unique staging shared VERBATIM by p07 (doc
-    * counts) and p11 (token masses): one map-only feature scan, the t20
-    * gate, d01's normalized fingerprint, and the per-group surviving
-    * representative — factored so the two funnels' "same stage
-    * definitions" cross-check is one code path, not four copies to patch
-    * in lockstep (the classifierDocScores/t24-p12 stance). */
-  /** [[stagedDocs]] memoized per (corpus, stamp) — round 16: p07, p11
-    * and p14 each re-ran the identical feature scan + d01 fingerprint
-    * window; one ledgered, checkpointed build now serves all three
-    * (planted-corpus specs keep passing raw frames through the generic
-    * overloads). */
-  private def corpusStagedDocs(spark: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame =
-    SessionMemo.corpus.checkpointed(spark, d, "staged")(
-      stagedDocs(Tables.documents(spark, d)))
-
-  private def stagedDocs(docs: DataFrame): DataFrame = {
-    val toks = tokens(col("text"))
-    val blockPat = "\\b(customer|supplier|order)\\b"
-    val feats = docs
-      .select(
-        col("doc_id"), col("source"), col("text"),
-        size(toks).cast("long").as("n_tokens"),
-        stopwordHits(toks, stopwords("en")).cast("long").as("stop_hits"),
-        charClassCount(lower(col("text")), "[a-z0-9]").cast("long").as("n_word_chars"))
-      .withColumn("clean", regexp_count(col("text"), lit(blockPat)) === 0)
-      // safeFrac: zero-token docs would ANSI-throw on the frac conjuncts;
-      // 3VL keeps gate_keep FALSE because n_tokens >= 20 already failed.
-      .withColumn("gate_keep",
-        col("clean") &&
-          col("n_tokens") >= 20 && col("n_tokens") <= 5000 &&
-          safeFrac(col("stop_hits"), col("n_tokens")) >= 0.02 &&
-          safeFrac(col("n_word_chars"), col("n_tokens")) >= 3.0 &&
-          safeFrac(col("n_word_chars"), col("n_tokens")) <= 10.0)
-      .withColumn("fp", md5(normText(col("text"))))
-    val rep = min(when(col("gate_keep"), col("doc_id")))
-      .over(Window.partitionBy("fp"))
-    feats.withColumn("unique_keep", col("gate_keep") && col("doc_id") === rep)
-  }
-
   def survivalFunnel(docs: DataFrame,
       stagedIn: Option[DataFrame] = None): DataFrame =
     stagedIn.getOrElse(stagedDocs(docs))
@@ -983,8 +994,8 @@ object Pipeline {
     * members of a fingerprint group share their gate status, so the
     * representative choice can't flip), so the two funnels cross-check.
     *
-    * Scale shape: p07's exactly — map-only feature scan, ONE fingerprint
-    * window, one source-keyed aggregate with map-side partials; output =
+    * Scale shape: p07's exactly — a read of the `corpus:staged` memo,
+    * one source-keyed aggregate with map-side partials; output =
     * #sources rows. Every ratio rides safeFrac/NULLIF (an all-empty-doc
     * source has raw_tokens 0). */
   def tokenFunnel(docs: DataFrame,
@@ -1288,17 +1299,16 @@ object Pipeline {
     * independence changes: the quality cascade drops its `clean`
     * conjunct, and the dup representative is min(doc_id) over the
     * fingerprint group UNCONDITIONALLY (d01's rule, not "among gate
-    * survivors").
+    * survivors"; the staged frame's `rep_all`).
     *
-    * Scale shape: p07's map-only feature scan, the d01 fingerprint
-    * window (fp-partitioned), one (source, combo) aggregate with
-    * map-side partials joined to the #sources totals — output
-    * ≤ #sources × 8 rows at any corpus size. */
+    * Scale shape: a read of the `corpus:staged` memo, whose one
+    * fingerprint window already carries `rep_all` (p14 owns no window
+    * and no fp shuffle), then one (source, combo) aggregate with map-side
+    * partials joined to the #sources totals — output ≤ #sources × 8 rows
+    * at any corpus size. */
   def gateAttribution(docs: DataFrame,
       stagedIn: Option[DataFrame] = None): DataFrame = {
     val flagged = stagedIn.getOrElse(stagedDocs(docs))
-      .withColumn("rep_all",
-        min(col("doc_id")).over(Window.partitionBy("fp")))
       .select(col("source"),
         (!col("clean")).as("b"),
         (!(col("n_tokens") >= 20 && col("n_tokens") <= 5000 &&

@@ -50,12 +50,8 @@ object Similarity {
       // own splits reach the session parallelism the repartition is
       // skipped: at 100 TB a flat repartition(cores) would shuffle the
       // full vector payload the scan already spreads (guide §2.4).
-      val sel = Tables.embeddings(spark, d)
-        .select(col("vec_id"), col("embedding"))
-      Sizing.spreadCount(sel) match {
-        case Some(n) => sel.repartition(n)
-        case None    => sel
-      }
+      Sizing.spread(Tables.embeddings(spark, d)
+        .select(col("vec_id"), col("embedding")))
     }
 
   /** Trained IVF index — codebook + cell-assigned corpus — memoized per

@@ -48,6 +48,13 @@ private[graft] object Sizing {
     else Some(math.max(1L, math.min(p.toLong, (bytes + perTaskBytes - 1) / perTaskBytes)).toInt)
   }
 
+  /** `df` round-robin repartitioned to [[spreadCount]] partitions, or as
+    * is when the guard says its scan splits already spread it. */
+  def spread(df: DataFrame): DataFrame = spreadCount(df) match {
+    case Some(n) => df.repartition(n)
+    case None    => df
+  }
+
   /** Partition count for a range-partitioned scan over `df`: one partition
     * per `targetBytes` of estimated input, clamped to
     * [1, defaultParallelism] — defaultParallelism is exactly what round 15

@@ -1389,8 +1389,13 @@ object TextOps {
           sum(col("cnt") * col("lr_milli")).as("weight_milli"))
         .select(
           col("doc_id"), col("n_tokens"), col("weight_milli"),
-          round(col("weight_milli").cast("double")
-            / (col("n_tokens").cast("double") * 1000.0), 6).as("w_per_tok"))
+          // DuckDB's round(x, 6) is round(x * 1e6) / 1e6 in doubles, while
+          // Spark's rounds x's decimal string half-up; they part when that
+          // string ends in a 5 at the 7th decimal (-0.0313375 → -0.031337
+          // vs -0.031338), so the engine spells out DuckDB's form.
+          (round(col("weight_milli").cast("double")
+            / (col("n_tokens").cast("double") * 1000.0) * 1e6) / 1e6)
+            .as("w_per_tok"))
         .transform(graft.Present.byNames("doc_id"))
     },
     Some("""WITH toks AS (

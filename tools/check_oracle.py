@@ -73,6 +73,17 @@ for name in names:
         print(f"[PASS     ] {name}: {len(g)} rows"); n_pass += 1
     except AssertionError as ex:
         print(f"[FAIL-vals] {name}: {str(ex).splitlines()[-1] if str(ex) else ex}")
+        # Diagnostics only: show the first differing rows, both sides.
+        try:
+            differs = ~((g == e) | (g.isna() & e.isna())).all(axis=1)
+        except (TypeError, ValueError):  # array-valued cells
+            differs = (g.astype(str) != e.astype(str)).any(axis=1)
+        rows = list(differs[differs].index[:5])
+        print(f"            {int(differs.sum())} differing rows; first {len(rows)}:")
+        for got_row, exp_row in zip(g.loc[rows].to_dict("records"),
+                                    e.loc[rows].to_dict("records")):
+            print(f"            spark  {got_row}")
+            print(f"            oracle {exp_row}")
         n_fail += 1
 print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
 sys.exit(1 if n_fail else 0)
