@@ -1,14 +1,17 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, LogicalPlan, ResolvedHint}
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Filter, LogicalPlan, Project, ResolvedHint, Sort}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Plan audit over the whole query inventory — exchange / join operator
   * counts plus detection of the plan shapes that must never appear
   * unannounced: `CartesianProduct` (always a bug at scale),
   * `BroadcastNestedLoopJoin` outside an explicit allowlist, unpartitioned
-  * windows, and BROADCAST HINTS whose child subtree reads a corpus-scale
+  * windows, global sorts at a query's root (results are unordered sets:
+  * the correctness gate sorts rows itself, so a trailing `orderBy` with no
+  * `Limit` above it is a range shuffle plus a sampling job for nothing),
+  * and BROADCAST HINTS whose child subtree reads a corpus-scale
   * table (a hard hint is a plan-time promise that the relation fits in one
   * executor — made before anyone has seen its size; at 100 TB that promise
   * kills the job at broadcast-build time, where leaving the choice to AQE
@@ -225,6 +228,14 @@ object PlanAudit {
       case _ => Nil
     }.toSet
 
+  /** A global Sort reached from the root through only Project/Filter
+    * nodes: nothing above it (no Limit) consumes its order. */
+  def rootSort(plan: LogicalPlan): Boolean = plan match {
+    case s: Sort => s.global
+    case _: Project | _: Filter => rootSort(plan.children.head)
+    case _ => false
+  }
+
   /** Tables reached by a BROADCAST hint's child subtree, per hint. */
   def corpusBroadcasts(analyzed: LogicalPlan): Set[String] =
     analyzed.collect {
@@ -241,10 +252,12 @@ object PlanAudit {
       bnlj: Boolean,
       globalWindow: Boolean,
       corpusHinted: Set[String],
-      error: Option[String]) {
+      error: Option[String],
+      rootSort: Boolean = false) {
     def line: String = {
       val flags = (if (cartesian) " CARTESIAN!" else "") +
         (if (bnlj) " BNLJ" else "") + (if (globalWindow) " GLOBAL-WINDOW!" else "") +
+        (if (rootSort) " ROOT-SORT!" else "") +
         (if (corpusHinted.nonEmpty) s" HINT[${corpusHinted.toSeq.sorted.mkString(",")}]" else "")
       error match {
         case Some(e) => f"[audit] $name%-28s FAILED: ${e.take(100)}"
@@ -280,7 +293,8 @@ object PlanAudit {
       def n(s: String) = s.r.findAllIn(plan).length
       Audit(name, n("Exchange"), n("SortMergeJoin"), n("BroadcastHashJoin"),
         plan.contains("CartesianProduct"), plan.contains("BroadcastNestedLoopJoin"),
-        globalWindow, corpusBroadcasts(qe.analyzed), None)
+        globalWindow, corpusBroadcasts(qe.analyzed), None,
+        rootSort = rootSort(qe.optimizedPlan))
     } catch {
       case e: Throwable => Audit(name, 0, 0, 0, cartesian = false, bnlj = false,
         globalWindow = false, corpusHinted = Set.empty,
@@ -352,7 +366,9 @@ object PlanAudit {
   }
 
   /** Violation strings (empty = gate passes): plan-compile failures,
-    * cartesian products anywhere, BNLJ outside the allowlist, broadcast
+    * cartesian products anywhere, BNLJ outside the allowlist, root sorts
+    * in inventory queries (memo/view builds are exempt: a checkpointed
+    * layout can be load-bearing for its consumers), broadcast
     * hints over corpus-scale subtrees outside THEIR allowlist — and stale
     * allowlist entries whose pattern disappeared (so the lists can't rot). */
   def violations(audits: Seq[Audit]): Seq[String] =
@@ -366,6 +382,9 @@ object PlanAudit {
           Seq(s"${a.name}: BroadcastNestedLoopJoin not in allowlist") else Nil) ++
         (if (a.globalWindow)
           Seq(s"${a.name}: unpartitioned Window (all rows to one task)") else Nil) ++
+        (if (a.rootSort && !a.name.startsWith("memo:") && !a.name.startsWith("view:"))
+          Seq(s"${a.name}: global Sort at the plan root — results are unordered " +
+            "(no Limit consumes the order); drop the orderBy") else Nil) ++
         (if (a.corpusHinted.nonEmpty && !broadcastAllowlist.contains(a.name))
           Seq(s"${a.name}: broadcast HINT over corpus-scale table(s) " +
             s"${a.corpusHinted.toSeq.sorted.mkString(",")} — drop the hint (AQE " +

@@ -81,7 +81,6 @@ object AsOfJoin {
         leftKey = "user_id", rightKey = "o_custkey",
         leftTime = "ts", rightTime = "o_orderdate",
         rightTiebreak = "o_orderkey", rightPayload = Seq("o_orderkey", "o_orderdate"))
-        .transform(graft.Present.byNames("event_id"))
     },
     Some("""WITH l AS (
               SELECT user_id AS k, ts AS t, 1 AS side, NULL::BIGINT AS tb,

@@ -58,8 +58,7 @@ object Dedup {
       Tables.documents(s, d)
         .select(col("doc_id"), md5(normText(col("text"))).as("fp"))
         .groupBy("fp")
-        .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_dups"))
-        .transform(graft.Present.byNames("keep_id")),
+        .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_dups")),
     Some("""SELECT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp,
             min(doc_id) AS keep_id, count(*) AS n_dups
             FROM documents
@@ -74,13 +73,8 @@ object Dedup {
     * session parallelism the repartition is skipped outright — at 100 TB
     * the scan already spreads the text and the round-robin shuffle would
     * move the full payload for nothing (guide §2.4). */
-  private def spread(docs: DataFrame): DataFrame =
+  private[graft] def spread(docs: DataFrame): DataFrame =
     Sizing.spread(docs.select(col("doc_id"), col("text")))
-
-  /** [[spread]] as the reference arm for SizingSpec and
-    * ShingleFromTokensSpec, which compare the shared token-array path
-    * against spreading the raw text. */
-  private[graft] def spreadDocs(docs: DataFrame): DataFrame = spread(docs)
 
   /** Round-robin fan-out for a typed-map OUTPUT whose input partition
     * count is known: a no-op once the input already carries ≥ cores
@@ -568,14 +562,12 @@ object Dedup {
   def minhashPairs(spark: SparkSession, d: String, threshold: Double): DataFrame =
     corpusVerifiedPairs(spark, d)
       .filter(col("jaccard") >= threshold)
-      .transform(graft.Present.byNames("a", "b"))
 
   def minhashPairsFrom(docs: DataFrame, threshold: Double): DataFrame = {
     val hs = materializedShingleHashes(docs)
     val cands = lshCandidates(signaturesFromHashes(hs))
     jaccardPairsHashed(hs, Some(cands))
       .filter(col("jaccard") >= threshold)
-      .transform(graft.Present.byNames("a", "b"))
   }
 
   /** DuckDB re-implementation of the MinHash-LSH pipeline, shared by the
@@ -694,7 +686,6 @@ object Dedup {
         bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).cast("long").as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxDist)
-      .transform(graft.Present.byNames("a", "b"))
   }
 
   val simhash = Q(
@@ -732,7 +723,6 @@ object Dedup {
     (s, d) => {
       corpusCappedJaccard(s, d)
         .filter(col("jaccard") >= 0.12)
-        .transform(graft.Present.byNames("a", "b"))
     },
     // The oracle mirrors the df-cap (`dfq` + `n_rare > 0`): a pair
     // qualifies only on ≥1 shared sub-cap shingle while the Jaccard stays
@@ -883,7 +873,6 @@ object Dedup {
       .select(col("a"), col("b"),
         round(VectorFns.dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6).as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
-      .transform(graft.Present.byNames("a", "b"))
     (result, cellPairs.size)
   }
 
@@ -1025,7 +1014,6 @@ object Dedup {
   def dedupClusters(spark: SparkSession, d: String, threshold: Double,
       maxIters: Int = 50): DataFrame =
     corpusClusterTable(spark, d, threshold, maxIters)
-      .transform(graft.Present.byNames("cluster_rep", "doc_id"))
 
   def dedupClustersFrom(docs: DataFrame, threshold: Double,
       maxIters: Int = 50): DataFrame =
@@ -1043,7 +1031,6 @@ object Dedup {
         col("label").as("cluster_rep"),
         explode(col("ids")).as("doc_id"),
         col("cluster_size"))
-      .transform(graft.Present.byNames("cluster_rep", "doc_id"))
   }
 
   /** d06 oracle: the d02 pipeline's verified pairs, closed transitively by
@@ -1118,7 +1105,6 @@ object Dedup {
         col("doc_id"),
         (col("reason") === "keep").as("keep"),
         col("reason"))
-      .transform(graft.Present.byNames("doc_id"))
   }
 
   val keep = Q(
@@ -1232,7 +1218,6 @@ object Dedup {
         coalesce(col("reason_before"), lit("absent")).as("reason_before"),
         col("reason_after"))
       .agg(count(lit(1)).as("n_docs"))
-      .transform(graft.Present.byNames("reason_before", "reason_after"))
 
   /** The previous release's verdict table, memoized: in production the
     * prior release's keep list IS a stored artifact (you read it, you
@@ -1299,7 +1284,6 @@ object Dedup {
       .join(e.as("e3"),
         col("e1.a") === col("e3.a") && col("e2.b") === col("e3.b"))
       .select(col("e1.a").as("x"), col("e1.b").as("y"), col("e2.b").as("z"))
-      .transform(graft.Present.byNames("x", "y", "z"))
   }
 
   val triangles = Q(
@@ -1664,7 +1648,6 @@ object Dedup {
         col("doc_id"),
         col("reason").isNull.as("keep"),
         coalesce(col("reason"), lit("keep")).as("reason"))
-      .transform(graft.Present.byNames("doc_id"))
   }
 
   val incremental = Q(
@@ -1806,7 +1789,6 @@ object Dedup {
       .agg(
         count(lit(1)).as("n_eval_docs"),
         sum("n_shared").as("n_shared_ngrams"))
-      .transform(graft.Present.byNames("doc_id"))
 
   /** The shipped d09/d19 instantiation's pair table: the deterministic
     * `doc_id % 19 == 0` slice stands in for the external benchmark table;
@@ -1966,7 +1948,6 @@ object Dedup {
       .agg(min("pos").as("span_start"),
         (max(col("pos")) - min(col("pos")) + k).as("span_tokens"))
       .select("doc_id", "span_start", "span_tokens")
-      .transform(graft.Present.byNames("doc_id", "span_start"))
   }
 
   val repeated = Q(
@@ -2039,7 +2020,6 @@ object Dedup {
           count(lit(1)).as("n_methods"),
           concat_ws(",", sort_array(collect_set(col("m")))).as("methods"))
         .filter(col("n_methods") >= 2)
-        .transform(graft.Present.byNames("a", "b"))
     },
     Some(s"""WITH u AS (
             SELECT a, b, 'minhash' AS m FROM (${subOracle(minhash.oracle.get)})
@@ -2093,7 +2073,6 @@ object Dedup {
         expr("md5(array_join(transform(array_sort(" +
           "collect_list(CASE WHEN keep_chunk THEN struct(chunk_idx, chunk) END)" +
           "), x -> x.chunk), ' '))").as("cleaned_md5"))
-      .transform(graft.Present.byNames("doc_id"))
   }
 
   val chunkDedup = Q(
@@ -2177,7 +2156,6 @@ object Dedup {
       .join(dominated, Seq("vec_id"), "left")
       .select(col("vec_id"), col("bucket"), col("dominator"),
         col("dominator").isNull.as("kept"))
-      .transform(graft.Present.byNames("vec_id"))
   }
 
   val semantic = Q(
@@ -2249,7 +2227,6 @@ object Dedup {
         .filter(col("rn") === 1)
         .select(col("cluster_rep"), col("cluster_size"),
           col("doc_id").as("best_doc"), col("alpha_ratio").as("best_alpha"))
-        .transform(graft.Present.byNames("cluster_rep"))
     },
     Some(s"""WITH RECURSIVE $minhashOracleCtes,
             pairs AS (
@@ -2310,7 +2287,6 @@ object Dedup {
         .groupBy("src_a", "src_b")
         .agg(count(lit(1)).as("n_pairs"))
         .withColumn("cross_source", col("src_a") =!= col("src_b"))
-        .transform(graft.Present.byNames("src_a", "src_b"))
     },
     Some(s"""WITH $minhashOracleCtes,
             p AS (
@@ -2377,7 +2353,6 @@ object Dedup {
     // scoreAgainstEval returns the empty no-match frame — nothing can be
     // contaminated against zero eval items.
     scoreAgainstEval(e.filter(col("vec_id") >= nEval), evalSet, threshold)
-      .transform(graft.Present.byNames("vec_id"))
   }
 
   /** The d17 scoring pass over any (vec_id, embedding) frame — batch or
@@ -2464,7 +2439,6 @@ object Dedup {
       .agg(max(struct(col("c"), (-col("eval_id")).as("neg"))).as("b"))
       .select(col("vec_id"), col("b.c").as("max_cos"), (-col("b.neg")).as("nearest_eval"))
       .filter(col("max_cos") >= threshold)
-      .transform(graft.Present.byNames("vec_id"))
     (out, cellPairs.size)
   }
 
@@ -2529,7 +2503,6 @@ object Dedup {
         round(col("n_common").cast("double") / col("n_b").cast("double"), 4).as("cont_b"))
       .withColumn("max_cont", greatest(col("cont_a"), col("cont_b")))
       .filter(col("max_cont") >= threshold)
-      .transform(graft.Present.byNames("a", "b"))
   }
 
   val containment = Q(
@@ -2592,7 +2565,6 @@ object Dedup {
         count(lit(1)).as("n_leaking_docs"),
         sum("n_shared").as("n_shared_ngrams"),
         max("n_shared").as("max_doc_overlap"))
-      .transform(graft.Present.byNames("eval_doc"))
 
   val evalLeak = Q(
     "d19_eval_leak_report",
@@ -2673,7 +2645,6 @@ object Dedup {
         round(col("n_shared").cast("double")
           / (col("n_a") + col("n_b") - col("n_shared")).cast("double"), 6)
           .as("jaccard"))
-      .transform(graft.Present.byNames("src_a", "src_b"))
   }
 
   val crossSource = Q(
@@ -2792,7 +2763,6 @@ object Dedup {
         sum("n_shared").as("n_shared_ngrams"),
         max("n_shared").as("max_doc_overlap"))
       .withColumn("severe", col("max_doc_overlap") >= severeAt)
-      .transform(graft.Present.byNames("val_doc"))
   }
 
   val splitLeak = Q(
@@ -2891,7 +2861,6 @@ object Dedup {
         col("a"), col("b"),
         coalesce(col("jaccard"), lit(0.0)).as("exact_jaccard"), col("est_jaccard"),
         round(abs(col("est_jaccard") - coalesce(col("jaccard"), lit(0.0))), 4).as("abs_err"))
-      .transform(graft.Present.byNames("a", "b"))
   }
 
   val calibration = Q(
@@ -2950,7 +2919,6 @@ object Dedup {
       .select(col("sh_h"), col("df"), col("n_sources"),
         round(col("df").cast("double") / col("n_docs").cast("double"), 6)
           .as("df_share"))
-      .transform(graft.Present.by(desc("df"), col("sh_h")))
   }
 
   val hotReport = Q(
@@ -3009,7 +2977,6 @@ object Dedup {
         // via NULLIF in the oracle) is the honest readout, not a crash.
         round(safeFrac(col("n_docs"), col("n_docs") - col("n_redundant")), 6)
           .as("inflation"))
-      .transform(graft.Present.byNames("source"))
   }
 
   val inflation = Q(
@@ -3067,7 +3034,6 @@ object Dedup {
         ((col("group_size") - lit(1L)) * col("n_groups")).as("n_redundant"),
         round((col("group_size") * col("n_groups")).cast("double") /
           col("n_total").cast("double"), 6).as("doc_share"))
-      .transform(graft.Present.byNames("group_size"))
   }
 
   val spectrum = Q(
@@ -3165,7 +3131,6 @@ object Dedup {
         // md5("") for fully-scrubbed docs, in both engines.
         coalesce(col("kept_md5"), lit("d41d8cd98f00b204e9800998ecf8427e"))
           .as("kept_md5"))
-      .transform(graft.Present.byNames("doc_id"))
   }
 
   val templateScrubQ = Q(
@@ -3241,7 +3206,6 @@ object Dedup {
           countDistinct("source").as("n_sources"),
           expr("min_by(source, doc_id)").as("rep_source"))
         .withColumn("cross_source", col("n_sources") >= 2)
-        .transform(graft.Present.byNames("cluster_rep"))
     },
     Some(s"""WITH RECURSIVE $minhashOracleCtes,
             pairs AS (
@@ -3330,7 +3294,6 @@ object Dedup {
         (col("ddf") * col("resident_docs") >=
           lit(ratio.toLong) * coalesce(col("rdf"), lit(0L)) * col("delta_docs"))
           .as("emerging"))
-      .transform(graft.Present.by(desc("delta_df"), col("sh_h")))
   }
 
   /** d28's oracle CTE chain, ending in relation `d28_rows(sh_h,
@@ -3552,7 +3515,6 @@ object Dedup {
         coalesce(col("clean_digest"), md5(lit(""))).as("clean_digest"))
       .withColumn("drop_frac",
         round(safeFrac(col("n_dropped"), col("n_dedupable")), 6))
-      .transform(graft.Present.byNames("doc_id"))
   }
 
   val cdcDedupQ = Q(
@@ -3627,7 +3589,6 @@ object Dedup {
       .filter(col("n_docs") >= 2)
       .select(col("chunk"), col("n_occ"), col("n_docs"), col("n_sources"),
         (col("n_sources") >= 2).as("cross_source"))
-      .transform(graft.Present.by(col("n_occ").desc, col("chunk")))
   }
 
   val hotChunksQ = Q(
@@ -3700,7 +3661,6 @@ object Dedup {
         expr("tokens_soft_micro div 1000000L").as("tokens_effective"),
         round(safeFrac(col("tokens_soft_micro"),
           col("tokens_raw") * lit(1000000L)), 6).as("soft_frac"))
-      .transform(graft.Present.byNames("source"))
   }
 
   val softDedupQ = Q(
@@ -3823,7 +3783,6 @@ object Dedup {
         coalesce(col("nm"), lit(0L)).as("n_matches"),
         col("best_match"), col("best_jaccard"),
         (coalesce(col("nm"), lit(0L)) === 0L).as("admit"))
-      .transform(graft.Present.byNames("doc_id"))
   }
 
   // Oracle equivalence rides the same xxhash64-bucket ≡ exact-band-
@@ -3953,7 +3912,6 @@ object Dedup {
         .select(col("df_cap"),
           coalesce(col("nc"), lit(0L)).as("n_candidates"),
           coalesce(col("np"), lit(0L)).as("n_pairs"))
-        .transform(graft.Present.byNames("df_cap"))
   }
 
   val capCurve = Q(
@@ -4064,7 +4022,6 @@ object Dedup {
           round(graft.functions.TextFns.safeFrac(
             coalesce(element_at(col("ah"), col("i") + 1), lit(0L)),
             col("n_truth")), 6).as("recall"))
-        .transform(graft.Present.byNames("n_bands"))
   }
 
   /** d34 over an arbitrary corpus (SkewRehearsal's hot-bucket corpora and
@@ -4175,13 +4132,13 @@ object Dedup {
         sh.filter(col("doc_id") % 19 === 0)
           .select(col("doc_id").as("eval_doc"), col("sh_h")),
         ShingleDfCap), n)
-    }.reduce(_ unionAll _).transform(graft.Present.byNames("ngram_n"))
+    }.reduce(_ unionAll _)
 
   val contamCurve = Q(
     "d35_contam_ngram_curve",
     (s, d) => {
       Seq(5, 3, 8).map(n => contamCurveRow(contamSplitPairs(s, d, n), n))
-        .reduce(_ unionAll _).transform(graft.Present.byNames("ngram_n"))
+        .reduce(_ unionAll _)
     },
     Some {
       // One qualified-pair block per n, mirroring the d09 oracle (df-cap
@@ -4435,7 +4392,6 @@ object Dedup {
         .withColumn("token_reclaim_frac",
           round(lit(1.0) - graft.functions.TextFns.safeFrac(
             col("tokens_kept"), col("tokens_raw")), 6))
-        .transform(graft.Present.byNames("source"))
     },
     Some(s"""WITH RECURSIVE $minhashOracleCtes,
             pairs AS (
@@ -4510,7 +4466,6 @@ object Dedup {
         rowOf("sigs", corpusSigs(s, d)),
         rowOf("verified", corpusVerifiedPairs(s, d)))
         .reduce(_ unionAll _)
-        .transform(graft.Present.byNames("artifact"))
     },
     Some(s"""WITH RECURSIVE $minhashOracleCtes,
             dfq AS (SELECT shingle, count(*) AS df FROM sh GROUP BY shingle),

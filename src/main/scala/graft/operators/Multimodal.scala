@@ -106,8 +106,7 @@ object Multimodal {
           octet_length(col("payload")).cast("long").as("n_bytes"),
           md5(col("payload")).as("payload_md5"),
           expr("CAST(greatest(1, octet_length(payload) % 64) AS BIGINT)").as("width"),
-          expr("CAST(greatest(1, (octet_length(payload) div 64) % 64) AS BIGINT)").as("height"))
-        .transform(graft.Present.byNames("doc_id")),
+          expr("CAST(greatest(1, (octet_length(payload) div 64) % 64) AS BIGINT)").as("height")),
     Some("""SELECT doc_id, 'image/stub' AS media_type,
             CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
             md5(text) AS payload_md5,
@@ -128,8 +127,7 @@ object Multimodal {
         .agg(
           count(lit(1)).as("n_media"),
           round(avg("mean_intensity"), 4).as("avg_intensity"),
-          round(avg("n_bytes"), 4).as("avg_bytes"))
-        .transform(graft.Present.byNames("media_type")),
+          round(avg("n_bytes"), 4).as("avg_bytes")),
     Some("""WITH chars AS (
               SELECT doc_id, ord(substr(text, CAST(i AS INT), 1)) AS b
               FROM documents, UNNEST(range(1, length(text) + 1)) AS r(i)),
@@ -170,8 +168,7 @@ object Multimodal {
           col("text"))
         .select(
           col("doc_id"), col("frame_idx").cast("long").as("frame_idx"),
-          md5(col("text").substr(col("frame_idx") * lit(64) + lit(1), lit(64))).as("frame_md5"))
-        .transform(graft.Present.byNames("doc_id", "frame_idx")),
+          md5(col("text").substr(col("frame_idx") * lit(64) + lit(1), lit(64))).as("frame_md5")),
     Some("""SELECT doc_id, frame_idx,
                    md5(substr(text, CAST(frame_idx * 64 + 1 AS INT), 64)) AS frame_md5
             FROM (SELECT doc_id, text,
@@ -215,8 +212,7 @@ object Multimodal {
   val mediaResize = Q(
     "m04_media_resize",
     (s, d) =>
-      resizeStride(mediaTable(s, d), 4).toDF()
-        .transform(graft.Present.byNames("doc_id")),
+      resizeStride(mediaTable(s, d), 4).toDF(),
     Some("""WITH chars AS (
               SELECT doc_id, i, substr(text, CAST(i AS INT), 1) AS c
               FROM documents, UNNEST(range(1, length(text) + 1)) r(i)
@@ -253,8 +249,7 @@ object Multimodal {
           col("text"))
         .select(
           col("doc_id"), col("start").cast("long").as("start"),
-          round(expr("byte_energy(substr(text, start, 32))"), 6).as("energy"))
-        .transform(graft.Present.byNames("doc_id", "start")),
+          round(expr("byte_energy(substr(text, start, 32))"), 6).as("energy")),
     Some("""WITH chars AS (
               SELECT doc_id, i, ord(substr(text, CAST(i AS INT), 1)) AS b
               FROM documents, UNNEST(range(1, length(text) + 1)) AS r(i)),
@@ -337,7 +332,6 @@ object Multimodal {
         bit_count(col("x.ph").bitwiseXOR(col("y.ph"))).cast("long").as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxDist)
-      .transform(graft.Present.byNames("a", "b"))
   }
 
   /** m06's oracle pipeline (stub blockhash from documents.text bytes →
@@ -416,7 +410,6 @@ object Multimodal {
         sum(when(col("jump") > minJump, 1L).otherwise(0L)).as("n_cuts"),
         min(when(col("jump") > minJump, col("start"))).as("first_cut"),
         round(max(col("jump")), 6).as("max_jump"))
-      .transform(graft.Present.byNames("doc_id"))
   }
 
   val scenes = Q(
@@ -487,7 +480,6 @@ object Multimodal {
         // differently from IEEE doubles; the q28 lesson).
         round(sum(when(col("voiced"), 1L).otherwise(0L)).cast("double")
           / count(lit(1)).cast("double"), 6).as("voiced_frac"))
-      .transform(graft.Present.byNames("doc_id"))
   }
 
   val voiced = Q(
@@ -566,7 +558,6 @@ object Multimodal {
         expr(s"(cum_bytes - 1) div $shardBytes").as("shard_last"),
         expr(s"(cum_bytes - n_bytes) % $shardBytes").as("offset_in_shard"))
       .withColumn("n_shards", col("shard_last") - col("shard_first") + 1)
-      .transform(graft.Present.byNames("media_type", "doc_id"))
   }
 
   val shardManifestQ = Q(
@@ -618,7 +609,6 @@ object Multimodal {
         sum("bytes_in_shard").as("resident_bytes"))
       .withColumn("fill_ratio",
         round(col("resident_bytes").cast("double") / lit(shardBytes.toDouble), 6))
-      .transform(graft.Present.byNames("media_type", "shard"))
   }
 
   val shardFillQ = Q(
@@ -704,7 +694,6 @@ object Multimodal {
     sigs.filter(col("doc_id") % 19 =!= 0)
       .select(col("doc_id"), lit(null).cast("long").as("min_hamming"),
         lit(0L).as("n_eval_matches"), lit(false).as("flagged"))
-      .transform(graft.Present.byNames("doc_id"))
 
   def mediaDecontaminate(media: Dataset[MediaRecord], maxDist: Int,
       inlineEvalBound: Int = MaxInlineEval,
@@ -743,7 +732,6 @@ object Multimodal {
         size(filter(col("hams"),
           h => h <= lit(maxDist.toLong))).cast("long").as("n_eval_matches"))
       .withColumn("flagged", col("min_hamming") <= maxDist)
-      .transform(graft.Present.byNames("doc_id"))
 
   /** The array-literal variant of [[mediaDecontaminate]] — same output,
     * different compilation story. The inline path unrolls one
@@ -887,7 +875,6 @@ object Multimodal {
       .select(col("label").as("cluster_rep"), col("cluster_size"),
         (col("within_edges") + coalesce(col("cross_edges"), lit(0L))).as("n_edges"),
         coalesce(col("cross_max"), lit(0L)).as("max_edge_hamming"))
-      .transform(graft.Present.byNames("cluster_rep"))
   }
 
   val mediaClusters = Q(
@@ -950,7 +937,6 @@ object Multimodal {
         col("n_symbols"),
         round(col("entropy_micro").cast("double") / 1e6, 6).as("entropy"),
         (col("entropy_micro") <= col("cut")).as("flat_payload"))
-      .transform(graft.Present.byNames("doc_id"))
   }
 
   /** m13's doc-grain half: (doc_id, media_type, n_bytes, n_symbols,
@@ -1088,7 +1074,6 @@ object Multimodal {
           .select("doc_id", "shard_first", "shard_last", "offset_in_shard",
             "n_shards"),
         Seq("doc_id"), "left")
-      .transform(graft.Present.byNames("doc_id"))
   }
 
   val mediaPipelineQ = Q(
@@ -1195,7 +1180,6 @@ object Multimodal {
           .as("media_frac"),
         round((col("text_tokens") + col("media_tokens")).cast("double") /
           lit(window.toDouble), 6).as("fill_ratio"))
-      .transform(graft.Present.byNames("window_id"))
   }
 
   val interleavePackQ = Q(
@@ -1328,7 +1312,6 @@ object Multimodal {
         coalesce(col("bytes_stored"), lit(0L)).as("bytes_stored"),
         round(lit(1.0) - coalesce(col("bytes_stored"), lit(0L)).cast("double") /
           col("bytes_raw").cast("double"), 6).as("reclaim_frac"))
-      .transform(graft.Present.byNames("source"))
   }
 
   // ------------------------------- symbol-class source profile (m17)
@@ -1393,7 +1376,6 @@ object Multimodal {
           col("n_letters"),
           col("n_letters") + col("n_digits") + col("n_spaces")), 6)
           .as("letter_frac"))
-      .transform(graft.Present.byNames("source"))
 
   val all: Seq[Q] =
     Seq(mediaMeta, mediaFeatures, frameSample, mediaResize, frameEnergy, mediaNeardup,

@@ -84,7 +84,6 @@ object Pipeline {
         when(col("disposition") === "kept",
           expr(s"(cum_tokens - 1) div $budget")).otherwise(-1L)
           .as("seq_last"))
-      .transform(graft.Present.byNames("doc_id"))
   }
 
   val pipeline = Q(
@@ -180,7 +179,6 @@ object Pipeline {
           .otherwise(-1L).as("seq_first"),
         when(col("sampled"), expr(s"(cum_tokens - 1) div $budget"))
           .otherwise(-1L).as("seq_last"))
-      .transform(graft.Present.byNames("doc_id"))
   }
 
   val mix = Q(
@@ -302,7 +300,6 @@ object Pipeline {
         coalesce(col("max_cos"), lit(0.0)).as("sem_cos"),
         col("n_hits"), col("flags"))
       .withColumn("releasable", col("flags") === 0L)
-      .transform(graft.Present.byNames("doc_id"))
   }
 
   val audit = Q(
@@ -398,7 +395,6 @@ object Pipeline {
         expr(s"(cum_tokens - n_tokens) div $budget").as("seq_first"),
         expr(s"(cum_tokens - 1) div $budget").as("seq_last"))
       .withColumn("n_seqs", col("seq_last") - col("seq_first") + 1)
-      .transform(graft.Present.byNames("shuffle_key", "doc_id"))
   }
 
   val epoch = Q(
@@ -472,7 +468,6 @@ object Pipeline {
         expr(s"(cum_tokens - 1) div $budget").as("seq_last"),
         expr(s"(cum_tokens - n_tokens) % $budget").as("offset_in_seq"))
       .withColumn("n_seqs", col("seq_last") - col("seq_first") + 1)
-      .transform(graft.Present.byNames("doc_id"))
   }
 
   val refresh = Q(
@@ -540,7 +535,6 @@ object Pipeline {
       round(sqrt(safeFrac(col("min_raw"), col("raw_tokens"))), 6).as("raw_rate"),
       round(sqrt(safeFrac(col("min_dedup"), col("dedup_tokens"))), 6).as("dedup_rate"))
       .withColumn("rate_shift", round(col("dedup_rate") - col("raw_rate"), 6))
-      .transform(graft.Present.byNames("source"))
   }
 
   val dedupMix = Q(
@@ -658,7 +652,6 @@ object Pipeline {
         sum(when(col("unique_keep"), 1L).otherwise(0L)).as("n_unique"))
       .withColumn("survival_rate",
         round(safeFrac(col("n_unique"), col("n_raw")), 6))
-      .transform(graft.Present.byNames("source"))
 
   val funnel = Q(
     "p07_survival_funnel",
@@ -740,7 +733,6 @@ object Pipeline {
         round(rate, 6).as("rate"),
         round(col("src_tokens").cast("double") * round(rate, 6)).cast("long")
           .as("expected_tokens"))
-      .transform(graft.Present.byNames("epoch", "source"))
   }
 
   val curriculum = Q(
@@ -827,7 +819,6 @@ object Pipeline {
            'gate_pass_rate', round(CAST(n_gate_pass AS DOUBLE) / NULLIF(CAST(n_docs AS DOUBLE), 0.0D), 6),
            'blocklist_clean_rate', round(CAST(n_clean AS DOUBLE) / NULLIF(CAST(n_docs AS DOUBLE), 0.0D), 6)
          ) AS (metric, value)"""))
-      .transform(graft.Present.byNames("metric"))
   }
 
   val card = Q(
@@ -935,7 +926,6 @@ object Pipeline {
         round(sum(abs(col("pos_a") - col("pos_b"))).cast("double")
           / count(lit(1)).cast("double"), 6).as("mean_abs_shift"),
         max(abs(col("pos_a") - col("pos_b"))).as("max_abs_shift"))
-      .transform(graft.Present.byNames("source"))
   }
 
   val seedAudit = Q(
@@ -1009,7 +999,6 @@ object Pipeline {
         sum(when(col("unique_keep"), col("n_tokens")).otherwise(0L)).as("unique_tokens"))
       .withColumn("token_survival",
         round(safeFrac(col("unique_tokens"), col("raw_tokens")), 6))
-      .transform(graft.Present.byNames("source"))
 
   val tokenFunnelQ = Q(
     "p11_token_funnel",
@@ -1100,7 +1089,6 @@ object Pipeline {
         min(when(col("selected"), -col("neg_score"))).as("cutoff_score"))
       .withColumn("fill_frac",
         round(safeFrac(col("selected_tokens"), col("budget_tokens")), 6))
-      .transform(graft.Present.byNames("source"))
   }
 
   val budgetFillQ = Q(
@@ -1328,7 +1316,6 @@ object Pipeline {
     combos.join(totals, Seq("source"))
       .select(col("source"), col("gates"), col("n_docs"),
         round(safeFrac(col("n_docs"), col("n_source")), 6).as("share"))
-      .transform(graft.Present.byNames("source", "gates"))
   }
 
   val gateAttributionQ = Q(
@@ -1445,7 +1432,6 @@ object Pipeline {
           .as("churn"),
         (col("n_churned") * col("g_total") > col("g_churned") * col("n_total"))
           .as("heavy_churn"))
-      .transform(graft.Present.byNames("source"))
   }
 
   private val churnFpSql =
@@ -1557,7 +1543,6 @@ object Pipeline {
         round((col("n_docs") - col("n_contents")).cast("double") /
           col("n_docs").cast("double"), 6).as("dup_frac"),
         col("content_xor60"))
-      .transform(graft.Present.byNames("source"))
   }
 
   val releaseFingerprintQ = Q(
@@ -1656,7 +1641,6 @@ object Pipeline {
         round(safeFrac(col("w_nano"), col("w_tot")), 6).as("new_share"),
         round(safeFrac(col("w_nano"), col("w_tot")) - col("base_share"), 6)
           .as("shift"))
-      .transform(graft.Present.byNames("source"))
   }
 
   val mixReweightQ = Q(

@@ -91,8 +91,7 @@ object RangeJoin {
       proximityPairs(
         Tables.events(s, d).select("event_id", "ts"),
         "event_id", "ts", radiusMicros = 5000000L)
-        .select(col("a").as("a_id"), col("b").as("b_id"), col("dt_us"))
-        .transform(graft.Present.byNames("a_id", "b_id")),
+        .select(col("a").as("a_id"), col("b").as("b_id"), col("dt_us")),
     Some("""SELECT a.event_id AS a_id, b.event_id AS b_id,
                    epoch_us(b.ts) - epoch_us(a.ts) AS dt_us
             FROM events a JOIN events b

@@ -29,8 +29,7 @@ object Relational {
           // No round(): both engines do the identical IEEE double multiply,
           // so raw values match bit-for-bit, while round() semantics differ
           // (Spark rounds the shortest decimal repr, DuckDB the raw binary).
-          (col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("net_price"))
-        .transform(graft.Present.byNames("l_orderkey", "l_linenumber")),
+          (col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("net_price")),
     Some("""SELECT l_orderkey, l_linenumber,
             l_extendedprice * (1.0 - l_discount) AS net_price
             FROM lineitem WHERE l_shipdate >= TIMESTAMP '2000-01-01'
@@ -53,8 +52,7 @@ object Relational {
           round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2).as("sum_disc_price"),
           round(avg("l_quantity"), 4).as("avg_qty"),
           round(avg("l_discount"), 4).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-        .transform(graft.Present.byNames("l_returnflag", "l_linestatus")),
+          count(lit(1)).as("count_order")),
     Some("""SELECT l_returnflag, l_linestatus,
             round(sum(l_quantity), 2) AS sum_qty,
             round(sum(l_extendedprice), 2) AS sum_base_price,
@@ -78,8 +76,7 @@ object Relational {
         .groupBy("c_mktsegment")
         .agg(
           count(lit(1)).as("n_orders"),
-          round(sum("o_totalprice"), 2).as("revenue"))
-        .transform(graft.Present.byNames("c_mktsegment")),
+          round(sum("o_totalprice"), 2).as("revenue")),
     Some("""SELECT c_mktsegment, count(*) AS n_orders,
             round(sum(o_totalprice), 2) AS revenue
             FROM orders JOIN customer ON o_custkey = c_custkey
@@ -98,8 +95,7 @@ object Relational {
         .groupBy("p_brand")
         .agg(
           count(lit(1)).as("n_items"),
-          round(sum("l_quantity"), 2).as("total_qty"))
-        .transform(graft.Present.byNames("p_brand")),
+          round(sum("l_quantity"), 2).as("total_qty")),
     Some("""SELECT p_brand, count(*) AS n_items,
             round(sum(l_quantity), 2) AS total_qty
             FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -130,7 +126,6 @@ object Relational {
         .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
         .groupBy("n_name")
         .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2).as("revenue"))
-        .transform(graft.Present.by(col("revenue").desc, col("n_name")))
     },
     Some("""SELECT n_name,
             round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
@@ -176,7 +171,6 @@ object Relational {
         .withColumn("rn", row_number().over(w).cast("long"))
         .filter(col("rn") <= 3)
         .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
-        .orderBy("o_custkey", "rn")
     },
     Some("""SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
               SELECT o_custkey, o_orderkey, o_totalprice,
@@ -195,8 +189,7 @@ object Relational {
         .groupBy("l_returnflag")
         .agg(
           countDistinct("l_partkey").as("n_parts"),
-          count(lit(1)).as("n_rows"))
-        .transform(graft.Present.byNames("l_returnflag")),
+          count(lit(1)).as("n_rows")),
     Some("""SELECT l_returnflag,
             CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_parts,
             count(*) AS n_rows
@@ -217,7 +210,6 @@ object Relational {
       withUrgent.unionAll(without)
         .groupBy("c_mktsegment", "bucket")
         .agg(count(lit(1)).as("n_customers"))
-        .transform(graft.Present.byNames("c_mktsegment", "bucket"))
     },
     Some("""WITH u AS (SELECT DISTINCT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT')
             SELECT c_mktsegment, bucket, count(*) AS n_customers FROM (
@@ -236,10 +228,7 @@ object Relational {
         .rollup("o_orderstatus", "o_orderpriority")
         .agg(
           count(lit(1)).as("n_orders"),
-          round(sum("o_totalprice"), 2).as("revenue"))
-        .transform(graft.Present.by(
-          col("o_orderstatus").asc_nulls_first,
-          col("o_orderpriority").asc_nulls_first)),
+          round(sum("o_totalprice"), 2).as("revenue")),
     Some("""SELECT o_orderstatus, o_orderpriority, count(*) AS n_orders,
             round(sum(o_totalprice), 2) AS revenue
             FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
@@ -257,8 +246,7 @@ object Relational {
           col("event_type"))
         .agg(
           count(lit(1)).as("n_events"),
-          round(sum("value"), 2).as("total_value"))
-        .transform(graft.Present.byNames("hour", "event_type")),
+          round(sum("value"), 2).as("total_value")),
     Some("""SELECT date_trunc('hour', ts) AS hour, event_type,
             count(*) AS n_events, round(sum(value), 2) AS total_value
             FROM events GROUP BY 1, 2 ORDER BY hour, event_type"""))
@@ -284,7 +272,6 @@ object Relational {
         .agg(
           count(lit(1)).as("n_events"),
           round(sum("value"), 2).as("session_value"))
-        .transform(graft.Present.byNames("user_id", "session_id"))
     },
     Some("""WITH g AS (
               SELECT user_id, ts, event_id, value,
@@ -311,8 +298,7 @@ object Relational {
         .agg(
           countDistinct("user_id").as("n_users"),
           count(lit(1)).as("n_events"),
-          round(sum("value"), 2).as("total_value"))
-        .transform(graft.Present.byNames("day")),
+          round(sum("value"), 2).as("total_value")),
     Some("""SELECT date_trunc('day', ts) AS day,
             CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
             count(*) AS n_events, round(sum(value), 2) AS total_value
@@ -334,8 +320,7 @@ object Relational {
           count(lit(1)).as("n"),
           round(avg("k_val"), 4).as("avg_k"),
           min("k_val").as("min_k"),
-          max("k_val").as("max_k"))
-        .transform(graft.Present.byNames("event_type")),
+          max("k_val").as("max_k")),
     Some("""SELECT event_type, count(*) AS n,
             round(avg(k_val), 4) AS avg_k,
             min(k_val) AS min_k, max(k_val) AS max_k
@@ -367,8 +352,7 @@ object Relational {
           approx_count_distinct("l_partkey", 0.02).as("approx_parts"),
           // count(col), not count(*): countDistinct excluded NULL keys,
           // and a NULL l_partkey survives the distinct as its own row.
-          count(col("l_partkey")).as("exact_parts"))
-        .transform(graft.Present.byNames("l_returnflag")),
+          count(col("l_partkey")).as("exact_parts")),
     None)
 
   /** Set operations (INTERSECT / EXCEPT — distinct set semantics). Both
@@ -385,7 +369,7 @@ object Relational {
       val noEvents = custKeys
         .except(Tables.events(s, d).select(col("user_id").as("k")))
         .select(lit("no_events").as("tag"), col("k"))
-      activeBuyers.unionAll(noEvents).transform(graft.Present.byNames("tag", "k"))
+      activeBuyers.unionAll(noEvents)
     },
     Some("""SELECT 'active_buyer' AS tag, k FROM
               (SELECT c_custkey AS k FROM customer
@@ -416,8 +400,7 @@ object Relational {
           col("gid"),
           coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
           coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
-          col("n_orders"), col("total_price"))
-        .transform(graft.Present.byNames("gid", "status", "priority")),
+          col("n_orders"), col("total_price")),
     Some("""SELECT CAST(grouping(o_orderstatus, o_orderpriority) AS BIGINT) AS gid,
                    coalesce(o_orderstatus, 'ALL') AS status,
                    coalesce(o_orderpriority, 'ALL') AS priority,
@@ -443,8 +426,7 @@ object Relational {
           col("l_returnflag"),
           round(element_at(col("ps"), 1), 4).as("p25"),
           round(element_at(col("ps"), 2), 4).as("p50"),
-          round(element_at(col("ps"), 3), 4).as("p90"))
-        .transform(graft.Present.byNames("l_returnflag")),
+          round(element_at(col("ps"), 3), 4).as("p90")),
     Some("""SELECT l_returnflag,
                    round(qs[1], 4) AS p25, round(qs[2], 4) AS p50, round(qs[3], 4) AS p90
             FROM (SELECT l_returnflag,
@@ -468,8 +450,7 @@ object Relational {
           col("o_orderpriority"),
           coalesce(col("F"), lit(0L)).as("n_f"),
           coalesce(col("O"), lit(0L)).as("n_o"),
-          coalesce(col("P"), lit(0L)).as("n_p"))
-        .transform(graft.Present.byNames("o_orderpriority")),
+          coalesce(col("P"), lit(0L)).as("n_p")),
     Some("""SELECT o_orderpriority,
                    count(*) FILTER (WHERE o_orderstatus = 'F') AS n_f,
                    count(*) FILTER (WHERE o_orderstatus = 'O') AS n_o,
@@ -492,8 +473,7 @@ object Relational {
         .join(broadcast(Tables.customer(s, d)), col("user_id") === col("c_custkey"))
         .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
         .groupBy("n_name", "event_type")
-        .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("total_value"))
-        .transform(graft.Present.byNames("n_name", "event_type")),
+        .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("total_value")),
     Some("""SELECT n_name, event_type, count(*) AS n_events,
                    round(sum(value), 2) AS total_value
             FROM events
@@ -521,8 +501,7 @@ object Relational {
         .agg(
           max_by(col("event_id"), struct(col("ts"), col("event_id"))).as("last_event_id"),
           max(col("ts")).as("last_ts"),
-          max_by(col("value"), struct(col("ts"), col("event_id"))).as("last_value"))
-        .transform(graft.Present.byNames("user_id", "event_type")),
+          max_by(col("value"), struct(col("ts"), col("event_id"))).as("last_value")),
     Some("""SELECT user_id, event_type,
                    event_id AS last_event_id, ts AS last_ts, value AS last_value
             FROM (SELECT *, row_number() OVER (PARTITION BY user_id, event_type
@@ -550,7 +529,6 @@ object Relational {
             .when(col("c_custkey").isNull, lit("unknown_user"))
             .otherwise(lit("active")).as("status"),
           coalesce(col("n_events"), lit(0L)).as("n_events"))
-        .transform(graft.Present.byNames("cust"))
     },
     Some("""SELECT coalesce(c_custkey, user_id) AS cust,
                    CASE WHEN user_id IS NULL THEN 'no_events'
@@ -581,8 +559,7 @@ object Relational {
           col("l_returnflag"),
           element_at(col("ps"), 1).as("p25"),
           element_at(col("ps"), 2).as("p50"),
-          element_at(col("ps"), 3).as("p90"))
-        .transform(graft.Present.byNames("l_returnflag")),
+          element_at(col("ps"), 3).as("p90")),
     None)
 
   /** Funnel conversion over the event stream: per user, purchases that
@@ -619,7 +596,6 @@ object Relational {
           sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("n_purchases"),
           sum(when(isConv, 1L).otherwise(0L)).as("n_converted"))
         .withColumn("converted", col("n_converted") > 0)
-        .transform(graft.Present.byNames("user_id"))
     },
     Some("""WITH staged AS (
               SELECT user_id, event_type, epoch_us(ts) AS us,
@@ -663,7 +639,6 @@ object Relational {
         .distinct()
         .groupBy("cohort_day", "week_offset")
         .agg(count(lit(1)).as("n_active"))
-        .transform(graft.Present.byNames("cohort_day", "week_offset"))
     },
     Some("""WITH ev AS (
               SELECT user_id, date_trunc('day', ts) AS day FROM events),
@@ -721,7 +696,6 @@ object Relational {
             .otherwise(-1L).as("click_id"),
           when(attributed, col("us") - col("lc").getField("us"))
             .otherwise(-1L).as("gap_us"))
-        .transform(graft.Present.byNames("event_id"))
     },
     Some("""WITH ev AS (
               SELECT user_id, event_id, event_type, epoch_us(ts) AS us
@@ -773,7 +747,6 @@ object Relational {
         .withColumn("n_from_total", sum("n_transitions").over(wFrom))
         .withColumn("p_micro",
           expr("n_transitions * 1000000L div n_from_total"))
-        .transform(graft.Present.byNames("from_type", "to_type"))
     },
     Some("""WITH seq AS (
               SELECT user_id, event_type,
@@ -845,7 +818,6 @@ object Relational {
           col("r_score"), col("f_score"), col("m_score"),
           concat(col("r_score").cast("string"), col("f_score").cast("string"),
             col("m_score").cast("string")).as("segment"))
-        .transform(graft.Present.byNames("user_id"))
     },
     Some("""WITH pu AS (
               SELECT user_id, max(epoch_us(ts)) AS r_us,
@@ -916,7 +888,7 @@ object Relational {
 
   val q37 = Q(
     "q37_scd2_history",
-    (s, d) => scd2History(Tables.events(s, d)).transform(graft.Present.byNames("user_id", "version")),
+    (s, d) => scd2History(Tables.events(s, d)),
     Some("""WITH marked AS (
               SELECT user_id, event_type, ts, event_id,
                 lag(event_type) OVER (PARTITION BY user_id
@@ -969,8 +941,7 @@ object Relational {
           col("gid"),
           coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
           coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
-          col("n_orders"), col("revenue"))
-        .transform(graft.Present.byNames("gid", "status", "priority")),
+          col("n_orders"), col("revenue")),
     Some("""SELECT CAST(grouping(o_orderstatus, o_orderpriority) AS BIGINT) AS gid,
                    coalesce(o_orderstatus, 'ALL') AS status,
                    coalesce(o_orderpriority, 'ALL') AS priority,
@@ -995,7 +966,7 @@ object Relational {
     * Scale shape: one keyed count with map-side partials (output =
     * key-cardinality), one 1-row aggregate attached by cross join —
     * deliberately NO rank window (the plan-audit gate bans unpartitioned
-    * windows; the ordering is presentation, the flag is the decision). */
+    * windows; the result is unordered, the flag is the decision). */
   def keySkewProfile(df: org.apache.spark.sql.DataFrame, keyCol: String,
       hotShare: Double): org.apache.spark.sql.DataFrame = {
     val counts = df.groupBy(keyCol).agg(count(lit(1)).as("n_rows"))
@@ -1011,7 +982,6 @@ object Relational {
           .as("vs_hottest"),
         (col("n_rows").cast("double") / col("n_total").cast("double") >= hotShare)
           .as("is_hot"))
-      .transform(graft.Present.by(desc("n_rows"), col(keyCol)))
   }
 
   val q38 = Q(
@@ -1078,7 +1048,6 @@ object Relational {
         .withColumn("z", expr(zExpr))
         .withColumn("is_spike", coalesce(abs(col("z")) >= 3.0, lit(false)))
         .select("hour", "event_type", "n_events", "n_base", "z", "is_spike")
-        .transform(graft.Present.byNames("hour", "event_type"))
     },
     Some("""WITH hourly AS (
               SELECT date_trunc('hour', ts) AS hour, event_type,
@@ -1158,7 +1127,6 @@ object Relational {
           col("dau"), col("wau"), col("mau"),
           round(col("dau").cast("double") / col("mau").cast("double"), 6)
             .as("stickiness"))
-        .transform(graft.Present.byNames("day"))
     },
     Some("""WITH ud AS (
               SELECT DISTINCT CAST(ts AS DATE) AS aday, user_id FROM events),
@@ -1239,7 +1207,6 @@ object Relational {
           col("n_users"),
           round(col("n_users").cast("double") / col("n_viewers").cast("double"), 6)
             .as("share"))
-        .transform(graft.Present.byNames("bucket_id"))
     },
     Some("""WITH staged AS (
               SELECT user_id, event_type, epoch_us(ts) AS us,
@@ -1408,7 +1375,6 @@ object Relational {
         (coalesce(col("rc"), lit(0L)) + coalesce(col("dc"), lit(0L)))
           .as("count_rows"),
         coalesce(col("dc"), lit(0L)).as("n_delta_rows"))
-      .transform(graft.Present.byNames("l_returnflag", "l_linestatus"))
   }
 
   /** q43's PRODUCTION refresh path: fold a delta's rows into an
@@ -1500,7 +1466,6 @@ object Relational {
         round(graft.functions.TextFns.safeFrac(
           col("n_violations"), col("n_checked")), 6)
           .as("violation_rate"))
-      .transform(graft.Present.byNames("check"))
   }
 
   val q44 = Q(
@@ -1591,7 +1556,6 @@ object Relational {
           col("version").as("state_version"),
           (col("state").isNotNull && col("ts") < col("valid_to"))
             .as("in_history"))
-        .transform(graft.Present.byNames("event_id"))
     },
     Some("""WITH nev AS (
               SELECT user_id, event_type, ts, event_id FROM events
@@ -1685,7 +1649,6 @@ object Relational {
           .when(expr("((now_us - last_us) div 1000) * (n_purchases - 1)" +
             " <= 2 * ((last_us - first_us) div 1000)"), lit("cooling"))
           .otherwise(lit("at_risk")).as("band"))
-      .transform(graft.Present.byNames("user_id"))
 
   def purchaseCadence(ev: DataFrame): DataFrame = {
       val perU = ev.filter(col("event_type") === "purchase")
@@ -1777,7 +1740,6 @@ object Relational {
         col("n_items"),
         round(col("n_items").cast("double") /
           col("n_priority").cast("double"), 6).as("share"))
-      .transform(graft.Present.byNames("priority", "band_id"))
   }
 
   val q47 = Q(
@@ -1886,7 +1848,6 @@ object Relational {
             .as("gini"),
           round(col("top_cents").cast("double") / col("total_cents").cast("double"), 6)
             .as("top10_share"))
-        .transform(graft.Present.byNames("segment"))
     },
     Some("""WITH o AS (
               SELECT c.c_mktsegment AS segment,
@@ -1960,7 +1921,6 @@ object Relational {
           col("n_gaps"),
           round(col("n_gaps").cast("double") /
             col("n_total").cast("double"), 6).as("share"))
-        .transform(graft.Present.byNames("band_id"))
     },
     Some("""WITH p AS (
               SELECT user_id, epoch_us(ts) AS us, event_id

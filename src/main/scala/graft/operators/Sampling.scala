@@ -37,8 +37,7 @@ object Sampling {
       Tables.documents(s, d)
         .withColumn("bucket", hashBucket(col("doc_id")))
         .filter(col("bucket") < 10)
-        .select(col("doc_id"), col("lang"), col("n_chars"), col("bucket"))
-        .transform(graft.Present.byNames("doc_id")),
+        .select(col("doc_id"), col("lang"), col("n_chars"), col("bucket")),
     Some(s"""SELECT doc_id, lang, n_chars, $bucketSql AS bucket
              FROM documents
              WHERE $bucketSql < 10
@@ -56,8 +55,7 @@ object Sampling {
         .filter(col("bucket") <
           when(col("lang") === "en", lit(25)).otherwise(lit(80)))
         .groupBy("lang")
-        .agg(count(lit(1)).as("n_sampled"))
-        .transform(graft.Present.byNames("lang")),
+        .agg(count(lit(1)).as("n_sampled")),
     Some(s"""SELECT lang, count(*) AS n_sampled
              FROM documents
              WHERE $bucketSql < CASE WHEN lang = 'en' THEN 25 ELSE 80 END
@@ -102,7 +100,6 @@ object Sampling {
         .agg(
           count(lit(1)).as("n_emitted"),
           count_distinct(col("doc_id")).as("n_docs"))
-        .transform(graft.Present.byNames("source"))
     },
     Some(s"""WITH weighted AS (
               SELECT doc_id, source,
@@ -173,7 +170,6 @@ object Sampling {
           first("src_tokens").as("src_tokens"),
           round(first("rate"), 6).as("rate"),
           sum("sampled").as("n_sampled"))
-        .transform(graft.Present.byNames("source"))
     },
     Some("""WITH docs AS (
               SELECT doc_id, source,
@@ -231,7 +227,6 @@ object Sampling {
         .withColumn("rank", row_number().over(w).cast("long"))
         .filter(col("rank") <= 10)
         .select(col("doc_id"), col("source"), col("rank"))
-        .transform(graft.Present.byNames("source", "rank"))
     },
     Some("""SELECT doc_id, source, rank FROM (
               SELECT doc_id, source,
@@ -270,7 +265,6 @@ object Sampling {
     survivors.withColumn("rank", row_number().over(w2).cast("long"))
       .filter(col("rank") <= k)
       .select(col("doc_id"), col("source"), col("rank"))
-      .transform(graft.Present.byNames("source", "rank"))
   }
 
   val all: Seq[Q] =

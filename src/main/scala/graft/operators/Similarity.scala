@@ -22,7 +22,7 @@ object Similarity {
 
   /** Exact top-k neighbors for each query vector (qid < nQueries). */
   def bruteForceTopK(spark: SparkSession, d: String, nQueries: Int, k: Int): DataFrame =
-    corpusBruteTopK(spark, d, nQueries, k).transform(graft.Present.byNames("query_id", "rank"))
+    corpusBruteTopK(spark, d, nQueries, k)
 
   // ----------------------------------- embedding artifact session memo
   // The index artifacts below live in `SessionMemo.emb` — the
@@ -131,7 +131,6 @@ object Similarity {
       .select(col("query_id"), col("p.id").as("neighbor_id"),
         round(col("p.score"), 6).as("cos_sim"),
         (col("pos") + 1).cast("long").as("rank"))
-      .transform(graft.Present.byNames("query_id", "rank"))
   }
 
   def bruteForceTopKFrom(e: DataFrame, nQueries: Int, k: Int): DataFrame = {
@@ -242,7 +241,6 @@ object Similarity {
     sims.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), round(col("c"), 6).as("cos_sim"), col("rank"))
-      .transform(graft.Present.byNames("query_id", "rank"))
   }
 
   val annLsh = Q(
@@ -264,8 +262,7 @@ object Similarity {
           count(lit(1)).as("n_vecs"),
           round(avg(sqrt(dot(col("embedding"), col("embedding")))), 6).as("avg_norm"),
           round(min(sqrt(dot(col("embedding"), col("embedding")))), 6).as("min_norm"),
-          round(max(sqrt(dot(col("embedding"), col("embedding")))), 6).as("max_norm"))
-        .transform(graft.Present.byNames("label")),
+          round(max(sqrt(dot(col("embedding"), col("embedding")))), 6).as("max_norm")),
     Some("""SELECT CAST(label AS BIGINT) AS label, count(*) AS n_vecs,
             round(avg(sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[])))), 6) AS avg_norm,
             round(min(sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[])))), 6) AS min_norm,
@@ -631,7 +628,6 @@ object Similarity {
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), round(col("c"), 6).as("cos_sim"),
         col("rank"), (col("neighbor_id") >= split).as("from_delta"))
-      .transform(graft.Present.byNames("query_id", "rank"))
   }
 
   val annAppend = Q(
@@ -685,7 +681,6 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"),
         round(col("c"), 6).as("cos_sim"), col("rank"),
         col("pre").isNull.as("refilled"))
-      .transform(graft.Present.byNames("query_id", "rank"))
   }
 
   val annDelete = Q(
@@ -961,7 +956,6 @@ object Similarity {
       .filter(col("rank") <= topK)
       .select(col("query_id"), col("neighbor_id"),
         round(col("c"), 6).as("cos_sim"), col("rank"))
-      .transform(graft.Present.byNames("query_id", "rank"))
   }
   val annPq = Q(
     "s08_ann_pq",
@@ -1027,7 +1021,6 @@ object Similarity {
         count(lit(1)).as("n_queries"))
       .select(col("method"), col("mean_recall"), col("min_recall"),
         col("n_queries"))
-      .transform(graft.Present.byNames("method"))
   }
 
   val annRecall = Q(
@@ -1055,8 +1048,7 @@ object Similarity {
           count(lit(1)).as("n_vecs"),
           round(avg("mae"), 6).as("avg_mae"),
           round(max("mae"), 6).as("max_mae"),
-          round(max("rmse"), 6).as("max_rmse"))
-        .transform(graft.Present.byNames("label")),
+          round(max("rmse"), 6).as("max_rmse")),
     Some("""WITH s AS (
               SELECT CAST(label AS BIGINT) AS label,
                      CAST(embedding AS DOUBLE[]) AS e,
@@ -1104,7 +1096,6 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"),
         round(cosine(col("qe"), col("ne")), 6).as("cos_sim"))
       .filter(col("cos_sim") >= minSim)
-      .transform(graft.Present.byNames("query_id", "neighbor_id"))
   }
 
   val radius = Q(
@@ -1152,7 +1143,6 @@ object Similarity {
       .filter(col("rank") <= k)
       .select(col("query_id"), col("label").cast("long").as("label"),
         col("neighbor_id"), round(col("c"), 6).as("cos_sim"), col("rank"))
-      .transform(graft.Present.byNames("query_id", "rank"))
   }
 
   val filteredAnn = Q(
@@ -1248,7 +1238,6 @@ object Similarity {
     }.toDF("query_id", "neighbor_id", "cos_sim", "mmr_rank")
       .select(col("query_id"), col("neighbor_id"),
         round(col("cos_sim"), 6).as("cos_sim"), col("mmr_rank"))
-      .transform(graft.Present.byNames("query_id", "mmr_rank"))
   }
 
   val mmr = Q(
@@ -1296,7 +1285,6 @@ object Similarity {
       .agg(sum(when(col("n_label") === col("label"), 1L).otherwise(0L)).as("n_match"))
       .select(col("query_id"), col("label"), col("n_match"),
         round(col("n_match").cast("double") / lit(k.toDouble), 6).as("purity"))
-      .transform(graft.Present.byNames("query_id"))
   }
 
   val knnPurity = Q(
@@ -1361,7 +1349,6 @@ object Similarity {
       .select(col("label"), col("n_label").as("neighbor_label"), col("votes"),
         round(col("votes").cast("double") / col("label_votes").cast("double"), 6)
           .as("share"))
-      .transform(graft.Present.byNames("label", "neighbor_label"))
   }
 
   val knnConfusion = Q(
@@ -1546,7 +1533,6 @@ object Similarity {
           .as("label_share"),
         round(col("cos_sum").cast("double") / (col("n_vecs").cast("double") * 1e6), 6)
           .as("mean_cos"))
-      .transform(graft.Present.byNames("cluster_id"))
   }
 
   /** One round-9-stabilized sanitized cosine between pair columns (the
@@ -1682,7 +1668,6 @@ object Similarity {
         col("mean_resident"), col("mean_delta"), col("shift_micro"),
         coalesce(col("shift_micro") >= col("cut") && col("shift_micro") > 0L,
           lit(false)).as("drifted"))
-      .transform(graft.Present.byNames("dim"))
   }
 
   /** s16's oracle CTE chain, ending in relation `s16_rows(dim,
@@ -1831,7 +1816,6 @@ object Similarity {
         (col("n_probes") > 0L &&
          col("n_probes") * col("st_tot") > col("n_stored") * col("pr_tot"))
           .as("hot_cell"))
-      .transform(graft.Present.byNames("cell"))
   }
 
   val probeBalance = Q(
@@ -2028,7 +2012,6 @@ object Similarity {
           col("delta_cs").cast("double") / (col("n_delta").cast("double") * 1e6)), 6)
           .as("delta_mean_cos"),
         (col("xnum") >= col("xcut")).as("rebalance"))
-      .transform(graft.Present.byNames("cluster_id"))
   }
 
   val populationDrift = Q(
@@ -2220,7 +2203,6 @@ object Similarity {
         col("n_hits"),
         round(safeFrac(col("n_hits"), col("nq") * lit(topK.toLong)), 6)
           .as("recall"))
-      .transform(graft.Present.byNames("nprobe"))
   }
 
   val nprobeCurveQ = Q(
@@ -2354,7 +2336,7 @@ object Similarity {
         (cid, shift, shift < 0.999)
       }
     }
-    rows.toDF("cluster_id", "shift_cos", "retrain").transform(graft.Present.byNames("cluster_id"))
+    rows.toDF("cluster_id", "shift_cos", "retrain")
   }
 
   val retrainShiftQ = Q(

@@ -27,8 +27,7 @@ object TextOps {
     (s, d) =>
       Tables.documents(s, d)
         .filter(lower(col("text")).contains("spark"))
-        .select("doc_id", "text")
-        .transform(graft.Present.byNames("doc_id")),
+        .select("doc_id", "text"),
     Some("""SELECT doc_id, text FROM documents
             WHERE contains(lower(text), 'spark') ORDER BY doc_id"""))
 
@@ -43,8 +42,7 @@ object TextOps {
       Tables.documents(s, d)
         .select(explode(tokens(col("text"))).as("word"))
         .groupBy("word")
-        .agg(count(lit(1)).as("cnt"))
-        .transform(graft.Present.byNames("word")),
+        .agg(count(lit(1)).as("cnt")),
     Some("""SELECT w AS word, count(*) AS cnt FROM (
               SELECT unnest(list_filter(
                 regexp_split_to_array(lower(text), '[^a-z0-9]+'),
@@ -71,8 +69,7 @@ object TextOps {
           size(filter(split(col("text"), "\\s+"), t => t =!= lit(""))).cast("long").as("ws_tokens"),
           size(tokens(col("text"))).cast("long").as("word_tokens"),
           regexp_count(lower(col("text")), lit(BpeIshPattern)).cast("long").as("bpe_ish_tokens"),
-          charClassCount(col("text"), "[^a-zA-Z0-9\\s]").cast("long").as("punct_marks"))
-        .transform(graft.Present.byNames("doc_id")),
+          charClassCount(col("text"), "[^a-zA-Z0-9\\s]").cast("long").as("punct_marks")),
     Some("""SELECT doc_id,
             CAST(len(list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')) AS BIGINT) AS ws_tokens,
             CAST(len(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '')) AS BIGINT) AS word_tokens,
@@ -98,7 +95,6 @@ object TextOps {
           round(
             safeFrac(charClassCount(lower(col("text")), "[a-z]"),
               length(col("text"))), 4).as("alpha_ratio"))
-        .transform(graft.Present.byNames("doc_id"))
     },
     Some("""SELECT doc_id, n_chars_m, n_alpha, n_digit, n_space, n_tokens,
               round(CAST(n_alpha AS DOUBLE) / NULLIF(CAST(n_chars_m AS DOUBLE), 0), 4) AS alpha_ratio
@@ -152,8 +148,7 @@ object TextOps {
     "t05_langid",
     (s, d) =>
       withLangScores(Tables.documents(s, d).select(col("doc_id"), tokens(col("text")).as("toks")))
-        .select("doc_id", "score_en", "score_de", "score_es", "score_fr", "pred_lang")
-        .transform(graft.Present.byNames("doc_id")),
+        .select("doc_id", "score_en", "score_de", "score_es", "score_fr", "pred_lang"),
     Some {
       val en = hitsSql(stopwords("en")); val de = hitsSql(stopwords("de"))
       val es = hitsSql(stopwords("es")); val fr = hitsSql(stopwords("fr"))
@@ -189,7 +184,6 @@ object TextOps {
       scored.withColumn("rank", row_number().over(rankW).cast("long"))
         .filter(col("rank") <= 3)
         .select(col("doc_id"), col("w").as("term"), col("rank"), col("score").as("tfidf"))
-        .transform(graft.Present.byNames("doc_id", "rank"))
     },
     Some("""WITH toks AS (
               SELECT doc_id, unnest(list_filter(
@@ -221,8 +215,7 @@ object TextOps {
       withLangScores(
         Tables.documents(s, d).select(col("doc_id"), col("lang"), tokens(col("text")).as("toks")))
         .groupBy("lang", "pred_lang")
-        .agg(count(lit(1)).as("n_docs"))
-        .transform(graft.Present.byNames("lang", "pred_lang")),
+        .agg(count(lit(1)).as("n_docs")),
     Some(s"""SELECT lang, $predLangSql AS pred_lang, count(*) AS n_docs
              FROM documents
              GROUP BY 1, 2 ORDER BY lang, pred_lang"""))
@@ -236,8 +229,7 @@ object TextOps {
         .select(
           col("doc_id"),
           md5(normText(col("text"))).as("fp"),
-          substring(md5(normText(col("text"))), 1, 4).as("fp_bucket"))
-        .transform(graft.Present.byNames("doc_id")),
+          substring(md5(normText(col("text"))), 1, 4).as("fp_bucket")),
     Some("""SELECT doc_id,
             md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp,
             substr(md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), 1, 4) AS fp_bucket
@@ -255,8 +247,7 @@ object TextOps {
     "t07_winnow_fingerprint",
     (s, d) =>
       Tables.documents(s, d)
-        .select(col("doc_id"), expr("rolling_min_hash(text, 32)").as("winnow_fp"))
-        .transform(graft.Present.byNames("doc_id")),
+        .select(col("doc_id"), expr("rolling_min_hash(text, 32)").as("winnow_fp")),
     Some("""WITH RECURSIVE pows(k, p) AS (
               SELECT 0, 1::HUGEINT
               UNION ALL
@@ -305,8 +296,7 @@ object TextOps {
           col("text"))
         .select(
           col("doc_id"), col("start"),
-          col("text").substr(col("start"), lit(200)).as("chunk"))
-        .transform(graft.Present.byNames("doc_id", "start")),
+          col("text").substr(col("start"), lit(200)).as("chunk")),
     Some("""SELECT doc_id, start, substr(text, start, 200) AS chunk
             FROM (SELECT doc_id, text,
                          unnest(range(1, greatest(length(text) - 50, 1) + 1, 150)) AS start
@@ -353,7 +343,6 @@ object TextOps {
             (col("n_ab") * col("n_docs")).cast("double") /
               (col("df1") * col("df2")).cast("double")), 6).as("pmi"))
         .filter(col("n_ab") >= 10)
-        .transform(graft.Present.byNames("t1", "t2"))
     },
     Some("""WITH doctoks AS (
               SELECT doc_id, unnest(list_distinct(list_filter(
@@ -402,7 +391,6 @@ object TextOps {
         .select(
           col("w1"), col("w2"), col("c12"),
           round(col("c12").cast("double") / col("c1").cast("double"), 6).as("cond_p"))
-        .transform(graft.Present.byNames("w1", "w2"))
     },
     Some("""WITH toks AS (
               SELECT doc_id, list_filter(
@@ -455,7 +443,6 @@ object TextOps {
         .agg(
           count(lit(1)).as("n_bigrams"),
           round(avg(-log(col("p"))), 6).as("avg_neg_logp"))
-        .transform(graft.Present.byNames("doc_id"))
     },
     Some("""WITH toks AS (
               SELECT doc_id, list_filter(
@@ -555,7 +542,7 @@ object TextOps {
       val perDoc = Tables.documents(s, d).select(col("doc_id"))
         .join(newPerDoc.withColumnRenamed("first_doc", "doc_id"), Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("n_new"), lit(0L)).as("n_new_tokens"))
-      prefixSummed(perDoc).transform(graft.Present.byNames("doc_id"))
+      prefixSummed(perDoc)
     },
     Some("""WITH toks AS (
               SELECT doc_id, unnest(list_filter(
@@ -602,7 +589,6 @@ object TextOps {
           sum("c").cast("double")).as("dup_bigram_frac"))
       .withColumn("keep",
         col("top_bigram_frac") <= topFracMax && col("dup_bigram_frac") <= dupFracMax)
-      .transform(graft.Present.byNames("doc_id"))
   }
 
   val repetition = Q(
@@ -650,7 +636,6 @@ object TextOps {
         sum(when(col("first_doc") === col("doc_id"), 1L).otherwise(0L)).as("n_novel"))
       .withColumn("novelty",
         col("n_novel").cast("double") / col("n_shingles").cast("double"))
-      .transform(graft.Present.byNames("doc_id"))
   }
 
   val novelty = Q(
@@ -702,7 +687,6 @@ object TextOps {
         expr(s"(cum_tokens - n_tokens) div $budget").as("seq_first"),
         expr(s"(cum_tokens - 1) div $budget").as("seq_last"))
       .withColumn("n_seqs", col("seq_last") - col("seq_first") + 1)
-      .transform(graft.Present.byNames("doc_id"))
   }
 
   val pack = Q(
@@ -743,7 +727,6 @@ object TextOps {
         .select(explode(tokens(col("text"))).as("t"))
         .groupBy("t").agg(count(lit(1)).as("freq"))
         .groupBy("freq").agg(count(lit(1)).as("n_types"))
-        .transform(graft.Present.byNames("freq"))
     },
     Some("""WITH toks AS (
               SELECT unnest(list_filter(
@@ -774,7 +757,6 @@ object TextOps {
         regexp_count(col("text"), lit(pat)).cast("long").as("n_hits"),
         md5(regexp_replace(col("text"), pat, repl)).as("scrubbed_md5"))
       .withColumn("clean", col("n_hits") === 0L)
-      .transform(graft.Present.byNames("doc_id"))
   }
 
   val scrub = Q(
@@ -832,8 +814,7 @@ object TextOps {
   val qualityGate = Q(
     "t20_quality_gate",
     (s, d) => qualityGateFrame(Tables.documents(s, d))
-      .drop("source")
-      .transform(graft.Present.byNames("doc_id")),
+      .drop("source"),
     Some(s"""WITH f AS (
               SELECT doc_id,
                 CAST(len(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '')) AS BIGINT) AS n_tokens,
@@ -1057,7 +1038,6 @@ object TextOps {
     (s, d) => {
       import s.implicits._
       corpusBpeMerges(s, d, 8).toDF("rank", "left", "right", "pair_count")
-        .orderBy("rank")
     },
     None)
 
@@ -1092,7 +1072,6 @@ object TextOps {
             col("stop_frac") >= 0.02 &&
             col("mean_tok_len") >= 3.0 && col("mean_tok_len") <= 10.0, 1.0)
             .otherwise(0.0)), 4).as("keep_frac"))
-        .transform(graft.Present.byNames("source", "lang"))
     },
     Some(s"""WITH f AS (
               SELECT source, lang,
@@ -1140,7 +1119,6 @@ object TextOps {
       .groupBy("t").agg(count(lit(1)).as("freq"))
       .filter(col("freq") * lit(100L / supportPct) > lit(total))
       .withColumn("frac", round(col("freq").cast("double") / lit(total.toDouble), 6))
-      .transform(graft.Present.by(col("freq").desc, col("t")))
   }
 
   val hitters = Q(
@@ -1207,8 +1185,7 @@ object TextOps {
       classifierDocScores(Tables.documents(s, d))
         .select(
           col("doc_id"), col("n_tokens"), col("score_milli"), col("score"),
-          (col("score_milli") > 0L).as("keep"))
-        .transform(graft.Present.byNames("doc_id")),
+          (col("score_milli") > 0L).as("keep")),
     Some("""WITH toks AS (
               SELECT doc_id, unnest(list_filter(
                 regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '')) AS w
@@ -1254,7 +1231,7 @@ object TextOps {
     * the number of merges applied.
     */
   def bpeEncode(docs: DataFrame, merges: Seq[(String, String)]): DataFrame =
-    bpeEncoded(docs, merges).transform(graft.Present.byNames("doc_id"))
+    bpeEncoded(docs, merges)
 
   /** [[bpeEncode]] without the output ordering — for consumers that
     * re-aggregate (t43's fertility rollup), where a pre-aggregate sort
@@ -1298,7 +1275,7 @@ object TextOps {
       // output (bounded: nMerges rows) and the encoded corpus is the
       // artifact this query SHIPS — one consistent tokenizer, one encode
       // pass, paid once in the build ledger.
-      corpusBpeEncoded(s, d, 8).transform(graft.Present.byNames("doc_id")),
+      corpusBpeEncoded(s, d, 8),
     None)
 
   // ------------------------------------------------- Unicode normalization
@@ -1328,8 +1305,7 @@ object TextOps {
           md5(expr("nfc_norm(text)")).as("norm_md5"),
           (expr("nfc_norm(text)") =!= col("text")).as("changed"),
           (length(expr("nfc_norm(text)")) - length(col("text")))
-            .cast("long").as("len_delta"))
-        .transform(graft.Present.byNames("doc_id")),
+            .cast("long").as("len_delta")),
     Some("""SELECT doc_id, md5(nfc_normalize(text)) AS norm_md5,
               nfc_normalize(text) <> text AS changed,
               CAST(length(nfc_normalize(text)) - length(text) AS BIGINT) AS len_delta
@@ -1396,7 +1372,6 @@ object TextOps {
           (round(col("weight_milli").cast("double")
             / (col("n_tokens").cast("double") * 1000.0) * 1e6) / 1e6)
             .as("w_per_tok"))
-        .transform(graft.Present.byNames("doc_id"))
     },
     Some("""WITH toks AS (
               SELECT doc_id, source,
@@ -1466,7 +1441,6 @@ object TextOps {
           col("doc_id"), col("source"), col("lang"), col("n_chars"),
           col("med2"), col("dev2"), col("mad4"),
           (lit(2L) * col("dev2") > lit(3L) * col("mad4")).as("is_outlier"))
-        .transform(graft.Present.byNames("doc_id"))
     },
     Some("""WITH med AS (
               SELECT source, lang,
@@ -1525,7 +1499,6 @@ object TextOps {
           round(log(col("n_tokens").cast("double"))
             - col("s_micro").cast("double") / lit(1000000.0) / col("n_tokens"), 6)
             .as("entropy"))
-        .transform(graft.Present.byNames("doc_id"))
     },
     Some("""WITH toks AS (
               SELECT doc_id, unnest(list_filter(
@@ -1601,7 +1574,7 @@ object TextOps {
 
   val piiScrubQ = Q(
     "t30_pii_scrub",
-    (s, d) => piiScrub(piiCorpus(Tables.documents(s, d))).transform(graft.Present.byNames("doc_id")),
+    (s, d) => piiScrub(piiCorpus(Tables.documents(s, d))),
     Some("""WITH corpus AS (
               SELECT doc_id,
                 CASE WHEN doc_id % 3 <> 0 THEN
@@ -1684,8 +1657,7 @@ object TextOps {
 
   val encodingAuditQ = Q(
     "t31_encoding_audit",
-    (s, d) => encodingAudit(corruptedCorpus(Tables.documents(s, d)))
-      .transform(graft.Present.byNames("doc_id")),
+    (s, d) => encodingAudit(corruptedCorpus(Tables.documents(s, d))),
     Some("""WITH corpus AS (
               SELECT doc_id,
                 CASE WHEN doc_id % 5 = 0 THEN
@@ -1775,7 +1747,6 @@ object TextOps {
                 - col("sx").cast("double") * col("sx").cast("double"),
               lit(0.0)), 6)
           .as("zipf_slope"))
-      .transform(graft.Present.byNames("source"))
   }
 
   val zipfFit = Q(
@@ -1840,7 +1811,6 @@ object TextOps {
     prefixSummedBy(keyed, Seq("shuffle_key", "doc_id"), "one", "rank1")
       .select(col("doc_id"), col("shuffle_key"),
         (col("rank1") - lit(1L)).as("position"))
-      .transform(graft.Present.byNames("position"))
   }
 
   val epochShuffleQ = Q(
@@ -1886,7 +1856,6 @@ object TextOps {
       .withColumn("boiler_frac",
         round(col("n_hot").cast("double") / col("n_shingles").cast("double"), 6))
       .withColumn("is_templated", col("boiler_frac") >= flagAt)
-      .transform(graft.Present.byNames("doc_id"))
   }
 
   val templated = Q(
@@ -1943,7 +1912,6 @@ object TextOps {
         col("n_docs"),
         round(col("n_docs").cast("double") / col("n_source").cast("double"), 6)
           .as("source_share"))
-      .transform(graft.Present.byNames("source", "lang", "pred_lang"))
   }
 
   val langMismatchQ = Q(
@@ -2023,7 +1991,6 @@ object TextOps {
             (col("n_docs").cast("double") * 1e6), 6).as("mean_score"),
           round(col("n_gate_pass").cast("double") / col("n_docs").cast("double"), 6)
             .as("pass_rate"))
-        .transform(graft.Present.byNames("score_bin"))
     },
     Some(s"""WITH toks AS (
               SELECT doc_id, unnest(list_filter(
@@ -2111,7 +2078,6 @@ object TextOps {
             nullif(col("n_tokens").cast("double"), lit(0.0)), 6))
         .withColumn("low_coverage",
           coalesce(col("oov_frac") >= 0.5, lit(false)))
-        .transform(graft.Present.byNames("doc_id"))
     },
     Some("""WITH toks AS (
               SELECT doc_id, list_filter(
@@ -2174,7 +2140,6 @@ object TextOps {
           round(safeFrac(col("n_tokens"), col("n_sentences")), 6))
         .withColumn("run_on_frac",
           round(safeFrac(col("n_run_on"), col("n_sentences")), 6))
-        .transform(graft.Present.byNames("doc_id"))
     },
     Some("""WITH s AS (
               SELECT doc_id,
@@ -2252,7 +2217,6 @@ object TextOps {
       .withColumn("share", round(
         col("n_docs").cast("double")
           / sum("n_docs").over(Window.partitionBy("source")).cast("double"), 6))
-      .transform(graft.Present.byNames("source", "band"))
   }
 
   val readability = Q(
@@ -2370,7 +2334,6 @@ object TextOps {
         .select(col("from_source"), col("to_source"), col("n_bigrams"),
           col("cross_entropy"),
           round(col("cross_entropy") - col("h_self"), 6).as("transfer_gap"))
-        .transform(graft.Present.byNames("from_source", "to_source"))
   }
 
   /** t40's matrix memoized per (corpus, stamp) — round 16: t40 and
@@ -2499,7 +2462,6 @@ object TextOps {
           col("tp"), col("fp"), col("fn"), col("tn"),
           round(safeFrac(col("tp"), col("tp") + col("fp")), 6).as("precision"),
           round(safeFrac(col("tp"), col("tp") + col("fn")), 6).as("recall"))
-        .transform(graft.Present.byNames("tau_micro"))
     },
     Some(s"""WITH toks AS (
               SELECT doc_id, unnest(list_filter(
@@ -2632,7 +2594,6 @@ object TextOps {
         .select(col("source_a"), col("source_b"),
           round(col("kl_nano").cast("double") / 1e9, 6).as("kl"),
           (col("rn") === 1).as("nearest"))
-        .transform(graft.Present.byNames("source_a", "source_b"))
     },
     Some(s"""WITH toks AS (
               SELECT source, unnest(list_filter(
@@ -2720,7 +2681,6 @@ object TextOps {
         sum("n_symbols").as("n_bpe_tokens"))
       .withColumn("fertility",
         round(safeFrac(col("n_bpe_tokens"), col("n_words")), 6))
-      .transform(graft.Present.byNames("source", "lang"))
 
   val bpeFertilityQ = Q(
     "t43_bpe_fertility",

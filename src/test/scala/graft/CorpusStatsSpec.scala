@@ -87,8 +87,8 @@ class CorpusStatsSpec extends SparkSpec {
       .collect().map(_.getDouble(1))
     assert(recalls.forall(r => math.abs(r - 1.0) < 1e-9))
     // And the operator's own output is well-formed with recalls in [0, 1].
-    // Row ORDER is presentation-only (Present default-OFF; the driver
-    // canonicalizes) — sort at the assertion, compare the method SET.
+    // Results are unordered — sort at the assertion, compare the method
+    // SET.
     val out = Similarity.recallEval(spark, sf, 5, 3).collect()
     assert(out.map(_.getString(0)).sorted.toSeq == Seq("ivf", "lsh", "pq"))
     out.foreach { r =>

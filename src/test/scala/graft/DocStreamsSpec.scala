@@ -156,8 +156,8 @@ class DocStreamsSpec extends SparkSpec {
           r.getLong(4), r.getBoolean(5))
       val streamed = spark.table("release_gate_out").collect()
         .map(key).sortBy(_._1).toSeq
-      // Batch side sorted explicitly: since the Present seam (round 16)
-      // the audit result carries no presentation order.
+      // Batch side sorted explicitly: query results are unordered, so
+      // sort at the assertion.
       val batch = graft.operators.Pipeline.releaseAudit(spark, sf)
         .collect().map(key).sortBy(_._1).toSeq
       assert(streamed == batch,

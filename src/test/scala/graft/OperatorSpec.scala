@@ -46,8 +46,8 @@ class OperatorSpec extends SparkSpec {
   test("q36 plans all grouping-set levels through one Expand; q37 windows share one user exchange") {
     val p36 = Relational.q36.fn(spark, sf).queryExecution.executedPlan.toString
     assert("(?i)expand".r.findAllIn(p36).nonEmpty, s"no Expand in q36 plan:\n$p36")
-    // One padded-key aggregation exchange + the contract ORDER BY — never
-    // one shuffle per grouping set.
+    // One padded-key aggregation exchange — never one shuffle per
+    // grouping set.
     val p36Exch = "Exchange".r.findAllIn(p36).length
     assert(p36Exch <= 2, s"q36 shuffles per set? $p36Exch exchanges:\n$p36")
     // q37's lag/lead/row_number all declare the same (user_id) partitioning
@@ -2447,7 +2447,7 @@ class OperatorSpec extends SparkSpec {
   test("m15 interleave pack: per-modality token mass is conserved and every interior window is exactly full") {
     import graft.functions.TextFns
     val docs = Tables.documents(spark, sf)
-    // Sorted by window_id: Present-seam results carry no presentation order.
+    // Sorted by window_id: query results are unordered; sort at the assertion.
     val out = SparkEntry.queries("m15_interleave_pack")(spark, sf).collect()
       .sortBy(_.getLong(0))
     // Conservation: the window rollup must hold every text token exactly

@@ -286,9 +286,9 @@ class PartitionInvarianceSpec extends SparkSpec {
     def rowsAt(n: Int, name: String): Seq[String] = {
       conf.set("spark.sql.shuffle.partitions", n.toString)
       spark.catalog.clearCache()
-      // Sorted canon: since the Present seam (round 16) results carry no
-      // presentation order — the invariance claim is on the row SET,
-      // matching the driver gate's row-sorted compare.
+      // Sorted canon: query results are unordered — the invariance claim
+      // is on the row SET, matching the correctness gate's row-sorted
+      // compare.
       SparkEntry.queries(name)(spark, sf).collect().map(_.toString).toSeq.sorted
     }
     try names.foreach { name =>

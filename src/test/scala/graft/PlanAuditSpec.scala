@@ -1,8 +1,9 @@
 package graft
 
 /** The plan-shape regression gate (see [[PlanAudit]]): every inventory
-  * query's physical plan must compile, contain no CartesianProduct, and no
-  * BroadcastNestedLoopJoin outside the documented allowlist. Plans are
+  * query's physical plan must compile, contain no CartesianProduct, no
+  * cosmetic root sort, and no BroadcastNestedLoopJoin outside the
+  * documented allowlist. Plans are
   * compiled (not executed) at sf0.001, which is enough to expose join
   * strategy and exchange shape.
   */
@@ -61,5 +62,21 @@ class PlanAuditSpec extends SparkSpec {
         .join(broadcast(graft.sources.Tables.customer(s, d)),
           col("o_custkey") === col("c_custkey")))
     assert(dim.corpusHinted.isEmpty, dim.line)
+
+    def rootSortFlagged(a: PlanAudit.Audit) =
+      PlanAudit.violations(Seq(a)).exists(_.contains("global Sort at the plan root"))
+    // A bare trailing orderBy: results are compared as sets, so the range
+    // shuffle buys nothing. Must fail the gate.
+    val sorted = PlanAudit.auditOne(spark, sf, "sorted_query", (s, d) =>
+      graft.sources.Tables.orders(s, d)
+        .select(col("o_orderkey"), col("o_totalprice"))
+        .orderBy(col("o_totalprice").desc))
+    assert(sorted.rootSort && rootSortFlagged(sorted), sorted.line)
+    // orderBy(...).limit(k) is a top-k: the Limit consumes the order.
+    val topK = PlanAudit.auditOne(spark, sf, "topk_query", (s, d) =>
+      graft.sources.Tables.orders(s, d)
+        .select(col("o_orderkey"), col("o_totalprice"))
+        .orderBy(col("o_totalprice").desc).limit(5))
+    assert(!topK.rootSort && !rootSortFlagged(topK), topK.line)
   }
 }

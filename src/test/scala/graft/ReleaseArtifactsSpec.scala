@@ -7,9 +7,9 @@ import graft.operators.{Dedup, ReleaseArtifacts}
   * refuse stale corpora and mismatched kernel parameters. */
 class ReleaseArtifactsSpec extends SparkSpec {
 
-  // Sorted canon: since the Present seam (round 16) results carry no
-  // presentation order; equality claims here are on the row SET, the same
-  // canon the driver gate uses.
+  // Sorted canon: query results are unordered, so sort at the assertion;
+  // equality claims here are on the row SET, the same canon the
+  // correctness gate uses.
   private def run(name: String): Seq[String] =
     SparkEntry.queries(name)(spark, sf).collect().map(_.toString).toSeq.sorted
 

@@ -56,7 +56,7 @@ class ShingleFromTokensSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     Seq(2, 3).foreach { k =>
       val expr = Dedup.positionalShingleHashes(Dedup.spreadTokenArrays(docs), k)
-      val legacy = Dedup.spreadDocs(docs).as[(Long, String)]
+      val legacy = Dedup.spread(docs).as[(Long, String)]
         .flatMap { case (id, text) =>
           val toks = text.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty)
           if (toks.length < k) Iterator.empty
@@ -79,7 +79,7 @@ class ShingleFromTokensSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val neu = Dedup.cdcChunksFromTokens(Dedup.spreadTokenArrays(docs), 8, 3)
     val legacy = {
-      val occ0 = Dedup.spreadDocs(docs).as[(Long, String)]
+      val occ0 = Dedup.spread(docs).as[(Long, String)]
         .flatMap { case (id, text) =>
           val toks = text.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty)
           val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String, Int)]

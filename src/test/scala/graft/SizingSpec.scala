@@ -38,7 +38,7 @@ class SizingSpec extends SparkSpec {
       val docs = sources.Tables.documents(spark, sf)
       assert(Sizing.spreadCount(docs.select(col("doc_id"), col("text"))).isEmpty,
         "many-split input must not be round-robin repartitioned")
-      val plan = Dedup.spreadDocs(docs).queryExecution.executedPlan.toString
+      val plan = Dedup.spread(docs).queryExecution.executedPlan.toString
       assert(!plan.contains("RoundRobinPartitioning"),
         s"spread added a round-robin exchange despite enough scan splits:\n$plan")
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
@@ -46,7 +46,7 @@ class SizingSpec extends SparkSpec {
 
   test("guard open: default splits on the small fixture => round-robin present") {
     val docs = sources.Tables.documents(spark, sf)
-    val plan = Dedup.spreadDocs(docs).queryExecution.executedPlan.toString
+    val plan = Dedup.spread(docs).queryExecution.executedPlan.toString
     assert(plan.contains("RoundRobinPartitioning"),
       s"small single-file input lost its fan-out:\n$plan")
   }

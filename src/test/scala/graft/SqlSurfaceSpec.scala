@@ -19,8 +19,7 @@ class SqlSurfaceSpec extends SparkSpec {
         |GROUP BY l_returnflag, l_linestatus
         |ORDER BY l_returnflag, l_linestatus""".stripMargin)
       .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSeq
-    // Sorted at the assertion: since the Present seam (round 16) the
-    // DataFrame surface carries no presentation order.
+    // Sorted at the assertion: DataFrame results are unordered.
     val viaDf = Relational.q02.fn(spark, sf)
       .select("l_returnflag", "l_linestatus", "sum_qty")
       .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSeq

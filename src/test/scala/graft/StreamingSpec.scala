@@ -363,7 +363,7 @@ class StreamingSpec extends SparkSpec {
     val twin = Similarity.ivfStaleTopK(spark, sf, 3, 4,
       nCells = 8, nProbe = 2, kmeansIters = 2)
       .select("query_id", "neighbor_id", "cos_sim", "rank").collect()
-    // Sorted canon: Present-seam results carry no presentation order.
+    // Sorted canon: query results are unordered; sort at the assertion.
     assert(probed.map(_.toString).toSeq.sorted == twin.map(_.toString).toSeq.sorted)
   }
 

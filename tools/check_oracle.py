@@ -3,7 +3,7 @@
 runs Verify's parquet dumps against the DuckDB oracle SQL and compares
 values with columns sorted by name and rows sorted. Dev-only tool (the
 engine itself has no Python dependency)."""
-import json, sys, glob, os
+import json, sys, glob, os, time
 import duckdb
 import pandas as pd
 
@@ -18,6 +18,7 @@ for t in ["region","nation","customer","supplier","part","orders",
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
 names = sorted(os.path.basename(p) for p in glob.glob(f"{out_dir}/*") if os.path.isdir(p))
 n_pass = n_fail = n_rows_only = 0
+oracle_s = {}  # seconds DuckDB spent on each oracle query
 # A query with an oracle but no dump (it threw in Verify, or was never
 # dumped) is a failure, not a silent omission.
 for name in sorted(set(oracle) - set(names)):
@@ -28,10 +29,13 @@ for name in names:
     if name not in oracle:
         print(f"[rows-only] {name}: {len(got)} rows"); n_rows_only += 1
         continue
+    t0 = time.perf_counter()
     try:
         exp = con.execute(oracle[name]).df()
     except Exception as e:
         print(f"[FAIL-sql ] {name}: {e}"); n_fail += 1; continue
+    finally:
+        oracle_s[name] = time.perf_counter() - t0
     def canon(df):
         df = df.reindex(sorted(df.columns), axis=1)
         df = df.sort_values(by=list(df.columns)).reset_index(drop=True)
@@ -86,4 +90,8 @@ for name in names:
             print(f"            oracle {exp_row}")
         n_fail += 1
 print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
+slowest = sorted(oracle_s.items(), key=lambda kv: -kv[1])[:10]
+print(f"oracle SQL: {sum(oracle_s.values()):.1f} s total; slowest {len(slowest)}:")
+for name, secs in slowest:
+    print(f"  {secs:8.2f} s  {name}")
 sys.exit(1 if n_fail else 0)
