@@ -20,8 +20,8 @@ import org.apache.spark.sql.execution.FormattedMode
   *  - `plan` prints the formatted physical plan (`explain("formatted")`).
   *  - `time` prints min-of-2 wall seconds. `noop` (the default, Bench's
   *    convention) fully materializes; `count` lets Catalyst prune a pure
-  *    projection down to a metadata scan, which is what the rehearsal
-  *    mains time.
+  *    projection down to a metadata scan, which is what SCALE.md's
+  *    rehearsal rows timed.
   *  - `jobs` runs the query through the noop sink `reps` times (default 3)
   *    with a listener recording every job's wall span, and prints per-run
   *    job timelines (id, span, gap since the previous job's end, tasks,

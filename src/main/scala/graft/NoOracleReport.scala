@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.{Relational, Similarity, TextOps}
+import graft.sources.ScaledCorpora
 
 /** Driver-visible accuracy report for the inventory's 10 `no_oracle`
   * queries (`runMain graft.NoOracleReport [sfDir] [outFile]` →
@@ -87,8 +88,8 @@ object NoOracleReport {
     // floor pins the corpus shape the tuner exists for, not just the
     // uniform one.
     val hotDir = java.nio.file.Files.createTempDirectory("graft-nooracle-hot").toString
-    SkewRehearsal.hotCellVecs(
-      spark.read.parquet(s"$sfDir/embeddings.parquet"), 2, exactDup = false)
+    ScaledCorpora.hotCellVecs(
+      spark.read.parquet(s"$sfDir/embeddings.parquet"), 2)
       .write.mode("overwrite").parquet(s"$hotDir/embeddings.parquet")
     val hotE = spark.read.parquet(s"$hotDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding")).localCheckpoint()

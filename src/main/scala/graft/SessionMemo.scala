@@ -31,7 +31,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    (Verify, Bench, PlanAudit) run queries sequentially.
   *
   * Generic `...From(docs)` operators never touch a memo: specs, streaming
-  * and rehearsals that synthesize their own corpora stay memo-free. */
+  * and the synthetic corpora of `graft.sources.ScaledCorpora` stay
+  * memo-free. */
 final class SessionMemo(val family: String) {
   private var key: Option[(SparkSession, String, Long)] = None
   private val arts = scala.collection.mutable.LinkedHashMap.empty[String, Any]

@@ -21,12 +21,6 @@ object TextFns {
   def tokens(c: Column): Column =
     filter(split(lower(c), "[^a-z0-9]+"), t => t =!= lit(""))
 
-  /** Reference-faithful tokenizer: split on space/tab only, keep empty
-    * tokens (a blank line counts under the empty key —
-    * reference `tests/testdata/correct/word_count_correct.txt` line 1).
-    */
-  def tokensRaw(c: Column): Column = split(lower(c), "[ \t]")
-
   /** Whitespace-collapsed, trimmed, lowercased normal form used for
     * fingerprinting and exact dedup. */
   def normText(c: Column): Column =

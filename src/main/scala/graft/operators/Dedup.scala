@@ -3852,8 +3852,8 @@ object Dedup {
     * runs; Jaccard stays exact over ALL shingles (hot-set recovery at
     * the 256 boundary, d04's arithmetic). Output exactly 3 rows. */
   /** d33's kernel over an already-materialized hashed shingle table (the
-    * corpus path reads the session-memoized one; SkewRehearsal and the
-    * curve-shape spec drive planted boiler corpora through it). */
+    * corpus path reads the session-memoized one; DedupCapSpec's d33
+    * curve test drives a planted boiler corpus through it). */
   def capOperatingCurveFromHashes(hs: DataFrame,
       caps: Seq[Long] = Seq(8L, 64L, 256L)): DataFrame = {
       import hs.sparkSession.implicits._
@@ -4024,8 +4024,8 @@ object Dedup {
             col("n_truth")), 6).as("recall"))
   }
 
-  /** d34 over an arbitrary corpus (SkewRehearsal's hot-bucket corpora and
-    * the curve-shape spec). */
+  /** d34 over an arbitrary corpus (DedupCapSpec's natural and planted
+    * hot-bucket corpora). */
   def bandOperatingCurveFrom(docs: DataFrame): DataFrame = {
     val hs = materializedShingleHashes(docs)
     bandOperatingCurveCore(
@@ -4122,8 +4122,8 @@ object Dedup {
       .select(lit(n.toLong).as("ngram_n"), col("n_pairs"),
         col("n_contam_docs"), col("n_burned_evals"))
 
-  /** d35 over an arbitrary corpus (no session memo — SkewRehearsal's
-    * boiler corpora and the curve-shape spec). */
+  /** d35 over an arbitrary corpus (no session memo — DedupCapSpec's
+    * planted boiler corpus). */
   def contamNgramCurveFrom(docs: DataFrame, ns: Seq[Int] = Seq(5, 3, 8)): DataFrame =
     ns.map { n =>
       val sh = hashedShingles(shingleSets(docs, n)).localCheckpoint()
@@ -4295,9 +4295,10 @@ object Dedup {
     // Plan-hook surfacing for any driver that installs one. The SHIPPED
     // view maintenance no longer calls this method (PlanAudit drives
     // mergeReleaseBatch's incremental plans directly, per batch); this
-    // full-regen form remains the bootstrap/reference path (ViewScale's
-    // contrast column, the spec's ground truth), so the hook stays for
-    // those callers rather than guarding the production audit.
+    // full-regen form remains the bootstrap/reference path (StreamingSpec's
+    // ground truth for the dirty-bucket fold and the pre-LSM upgrade), so
+    // the hook stays for those callers rather than guarding the
+    // production audit.
     graft.MemoLedger.planHook.foreach(_("view:release_kernel", verifiedPlan))
     val verified = verifiedPlan.localCheckpoint()
     val out = releaseReportFromVerified(fps, verified, threshold)

@@ -84,7 +84,11 @@ object RangeJoin {
   }
 
   /** Time-proximity event pairs: co-occurring events within 5 seconds,
-    * across all users (no equi key exists — the case the bucketing is for). */
+    * across all users (no equi key exists — the case the bucketing is for).
+    * The oracle states the band as a BETWEEN over BIGINT microseconds,
+    * which DuckDB plans as an inequality join; the equivalent
+    * `abs(a - b) <= r` form ran as a nested loop (102 s vs 0.4 s at
+    * sf0.1). */
   val q17 = Q(
     "q17_range_join",
     (s, d) =>
@@ -96,6 +100,7 @@ object RangeJoin {
                    epoch_us(b.ts) - epoch_us(a.ts) AS dt_us
             FROM events a JOIN events b
               ON a.event_id < b.event_id
-             AND abs(epoch_us(a.ts) - epoch_us(b.ts)) <= 5000000
+             AND epoch_us(b.ts) BETWEEN epoch_us(a.ts) - 5000000
+                                    AND epoch_us(a.ts) + 5000000
             ORDER BY a_id, b_id"""))
 }

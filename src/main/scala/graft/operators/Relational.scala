@@ -958,7 +958,9 @@ object Relational {
     * `hotShare`. This is the operational readout a pipeline computes
     * BEFORE keying a 100 TB shuffle: a key whose share exceeds what one
     * task should own is the signal to reach for AQE skew splitting or
-    * [[SkewJoin.saltedJoin]] (the skewed-corpus rehearsal exercises both;
+    * [[SkewJoin.saltedJoin]] (`SourcesAndSkewSpec`'s salted-join test pins
+    * the salted join to the plain one; the skewed-corpus rehearsal that
+    * timed both was `graft.SkewRehearsal`, last held by commit `69812aa`;
     * this query is how a run decides it needs them). Shipped over the
     * documents `lang` key, whose distribution is genuinely skewed (en ≈
     * 44%, others ≈ 14%), so the flag is exercised in both directions.
@@ -1375,29 +1377,6 @@ object Relational {
         (coalesce(col("rc"), lit(0L)) + coalesce(col("dc"), lit(0L)))
           .as("count_rows"),
         coalesce(col("dc"), lit(0L)).as("n_delta_rows"))
-  }
-
-  /** q43's PRODUCTION refresh path: fold a delta's rows into an
-    * already-persisted partial state (schema: group keys + `qc`
-    * centi-quantity sum + `c` rowcount — the exact state [[incrementalAgg]]'s
-    * resident leg computes and [[graft.streaming.ViewStreams]] persists).
-    * Cost = ONE delta-proportional scan + a #groups-sized full-outer
-    * merge; the resident corpus is never touched. The registered
-    * q43_incremental_agg recomputes BOTH legs from lineitem so the DuckDB
-    * full-recompute oracle can hash-check the merge arithmetic
-    * self-contained — that form is the correctness harness, this one is
-    * the deployment shape, and the scale rehearsal times THIS one
-    * (resident k×, delta pinned — the row must stay flat). */
-  def refreshFromState(state: org.apache.spark.sql.DataFrame,
-      deltaRows: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val d = deltaRows.groupBy("l_returnflag", "l_linestatus")
-      .agg(sum(floor(col("l_quantity") * 100 + 0.5).cast("long")).as("dq"),
-        count(lit(1)).as("dc"))
-    state.join(d, Seq("l_returnflag", "l_linestatus"), "full_outer")
-      .select(
-        col("l_returnflag"), col("l_linestatus"),
-        (coalesce(col("qc"), lit(0L)) + coalesce(col("dq"), lit(0L))).as("qc"),
-        (coalesce(col("c"), lit(0L)) + coalesce(col("dc"), lit(0L))).as("c"))
   }
 
   val q43 = Q(

@@ -335,15 +335,9 @@ object Similarity {
     * partitioned by cell id, so a probe reads nProbe/nCells of the data.
     * Rows-only check (approximate by construction, still deterministic).
     */
-  /** Train the IVF codebook for table `d` (deterministic seeds: the
+  /** Train the IVF codebook for corpus `e` (deterministic seeds: the
     * `nCells` lowest vec_ids, refined by spherical k-means). Only
     * codebook-sized data reaches the driver. */
-  def ivfCodebook(spark: SparkSession, d: String,
-      nCells: Int, kmeansIters: Int): Array[(Int, Array[Double])] =
-    ivfCodebookOf(spark,
-      Tables.embeddings(spark, d).select(col("vec_id"), col("embedding")),
-      nCells, kmeansIters)
-
   def ivfCodebookOf(spark: SparkSession, e: DataFrame,
       nCells: Int, kmeansIters: Int): Array[(Int, Array[Double])] = {
     import spark.implicits._
@@ -1758,8 +1752,9 @@ object Similarity {
     * the query path passes the session-memoized `corpusQuant` /
     * `corpusCentroids(8, 3)` (the SAME artifacts s15/s19 measure; s17
     * re-running its own Lloyd loop per run was the one unrerouted centroid
-    * recompute left in the family), the generic path (SkewRehearsal, hot
-    * fixtures) derives both from its own corpus above. */
+    * recompute left in the family), the generic path (OperatorSpec's
+    * fixtures, SourcesAndSkewSpec's hot-cell corpus) derives both from
+    * its own corpus above. */
   private def probeTrafficBalanceFromQuant(q: DataFrame,
       cents: Seq[(Long, Seq[Long])],
       nQueries: Int, nProbe: Int): DataFrame = {
@@ -1925,7 +1920,7 @@ object Similarity {
     * codebook — the query path passes the session memos (`corpusQuant`
     * projected with the wave tag, `corpusResidentCentroids(8, 3)` — the
     * same frozen codebook s20 diffs against), the generic path
-    * (rehearsals, fixtures) derives both above. With the codebook
+    * (OperatorSpec's fixtures) derives both above. With the codebook
     * memoized, the one remaining corpus pass is the assignment scan. */
   private def clusterPopulationDriftFromQuant(q: DataFrame,
       cents: Seq[(Long, Seq[Long])]): DataFrame = {
@@ -2122,17 +2117,11 @@ object Similarity {
     * per-(level, query) window ranks on bounded partitions and a
     * ≤ |probes|-row aggregate with one allowlisted 1-row totals
     * attachment. At a 100 TB corpus the curve runs on a SAMPLE of
-    * queries by construction (nQueries bounds the probe side). */
-  def nprobeCurve(e: DataFrame, k: Int = 8, iters: Int = 3,
-      nQueries: Int = 16, topK: Int = 10,
-      probes: Seq[Long] = Seq(1L, 2L, 4L, 8L)): DataFrame = {
-    val q = e.select(col("vec_id"), quantMilli.as("qe")).localCheckpoint()
-    nprobeCurveFromQuant(q, kmeansCentroidsFromQuant(q, k, iters),
-      nQueries, topK, probes)
-  }
-
-  /** s19's curve over an ALREADY-QUANTIZED corpus and trained centroids
-    * (the session-memoized serving parts — the same codebook s15 maps). */
+    * queries by construction (nQueries bounds the probe side).
+    *
+    * Runs over an ALREADY-QUANTIZED corpus and trained centroids: the
+    * query passes the session-memoized serving parts (the same codebook
+    * s15 maps). */
   def nprobeCurveFromQuant(q: DataFrame, cents: Seq[(Long, Seq[Long])],
       nQueries: Int = 16, topK: Int = 10,
       probes: Seq[Long] = Seq(1L, 2L, 4L, 8L)): DataFrame = {
@@ -2291,27 +2280,13 @@ object Similarity {
     * the same accumulation order as `vec_dot` and DuckDB's
     * list_dot_product, so the doubles agree bit-for-bit.
     *
-    * Scale shape: TWO Lloyd loops over ONE quantized checkpoint (each
-    * iters × one corpus scan into k dim-sized long_vec_sum buffers),
-    * then k rows of driver-side codebook arithmetic (codebook-sized by
-    * construction). Output pinned at ≤ k rows at any corpus size. */
-  def codebookRetrainShift(e: DataFrame, k: Int = 8, iters: Int = 3): DataFrame = {
-    val q = e.select(col("vec_id"), quantMilli.as("qe")).localCheckpoint()
-    val mxRow = q.agg(max("vec_id")).head()
-    val split = if (mxRow.isNullAt(0)) 0L else mxRow.getLong(0) * 4 / 5
-    codebookRetrainShiftFromCents(q.sparkSession,
-      kmeansCentroidsFromQuant(q.filter(col("vec_id") < split), k, iters),
-      kmeansCentroidsFromQuant(q, k, iters))
-  }
-
-  /** s20's kernel given the two codebooks themselves — frozen (resident
-    * slice) and full-corpus retrain. Both are session memos on the query
-    * path (`corpusResidentCentroids(8, 3)` — the same frozen codebook s18
+    * Scale shape: the two codebooks are session memos
+    * (`corpusResidentCentroids(8, 3)` — the same frozen codebook s18
     * routes on — and `corpusCentroids(8, 3)`, the codebook s15/s17/s19
-    * read), so the query runs NO distributed work at all: k rows of
-    * driver-side cosine arithmetic, exactly the codebook-sized cost the
-    * operator's contract promises at any corpus size. The generic path
-    * (rehearsals, fixtures) trains both above, verbatim the old behavior. */
+    * read; each a Lloyd loop of iters × one corpus scan into k dim-sized
+    * long_vec_sum buffers), so the query itself runs NO distributed work
+    * at all: k rows of driver-side cosine arithmetic, codebook-sized by
+    * construction. Output pinned at ≤ k rows at any corpus size. */
   private def codebookRetrainShiftFromCents(spark: SparkSession,
       frozen: Seq[(Long, Seq[Long])],
       fullCents: Seq[(Long, Seq[Long])]): DataFrame = {

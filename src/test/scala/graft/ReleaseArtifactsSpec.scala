@@ -23,6 +23,7 @@ class ReleaseArtifactsSpec extends SparkSpec {
     // A fresh session would have an empty memo; clearing simulates it.
     Dedup.clearCorpusMemo()
     ReleaseArtifacts.open(spark, sf, dir)
+    graft.MemoLedger.drain() // discard the freeze's own builds
     // Proof the read path is REAL: the memoized verified-pair table now
     // resolves to a parquet scan of the frozen layout, not a checkpoint.
     val roots = Dedup.corpusVerifiedPairs(spark, sf).queryExecution.analyzed
@@ -40,6 +41,9 @@ class ReleaseArtifactsSpec extends SparkSpec {
     names.foreach { n =>
       assert(run(n) == expected(n), s"$n differs when read from $dir")
     }
+    val builds = graft.MemoLedger.drain()
+    assert(builds.isEmpty,
+      s"persisted-release read path ran builds: ${builds.map(_.artifact)}")
     Dedup.clearCorpusMemo() // drop the parquet-backed installs for later suites
   }
 

@@ -1,0 +1,120 @@
+package graft
+
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.{Success, TaskKilled}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted,
+  SparkListenerTaskEnd, SparkListenerTaskStart}
+import org.apache.spark.sql.Dataset
+
+import graft.operators.MapReduceJob
+import graft.operators.MapReduceJob.JobSpec
+
+/** A re-run task gives the same part files. The reference's one
+  * fault-tolerance feature is re-running a dead worker's task (reference
+  * `tests/test_manager_05.py:212-306`); here Spark's scheduler does it.
+  * A listener kills attempt 0 of the first reduce-stage task mid-job; the
+  * spec checks that Spark re-ran that task and that every partition's
+  * lines equal those of a clean run.
+  */
+class RetryDeterminismSpec extends SparkSpec {
+
+  /** Eight seeded text files, large enough that a reduce task is still
+    * running when the kill reaches it. */
+  private lazy val input: String = {
+    val dir = Files.createTempDirectory("graft-retry").toFile
+    val rnd = new scala.util.Random(7)
+    val vocab = (0 until 2000).map(i => s"w$i")
+    (0 until 8).foreach { f =>
+      val lines = (0 until 6000).map { _ =>
+        Seq.fill(1 + rnd.nextInt(10))(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+      }
+      Files.write(new java.io.File(dir, f"file$f%02d").toPath,
+        lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    }
+    dir.getAbsolutePath
+  }
+
+  /** Kills attempt 0 of task index 0 in the first stage that reads a
+    * shuffle (the reduce stage) and records every task end. */
+  private final class KillFirstReduceTask extends SparkListener {
+    @volatile var reduceStage: Int = -1
+    val ends = new ConcurrentLinkedQueue[SparkListenerTaskEnd]()
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      if (reduceStage < 0 && e.stageInfo.parentIds.nonEmpty)
+        reduceStage = e.stageInfo.stageId
+    override def onTaskStart(e: SparkListenerTaskStart): Unit =
+      if (e.stageId == reduceStage && e.taskInfo.index == 0 &&
+          e.taskInfo.attemptNumber == 0)
+        spark.sparkContext.killTaskAttempt(e.taskInfo.taskId,
+          interruptThread = true, reason = "retry-determinism kill")
+    def endsOfTask0: Seq[SparkListenerTaskEnd] = ends.asScala.toSeq
+      .filter(t => t.stageId == reduceStage && t.taskInfo.index == 0)
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = ends.add(e)
+  }
+
+  private def partitions(out: Dataset[String]): Seq[Seq[String]] =
+    out.rdd.glom().collect().map(_.toSeq).toSeq
+
+  private def assertSameParts(got: Seq[Seq[String]], clean: Seq[Seq[String]]): Unit = {
+    assert(got.length == clean.length)
+    got.zip(clean).zipWithIndex.foreach { case ((g, c), p) =>
+      if (g != c) fail(s"partition $p differs from the clean run: ${g.length} vs " +
+        s"${c.length} lines, first difference at line " +
+        g.zipAll(c, "", "").indexWhere { case (x, y) => x != y })
+    }
+  }
+
+  /** Runs `job` once with the kill listener and returns its partitions.
+    * A kill that lands after the attempt already succeeded is a miss, not
+    * a retry, so the run is repeated (at most three times). */
+  private def killedRun(job: () => Dataset[String]): Seq[Seq[String]] = {
+    val sc = spark.sparkContext
+    def attempt(left: Int): Seq[Seq[String]] = {
+      val l = new KillFirstReduceTask
+      sc.addSparkListener(l)
+      val parts = try {
+        val p = partitions(job())
+        // Task-end events reach the listener asynchronously after the job
+        // returns: wait for the successful end of task 0.
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (!l.endsOfTask0.exists(_.reason == Success) &&
+            System.nanoTime() < deadline) Thread.sleep(20)
+        p
+      } finally sc.removeSparkListener(l)
+      val ends = l.endsOfTask0
+      val missed = ends.exists(t => t.taskInfo.attemptNumber == 0 && t.reason == Success)
+      if (missed && left > 1) attempt(left - 1)
+      else {
+        assert(ends.exists(t => t.taskInfo.attemptNumber == 0 &&
+          t.reason.isInstanceOf[TaskKilled]),
+          s"attempt 0 of reduce task 0 was not killed: ${ends.map(_.reason)}")
+        assert(ends.exists(t => t.taskInfo.attemptNumber >= 1 && t.reason == Success),
+          s"killed reduce task 0 was not re-run: ${ends.map(e =>
+            e.taskInfo.attemptNumber -> e.reason)}")
+        parts
+      }
+    }
+    attempt(3)
+  }
+
+  test("native word count: a killed reduce attempt re-runs to identical partitions") {
+    val job = () => MapReduceJob.run(spark,
+      JobSpec(input, MapReduceJob.wcMapper, MapReduceJob.wcReducer,
+        numReducers = 4, numMappers = 4))
+    val clean = partitions(job())
+    assert(clean.length == 4 && clean.forall(_.nonEmpty))
+    assertSameParts(killedRun(job), clean)
+  }
+
+  test("streaming cat/cat job: a killed reduce attempt re-runs to identical partitions") {
+    val job = () => MapReduceJob.pipeJob(spark, input, Seq("cat"), Seq("cat"),
+      numReducers = 4, numMappers = 4)
+    val clean = partitions(job())
+    assert(clean.length == 4 && clean.forall(_.nonEmpty))
+    assertSameParts(killedRun(job), clean)
+  }
+}

