@@ -4,10 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One engine query: the Spark implementation plus (when SQL-expressible)
   * the exact ANSI-SQL oracle the driver runs in DuckDB over the same parquet
-  * tables. Column names and row ordering are part of the contract: the
-  * driver hash-compares values after sorting columns by name, so every
-  * computed column is aliased identically on both sides and every query ends
-  * in a deterministic total ORDER BY.
+  * tables. Column names are part of the contract, row order is not: the
+  * driver hash-compares values after sorting columns by name and rows by
+  * value, so every computed column is aliased identically on both sides,
+  * and the Spark side ends in NO global sort (results are unordered sets;
+  * [[PlanAudit]] rejects a Sort at an inventory query's plan root).
   */
 final case class Q(
     name: String,

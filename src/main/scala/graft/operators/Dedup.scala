@@ -337,39 +337,65 @@ object Dedup {
       .select("a", "b").distinct()
   }
 
-  /** (a, b, n_common) for every pair sharing ≥1 sub-cap shingle, with
-    * n_common EXACT over ALL shingles (hot ones included) — the shipped
-    * execution path of the df-capped kernel. Plan shape:
+  /** (a, b, n_common) for every pair a < b sharing ≥1 sub-cap shingle,
+    * with n_common EXACT over ALL shingles (hot ones included) — the self-
+    * pair form of [[cappedSharedCounts]] (d04/d12/d18/d34's trunk). */
+  def cappedPairCounts(hs: DataFrame, dfCap: Int): DataFrame =
+    cappedSharedCounts(hs, dfCap, "a", "b", None).withColumnRenamed("n_shared", "n_common")
+
+  /** THE df-capped shared-shingle count, the one kernel behind self pairs
+    * (d04/d12/d18/d34, via [[cappedPairCounts]]), corpus × eval pairs
+    * (d09/d19/d35/p03), val × train pairs (d21) and d33's operating curve.
+    * Emits (`a`, `b`, n_shared) for every pair sharing ≥1 shingle whose
+    * document frequency over `hs` is ≤ dfCap, with n_shared EXACT over ALL
+    * shared shingles, hot ones included.
+    *
+    * `hs` holds distinct (doc_id, sh_h[, tags]) rows. `split` = None pairs
+    * `hs` with itself (a < b); `split` = Some(inA) pairs the rows matching
+    * inA (side `a`) with the rest (side `b`) — the two sides partition
+    * `hs`, so df over `hs` is df over both sides. Plan shape:
     *
     *  1. ONE shingle-keyed df aggregate finds hot shingles (df > cap);
     *     the HOT table is checkpointed so the planner sees its true
     *     (usually zero) size, and the rare side is carved out with a
     *     left-anti join against it — map-side when hot is small, which
     *     it structurally is on healthy corpora (at sf0.1 max df = 25,
-    *     hot is EMPTY). Two alternative shapes were measured at the 100×
-    *     rehearsal and rejected: computing df with a count window over
-    *     sh_h re-instantiated the window subplan per consumer and,
-    *     checkpointed, added a 55M-row sort (+45% wall); leaving the
-    *     filtered branches un-materialized let the static planner
-    *     broadcast a corpus-scale join side (driver OOM).
-    *  2. The pairing self-join runs over the RARE rows only, pinned to
+    *     hot is EMPTY). Two alternative shapes were measured at 500k docs
+    *     and rejected: computing df with a count window over sh_h re-
+    *     instantiated the window subplan per consumer and, checkpointed,
+    *     added a 55M-row sort (+45% wall); leaving the filtered branches
+    *     un-materialized let the static planner broadcast a corpus-scale
+    *     join side (driver OOM).
+    *  2. The pairing join runs over the RARE rows only, pinned to
     *     sort-merge (`hint("merge")`): both sides are corpus-derived, so
     *     a broadcast is never right at target scale no matter what the
     *     stats say. Fan-out is dfCap²-bounded per shingle always.
     *  3. Hot shared counts are recovered per CANDIDATE pair from per-doc
     *     hot-shingle arrays (distinct hot shingles ≤ |hs|/cap, per-doc
     *     arrays boilerplate-sized) via two doc-keyed left joins on the
-    *     pair table + array_intersect — never a hot-keyed pairing join.
-    *     hotSets is checkpointed for real stats: empty/tiny on healthy
-    *     corpora (broadcast correct), doc-proportional on boilerplate-
-    *     flooded ones (where only true sizes keep the planner honest).
+    *     pair table + an array intersection — never a hot-keyed pairing
+    *     join. ONE hot-set table serves both sides (keyed by doc_id and,
+    *     for a split, the side — two tables' ids may collide),
+    *     checkpointed for real stats: empty/tiny on healthy corpora
+    *     (broadcast correct), doc-proportional on boilerplate-flooded ones.
+    *  4. Empty-hot fast path (round 16): on healthy corpora no shingle
+    *     crosses the cap, so the anti-join is the identity and both
+    *     recovery legs are empty — one take(1) probe on the materialized
+    *     hot checkpoint skips them (n_shared = n_rare; DedupCapSpec drives
+    *     the non-empty arm).
+    *
+    * `minDf` (d33) also emits each pair's min shared-shingle df: it
+    * checkpoints the whole df table instead of the hot part and carves
+    * the rare rows by an inner join that carries df.
     *
     * So the k² boilerplate term is structurally gone while every emitted
-    * value matches the uncapped (and oracle) arithmetic exactly.
-    * Measured at the 100× rehearsal (500k docs): d18 through this kernel
-    * runs 33 s absolute vs 71 s for round 9's uncapped join — the cap
-    * HALVES the wall at scale on top of removing the k² hazard. */
-  def cappedPairCounts(hs: DataFrame, dfCap: Int): DataFrame = {
+    * value matches the uncapped (and oracle) arithmetic exactly. A pair
+    * sharing ONLY corpus-hot shingles is, definitionally, boilerplate —
+    * not a dup pair, not eval leakage — and every consumer's oracle
+    * mirrors that qualification. Measured at 500k docs: d18 through this
+    * kernel runs 33 s absolute vs 71 s for round 9's uncapped join. */
+  private[operators] def cappedSharedCounts(hs: DataFrame, dfCap: Long,
+      a: String, b: String, split: Option[Column], minDf: Boolean = false): DataFrame = {
     // Round 17 A/B (OPTIMIZATION_r17 item 3; the deleted PairProbe main,
     // commit 66fe07c; sf0.1, interleaved min-of-3): a
     // bounded_min_ids aggregate + array pair expansion — one hs pass, one
@@ -382,35 +408,38 @@ object Dedup {
     // partial bounded arrays are ~|hs| bytes too (most shingles have
     // df = 1), and its O(df²) expansion is interpreted expression code
     // where the join is whole-stage codegen.
-    val hot = hs.groupBy("sh_h").agg(count(lit(1)).as("df"))
-      .filter(col("df") > dfCap).select("sh_h").localCheckpoint()
-    // Empty-hot fast path (round 16): on healthy corpora no shingle
-    // crosses the cap, so the anti-join is the identity and both hot-set
-    // recovery legs are empty — skip their checkpoint job and two left
-    // joins outright. One take(1) probe on the already-materialized hot
-    // checkpoint decides; result-identical either way (n_common = n_rare
-    // when no hot shingle exists), and the boiler-corpus path is
-    // unchanged (DedupCapSpec exercises it).
-    if (hot.isEmpty)
-      return hs.select(col("doc_id").as("a"), col("sh_h")).hint("merge")
-        .join(hs.select(col("doc_id").as("b"), col("sh_h")).hint("merge"), "sh_h")
-        .filter(col("a") < col("b"))
-        .groupBy("a", "b").agg(count(lit(1)).as("n_common"))
-    val rare = hs.join(hot, Seq("sh_h"), "left_anti")
-    val rareCounts = rare.select(col("doc_id").as("a"), col("sh_h")).hint("merge")
-      .join(rare.select(col("doc_id").as("b"), col("sh_h")).hint("merge"), "sh_h")
-      .filter(col("a") < col("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("n_rare"))
+    val dfs = hs.groupBy("sh_h").agg(count(lit(1)).as("df"))
+    val (hot, rare) =
+      if (minDf) {
+        val t = dfs.localCheckpoint()
+        (t.filter(col("df") > dfCap).select("sh_h"), hs.join(t.filter(col("df") <= dfCap), "sh_h"))
+      } else {
+        val h = dfs.filter(col("df") > dfCap).select("sh_h").localCheckpoint()
+        (h, hs.join(h, Seq("sh_h"), "left_anti"))
+      }
+    val hotEmpty = hot.isEmpty
+    val rows = if (hotEmpty && !minDf) hs else rare
+    val sideA = split.fold(rows)(rows.filter)
+      .select(Seq(col("doc_id").as(a), col("sh_h")) ++ (if (minDf) Seq(col("df")) else Nil): _*)
+    val sideB = split.fold(rows)(p => rows.filter(!p)).select(col("doc_id").as(b), col("sh_h"))
+    val joined = sideA.hint("merge").join(sideB.hint("merge"), Seq("sh_h"))
+    val pairs = (if (split.isEmpty) joined.filter(col(a) < col(b)) else joined)
+      .groupBy(a, b)
+      .agg(count(lit(1)).as("n_rare"), (if (minDf) Seq(min("df").as("min_df")) else Nil): _*)
+    if (hotEmpty) return pairs.withColumnRenamed("n_rare", "n_shared")
     val hotSets = hs.join(hot, Seq("sh_h"))
-      .groupBy("doc_id").agg(sort_array(collect_set(col("sh_h"))).as("hot_set"))
+      .groupBy(col("doc_id") +: split.map(_.as("in_a")).toSeq: _*)
+      .agg(sort_array(collect_set(col("sh_h"))).as("hot_set"))
       .localCheckpoint()
-    rareCounts
-      .join(hotSets.select(col("doc_id").as("a"), col("hot_set").as("hot_a")), Seq("a"), "left")
-      .join(hotSets.select(col("doc_id").as("b"), col("hot_set").as("hot_b")), Seq("b"), "left")
-      .select(col("a"), col("b"),
-        (col("n_rare") +
-          coalesce(size(array_intersect(col("hot_a"), col("hot_b"))), lit(0)).cast("long"))
-          .as("n_common"))
+    def hotOf(id: String, side: Column): DataFrame =
+      split.fold(hotSets)(_ => hotSets.filter(side))
+        .select(col("doc_id").as(id), col("hot_set").as(s"hot_$id"))
+    pairs
+      .join(hotOf(a, col("in_a")), Seq(a), "left")
+      .join(hotOf(b, !col("in_a")), Seq(b), "left")
+      .select(pairs.columns.filter(_ != "n_rare").map(col) :+ (col("n_rare") +
+        coalesce(size(array_intersect(col(s"hot_$a"), col(s"hot_$b"))), lit(0)).cast("long"))
+        .as("n_shared"): _*)
   }
 
   /** Exact pairwise Jaccard (pairs with ≥1 common shingle) over an
@@ -428,19 +457,19 @@ object Dedup {
     jaccardFromCounts(hs, inter)
   }
 
-  /** Attach set sizes to an (a, b, n_common) pair table and emit the
-    * rounded Jaccard — the shared tail of the uncapped, LSH-gated, and
-    * df-capped kernels (identical arithmetic, so the oracle boundary
-    * can't drift between them). */
+  /** Attach set sizes to an (a, b, [extras,] n_common) pair table and
+    * emit the rounded Jaccard in place of n_common — the shared tail of
+    * the uncapped, LSH-gated, and df-capped kernels and d33's curve
+    * (identical arithmetic, so the oracle boundary can't drift between
+    * them). */
   private def jaccardFromCounts(hs: DataFrame, counts: DataFrame): DataFrame = {
     val sizes = hs.groupBy("doc_id").agg(count(lit(1)).as("n"))
     counts
       .join(sizes.select(col("doc_id").as("a"), col("n").as("n_a")), "a")
       .join(sizes.select(col("doc_id").as("b"), col("n").as("n_b")), "b")
-      .select(
-        col("a"), col("b"),
+      .select(counts.columns.filter(_ != "n_common").map(col) :+
         round(col("n_common").cast("double") /
-          (col("n_a") + col("n_b") - col("n_common")).cast("double"), 4).as("jaccard"))
+          (col("n_a") + col("n_b") - col("n_common")).cast("double"), 4).as("jaccard"): _*)
   }
 
   /** Exact Jaccard over df-capped candidates ([[cappedPairCounts]]):
@@ -794,6 +823,10 @@ object Dedup {
     embeddingPairsFrom(ev, threshold, nCells, kmeansIters)._1
   }
 
+  /** acos clamped to its domain: a dot of unit vectors can land a rounding
+    * step outside [-1, 1]. */
+  private def clampAcos(x: Double): Double = math.acos(math.max(-1.0, math.min(1.0, x)))
+
   /** The triangle-inequality candidate test, as pure driver-side math over
     * codebook-sized inputs: ordered cell pairs (i, j) that can possibly
     * hold a doc pair with cosine ≥ threshold (see [[embeddingPairsFrom]]).
@@ -804,7 +837,6 @@ object Dedup {
       radii: Map[Int, Double],
       threshold: Double): Seq[(Int, Int)] = {
     import Similarity.dotd
-    def clampAcos(x: Double): Double = math.acos(math.max(-1.0, math.min(1.0, x)))
     // θ_t with slack: round6(cos) ≥ t admits raw cos down to t − 5e-7, and
     // acos on doubles carries rounding error near ±1 — both slacks only
     // widen the candidate set, never narrow it.
@@ -835,7 +867,6 @@ object Dedup {
       .sortBy(_._1).map { case (id, v) => (id.toInt, unit(v)) }
     val codebook = Similarity.refineCodebook(spark, ev, seeds, kmeansIters)
     val bc = spark.sparkContext.broadcast(codebook)
-    def clampAcos(x: Double): Double = math.acos(math.max(-1.0, math.min(1.0, x)))
     // Cell assignment (same nearest-centroid tie-break as s04) + angle to
     // the assigned centroid. Materialized once: read by the radius agg and
     // both sides of the verify join.
@@ -888,6 +919,42 @@ object Dedup {
             ORDER BY a, b"""))
 
   // ------------------------------------------------- dedup cluster assembly
+  /** The driver/distributed cutover of connected components: an edge
+    * list of at most this many rows (~3 MB) is solved on the driver. */
+  private val DriverEdgeCap = 200000L
+
+  /** Union-find over the edge list `pairs(a, b)` on the driver, when it
+    * holds at most `cap` edges: Some((vertex, label)) sorted by vertex,
+    * None over the cap (the caller's distributed arm). The size check is
+    * a LIMIT-(cap+1) collect, not count()-then-collect(): one job, at
+    * most cap+1 rows ever reach the driver, and in the common small-graph
+    * case the probe already IS the edge list. Union-by-min-root + path
+    * compression makes each label the component minimum — the label the
+    * distributed propagation converges to. */
+  private def driverComponents(pairs: DataFrame, cap: Long): Option[Seq[(Long, Long)]] = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val edges = pairs
+      .select(col("a").cast("long"), col("b").cast("long"))
+      .limit(cap.toInt + 1)
+      .as[(Long, Long)].collect()
+    if (edges.length > cap) return None
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val ra = find(a)
+      val rb = find(b)
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    Some(parent.keys.toSeq.sorted.map(v => (v, find(v))))
+  }
+
   /** Distributed connected components over an undirected edge list
     * `(a, b)` — one row per vertex with its component label (the component
     * minimum). Min-label propagation with path halving; see
@@ -895,42 +962,16 @@ object Dedup {
     * materialized (checkpointed) by the caller — every round joins it.
     * Property-tested against in-memory union-find on random graphs. */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 50,
-      driverThreshold: Long = 200000L): DataFrame = {
+      driverThreshold: Long = DriverEdgeCap): DataFrame = {
     val idType = pairs.schema("a").dataType
     // Size-adaptive: the edge list is the LSH+verify-gated near-dup pair
     // set — tiny relative to the corpus in healthy data, corpus-scale only
-    // when duplication is rampant. Below `driverThreshold` edges (a
-    // BOUNDED collect, ~3 MB at the default) a driver union-find solves
-    // the graph exactly in one pass instead of O(log d) shuffle rounds ×
-    // 3 jobs each; above it, the distributed loop runs. Labels are
-    // identical either way: union-by-min-root + path compression yields
-    // the component minimum, the same label the propagation converges to.
-    //
-    // The size check is a LIMIT-(threshold+1) collect, not count()-then-
-    // collect(): one job instead of two, still bounded (at most
-    // threshold+1 rows ever reach the driver), and in the common small-
-    // graph case the probe already IS the edge list.
+    // when duplication is rampant. Below `driverThreshold` edges a driver
+    // union-find solves the graph exactly in one pass instead of O(log d)
+    // shuffle rounds × 3 jobs each; above it, the distributed loop runs.
     val spark = pairs.sparkSession
     import spark.implicits._
-    val probe = pairs
-      .select(col("a").cast("long"), col("b").cast("long"))
-      .limit(driverThreshold.toInt + 1)
-      .as[(Long, Long)].collect()
-    if (probe.length <= driverThreshold) {
-      val edges = probe
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
-        r
-      }
-      edges.foreach { case (a, b) =>
-        parent.getOrElseUpdate(a, a)
-        parent.getOrElseUpdate(b, b)
-        val ra = find(a)
-        val rb = find(b)
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
+    driverComponents(pairs, driverThreshold) match {
       // Keep this a Seq.toDF (LocalRelation), NOT sc.parallelize: a
       // LocalRelation carries exact size statistics, so every downstream
       // keep-verdict join auto-broadcasts the label table (and a broadcast
@@ -938,9 +979,10 @@ object Dedup {
       // without launching tasks). An ExistingRDD would hide the size and
       // silently degrade those joins to SortMergeJoin (caught by
       // CorpusStatsSpec's plan-shape assertion in round 17).
-      return parent.keys.toSeq.sorted.map(v => (v, find(v)))
-        .toDF("doc_id", "label")
-        .select(col("doc_id").cast(idType).as("doc_id"), col("label").cast(idType).as("label"))
+      case Some(labels) =>
+        return labels.toDF("doc_id", "label").select(
+          col("doc_id").cast(idType).as("doc_id"), col("label").cast(idType).as("label"))
+      case None =>
     }
     // Undirected edge list, both directions — two projections of the
     // materialized pair RDD, no separate checkpoint needed.
@@ -1567,10 +1609,10 @@ object Dedup {
       .select(col("a"), col("b"))
     // ---- decide: components of the delta-adjacent graph; corpus wins.
     // Bounded-graph fast path (round 17): the near-pair edge list is
-    // verify-gated — tiny on healthy corpora — so, exactly like
-    // [[connectedComponents]]' own driver arm, a LIMIT-bounded collect of
-    // the edges plus ONE bounded vertex-classification semi-join runs the
-    // whole decide phase driver-side: the distributed form spent ~8 tiny
+    // verify-gated — tiny on healthy corpora — so [[driverComponents]]
+    // (connectedComponents' own driver arm) plus ONE bounded vertex-
+    // classification semi-join runs the whole decide phase driver-side:
+    // the distributed form spent ~8 tiny
     // jobs on broadcast builds over label tables this path has just proven
     // are ≤ cap rows. Identical math — union-by-min-root labels are the
     // component minima the propagation converges to; "vertex ∉ delta fp
@@ -1580,58 +1622,41 @@ object Dedup {
     // bounded VERTEX set is ever collected or re-shipped — never the
     // delta, never the corpus. An over-cap graph (rampant duplication)
     // takes the distributed arm unchanged.
-    val EdgeCap = 200000
     val sparkD = delta.sparkSession
     import sparkD.implicits._
-    val probeEdges = nearPairs
-      .select(col("a").cast("long"), col("b").cast("long"))
-      .limit(EdgeCap + 1)
-      .as[(Long, Long)].collect()
-    val nearDrop: DataFrame = if (probeEdges.length <= EdgeCap) {
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
-        r
-      }
-      probeEdges.foreach { case (a, b) =>
-        parent.getOrElseUpdate(a, a)
-        parent.getOrElseUpdate(b, b)
-        val ra = find(a)
-        val rb = find(b)
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val verts = parent.keys.toArray.sorted
-      val deltaVerts: Set[Long] =
-        if (verts.isEmpty) Set.empty
-        else sparkD.sparkContext.parallelize(verts.toSeq, 1).toDF("doc_id")
-          .join(dFp.select("doc_id"), Seq("doc_id"), "leftsemi")
-          .as[Long].collect().toSet
-      val labelOf = verts.iterator.map(v => v -> find(v)).toMap
-      val corpusLbls = verts.iterator.filterNot(deltaVerts).map(labelOf).toSet
-      val reps = scala.collection.mutable.Map.empty[Long, Long]
-      verts.iterator.filter(deltaVerts).foreach { v =>
-        val l = labelOf(v)
-        reps.update(l, math.min(reps.getOrElse(l, Long.MaxValue), v))
-      }
-      val dropIds = verts.iterator.filter(deltaVerts)
-        .filter(v => corpusLbls.contains(labelOf(v)) || v != reps(labelOf(v)))
-        .toSeq
-      sparkD.sparkContext.parallelize(dropIds, 1).toDF("doc_id")
-    } else {
-      val labels = connectedComponents(nearPairs)
-      val corpusLabels = labels
-        .join(broadcast(candCorpusDocs), Seq("doc_id"))
-        .select(col("label")).distinct()
-      val deltaLabels = labels
-        .join(broadcast(dFp.select("doc_id")), Seq("doc_id"))
-      val deltaReps = deltaLabels.groupBy("label").agg(min("doc_id").as("rep"))
-      deltaLabels
-        .join(broadcast(deltaReps), Seq("label"))
-        .join(broadcast(corpusLabels.withColumnRenamed("label", "l")),
-          col("label") === col("l"), "left")
-        .filter(col("l").isNotNull || col("doc_id") =!= col("rep"))
-        .select("doc_id").distinct()
+    val nearDrop: DataFrame = driverComponents(nearPairs, DriverEdgeCap) match {
+      case Some(labels) =>
+        val verts = labels.map(_._1)
+        val deltaVerts: Set[Long] =
+          if (verts.isEmpty) Set.empty
+          else sparkD.sparkContext.parallelize(verts, 1).toDF("doc_id")
+            .join(dFp.select("doc_id"), Seq("doc_id"), "leftsemi")
+            .as[Long].collect().toSet
+        val labelOf = labels.toMap
+        val corpusLbls = verts.iterator.filterNot(deltaVerts).map(labelOf).toSet
+        val reps = scala.collection.mutable.Map.empty[Long, Long]
+        verts.iterator.filter(deltaVerts).foreach { v =>
+          val l = labelOf(v)
+          reps.update(l, math.min(reps.getOrElse(l, Long.MaxValue), v))
+        }
+        val dropIds = verts.iterator.filter(deltaVerts)
+          .filter(v => corpusLbls.contains(labelOf(v)) || v != reps(labelOf(v)))
+          .toSeq
+        sparkD.sparkContext.parallelize(dropIds, 1).toDF("doc_id")
+      case None =>
+        val labels = connectedComponents(nearPairs)
+        val corpusLabels = labels
+          .join(broadcast(candCorpusDocs), Seq("doc_id"))
+          .select(col("label")).distinct()
+        val deltaLabels = labels
+          .join(broadcast(dFp.select("doc_id")), Seq("doc_id"))
+        val deltaReps = deltaLabels.groupBy("label").agg(min("doc_id").as("rep"))
+        deltaLabels
+          .join(broadcast(deltaReps), Seq("label"))
+          .join(broadcast(corpusLabels.withColumnRenamed("label", "l")),
+            col("label") === col("l"), "left")
+          .filter(col("l").isNotNull || col("doc_id") =!= col("rep"))
+          .select("doc_id").distinct()
     }
     // ONE broadcast verdict table instead of two (round-15 job fold):
     // exact-over-near precedence rides min(reason) — legal because
@@ -1730,58 +1755,29 @@ object Dedup {
   // ------------------------------------------------------- decontamination
   /** (doc_id, eval_doc, n_shared) for every (corpus, eval) document pair
     * sharing at least one shingle whose document frequency over BOTH
-    * sides is ≤ dfCap, with n_shared EXACT over ALL shared shingles (hot
-    * ones included) — the BIPARTITE specialization of
-    * [[cappedPairCounts]] (d04/d18/d21's kernel) for the decontamination
-    * family (d09/d19/p03). Same three-step shape: one shingle-keyed df
-    * aggregate carves out hot shingles (checkpointed — empty on healthy
-    * corpora, so the planner sees its true size); candidate pairs come
-    * from a merge-pinned equi-join over the RARE rows only (both sides
-    * can be corpus-proportional — d09's shipped `%19` instantiation is —
-    * so a broadcast is never safe to hard-code; fan-out per shingle is
-    * dfCap²-bounded always); hot shared counts are recovered per
-    * CANDIDATE pair from per-doc hot arrays via two doc-keyed left joins
-    * + array_intersect. A (corpus, eval) pair sharing ONLY corpus-hot
-    * shingles is, definitionally, boilerplate coincidence — not eval
-    * leakage (the d04/d21 cap argument, and the same frequent-n-gram
-    * exclusion the published decontamination recipes apply); every
-    * emitted count still equals the uncapped arithmetic. Capped ≡
-    * uncapped on sub-cap corpora is spec-asserted (DedupCapSpec), and
-    * both the d09 and d19 oracles mirror the qualification, so stated
-    * contract = executed semantics at any df distribution.
-    *
-    * Inputs are distinct (doc_id, sh_h) / (eval_doc, sh_h) rows; callers
-    * checkpoint them (each side is consumed by the df union, the rare
-    * carve-out, and the hot-set recovery). */
-  private def cappedContamPairs(corpusSh: DataFrame, evalSh: DataFrame,
+    * sides is ≤ dfCap — [[cappedSharedCounts]] for the decontamination
+    * family (d09/d19/d35/p03) when corpus and eval are two SEPARATE
+    * tables: both sides' shingle rows go in as one table tagged by side
+    * (their doc ids may collide). A (corpus, eval) pair sharing ONLY
+    * corpus-hot shingles is, definitionally, boilerplate coincidence —
+    * not eval leakage (the same frequent-n-gram exclusion the published
+    * decontamination recipes apply); every emitted count still equals
+    * the uncapped arithmetic, and both the d09 and d19 oracles mirror
+    * the qualification. */
+  private def contamPairs(docs: DataFrame, evalDocs: DataFrame, n: Int,
       dfCap: Int): DataFrame = {
-    val hot = corpusSh.select("sh_h").union(evalSh.select("sh_h"))
-      .groupBy("sh_h").agg(count(lit(1)).as("df"))
-      .filter(col("df") > dfCap).select("sh_h").localCheckpoint()
-    // Empty-hot fast path — see cappedPairCounts: identical result, the
-    // two hot-array checkpoints and three joins skipped when no shingle
-    // crosses the cap.
-    if (hot.isEmpty)
-      return corpusSh.hint("merge").join(evalSh.hint("merge"), Seq("sh_h"))
-        .groupBy("doc_id", "eval_doc").agg(count(lit(1)).as("n_shared"))
-    val rareC = corpusSh.join(hot, Seq("sh_h"), "left_anti")
-    val rareE = evalSh.join(hot, Seq("sh_h"), "left_anti")
-    val rarePairs = rareC.hint("merge").join(rareE.hint("merge"), Seq("sh_h"))
-      .groupBy("doc_id", "eval_doc").agg(count(lit(1)).as("n_rare"))
-    val hotC = corpusSh.join(hot, Seq("sh_h"))
-      .groupBy("doc_id").agg(sort_array(collect_set(col("sh_h"))).as("hot_c"))
-      .localCheckpoint()
-    val hotE = evalSh.join(hot, Seq("sh_h"))
-      .groupBy("eval_doc").agg(sort_array(collect_set(col("sh_h"))).as("hot_e"))
-      .localCheckpoint()
-    rarePairs
-      .join(hotC, Seq("doc_id"), "left")
-      .join(hotE, Seq("eval_doc"), "left")
-      .select(col("doc_id"), col("eval_doc"),
-        (col("n_rare") +
-          coalesce(size(array_intersect(col("hot_c"), col("hot_e"))), lit(0)).cast("long"))
-          .as("n_shared"))
+    def side(t: DataFrame, isEval: Boolean): DataFrame =
+      hashedShingles(shingleSets(t, n)).localCheckpoint().withColumn("is_eval", lit(isEval))
+    cappedSharedCounts(side(docs, false).unionAll(side(evalDocs, true)), dfCap,
+      "doc_id", "eval_doc", Some(!col("is_eval")))
   }
+
+  /** The shipped eval slice: `doc_id % 19 == 0` of one shingle table
+    * stands in for the external benchmark table, the other 18/19 are the
+    * corpus — the split applied as cheap filters over the one table
+    * (d21's single-scan trick). */
+  private def contamSplit(sh: DataFrame, dfCap: Int): DataFrame =
+    cappedSharedCounts(sh, dfCap, "doc_id", "eval_doc", Some(col("doc_id") % 19 =!= 0))
 
   /** d09's rollup over the pair kernel: corpus-doc grain. */
   private def decontamRollup(pairs: DataFrame): DataFrame =
@@ -1790,25 +1786,6 @@ object Dedup {
         count(lit(1)).as("n_eval_docs"),
         sum("n_shared").as("n_shared_ngrams"))
 
-  /** The shipped d09/d19 instantiation's pair table: the deterministic
-    * `doc_id % 19 == 0` slice stands in for the external benchmark table;
-    * the other 18/19 are the corpus. ONE shingle pass, checkpointed, with
-    * the split applied as cheap filters over the checkpoint blocks (d21's
-    * single-scan trick) — and, because this eval side is
-    * corpus-PROPORTIONAL, routed through the df-capped kernel: uncapped,
-    * one corpus-hot shingle on both sides of the split yields
-    * df_corpus·df_eval pair rows (the builder's boiler-corpus accounting
-    * measured 9.978e8 such rows at 10× before the cap). */
-  /** Qualified-pair memo, one [[graft.SessionMemo.corpus]] artifact per
-    * n: d09 and d19 are two rollups (corpus-keyed / eval-keyed) of the SAME pair
-    * evidence, and a release process runs both — recomputing the shingle
-    * pass + df qualification per report doubled the cost the df-cap
-    * reroute added. d35's three-n sweep retains all three entries
-    * (candidate-sized each, ≪ corpus) instead of the old single-entry
-    * evict-and-recompute churn; the shingle side reads the memoized
-    * per-n table, so one tokenize pass per (corpus, n) serves the whole
-    * contamination family. Bench accounting: the contam-memo stance
-    * documented at [[graft.SessionMemo]]. */
   /** Free the checkpoint blocks behind a `localCheckpoint`ed DataFrame.
     * `Dataset.unpersist` is a NO-OP for these (localCheckpoint persists
     * the RDD directly, bypassing the cache manager), and ContextCleaner
@@ -1829,22 +1806,27 @@ object Dedup {
       case _ => None
     }
 
+  /** The shipped d09/d19 pair table ([[contamSplit]] over the memoized
+    * per-n shingle table), one [[graft.SessionMemo.corpus]] artifact per
+    * n. The eval side is corpus-PROPORTIONAL, hence the df-capped kernel:
+    * uncapped, one corpus-hot shingle on both sides of the split yields
+    * df_corpus·df_eval pair rows (9.978e8 such rows on a 10× boiler
+    * corpus). d09 and d19 are two rollups (corpus-keyed / eval-keyed) of
+    * the SAME pair evidence, and d35's three-n sweep retains all three
+    * entries (candidate-sized each, ≪ corpus), so one tokenize pass per
+    * (corpus, n) serves the whole contamination family. Bench
+    * accounting: the contam-memo stance documented at
+    * [[graft.SessionMemo]]. */
   private[operators] def contamSplitPairs(spark: SparkSession, d: String, n: Int): DataFrame =
-    SessionMemo.corpus.checkpointed(spark, d, s"contam@$n") {
-      val sh = corpusShingleHashes(spark, d, n)
-      cappedContamPairs(
-        sh.filter(col("doc_id") % 19 =!= 0),
-        sh.filter(col("doc_id") % 19 === 0)
-          .select(col("doc_id").as("eval_doc"), col("sh_h")),
-        ShingleDfCap)
-    }
+    SessionMemo.corpus.checkpointed(spark, d, s"contam@$n")(
+      contamSplit(corpusShingleHashes(spark, d, n), ShingleDfCap))
 
   /** Benchmark decontamination: find training-corpus documents sharing any
     * word-n-gram with a held-out eval suite — the standard pre-training
     * hygiene check (eval contamination inflates benchmark scores). The
     * eval set is an EXTERNAL table (the benchmark suite itself), passed in
     * as `evalDocs` — typically benchmark-sized, but the plan no longer
-    * DEPENDS on that: the probe rides [[cappedContamPairs]], so cost is
+    * DEPENDS on that: the probe rides [[cappedSharedCounts]], so cost is
     * corpus shingle volume + a dfCap²-bounded pairing join at any eval
     * size and any df distribution. 5-grams (vs the classic 13-gram rule)
     * suit this corpus's short docs; the n is a parameter.
@@ -1853,12 +1835,8 @@ object Dedup {
     decontamRollup(contamSplitPairs(spark, d, n))
 
   def decontaminate(docs: DataFrame, evalDocs: DataFrame, n: Int,
-      dfCap: Int = ShingleDfCap): DataFrame = {
-    val cs = hashedShingles(shingleSets(docs, n)).localCheckpoint()
-    val es = hashedShingles(shingleSets(evalDocs, n))
-      .select(col("doc_id").as("eval_doc"), col("sh_h")).localCheckpoint()
-    decontamRollup(cappedContamPairs(cs, es, dfCap))
-  }
+      dfCap: Int = ShingleDfCap): DataFrame =
+    decontamRollup(contamPairs(docs, evalDocs, n, dfCap))
 
   /** p03's token leg, memo-backed (round 16): the eval/corpus split at
     * `doc_id < nEval` derived by FILTERING the memoized [[corpusShingleHashes]]
@@ -1870,12 +1848,8 @@ object Dedup {
     * p03; the two per-call localCheckpoint jobs go away entirely. */
   def decontaminateSplitAt(spark: SparkSession, d: String, nEval: Int,
       n: Int, dfCap: Int = ShingleDfCap): DataFrame = {
-    val sh = corpusShingleHashes(spark, d, n)
-    decontamRollup(cappedContamPairs(
-      sh.filter(col("doc_id") >= nEval),
-      sh.filter(col("doc_id") < nEval)
-        .select(col("doc_id").as("eval_doc"), col("sh_h")),
-      dfCap))
+    decontamRollup(cappedSharedCounts(corpusShingleHashes(spark, d, n), dfCap,
+      "doc_id", "eval_doc", Some(col("doc_id") >= nEval)))
   }
 
   val decontam = Q(
@@ -2411,7 +2385,6 @@ object Dedup {
       .sortBy(_._1).map { case (id, v) => (id.toInt, unit(v)) }
     val codebook = Similarity.refineCodebook(spark, ev, seeds, kmeansIters)
     val bc = spark.sparkContext.broadcast(codebook)
-    def clampAcos(x: Double): Double = math.acos(math.max(-1.0, math.min(1.0, x)))
     val celled = ev.map { case (id, v) =>
       val uv = unit(v)
       val (cell, sim) = bc.value
@@ -2545,18 +2518,14 @@ object Dedup {
     * corpus owner's question ("which of my docs are contaminated") — same
     * evidence, opposite grouping, both needed by a release process.
     *
-    * Scale shape: identical to d09 — the same [[cappedContamPairs]]
+    * Scale shape: identical to d09 — the same [[cappedSharedCounts]]
     * bipartite df-capped kernel, rolled up the other way (eval-keyed);
     * output is eval-sized (structurally tiny) at any corpus scale, and
     * the pairing join is dfCap²-bounded per shingle even when the eval
     * side is corpus-proportional (the shipped `%19` instantiation). */
   def evalLeakReport(docs: DataFrame, evalDocs: DataFrame, n: Int,
-      dfCap: Int = ShingleDfCap): DataFrame = {
-    val cs = hashedShingles(shingleSets(docs, n)).localCheckpoint()
-    val es = hashedShingles(shingleSets(evalDocs, n))
-      .select(col("doc_id").as("eval_doc"), col("sh_h")).localCheckpoint()
-    leakRollup(cappedContamPairs(cs, es, dfCap))
-  }
+      dfCap: Int = ShingleDfCap): DataFrame =
+    leakRollup(contamPairs(docs, evalDocs, n, dfCap))
 
   /** d19's rollup over the pair kernel: eval-item grain. */
   private def leakRollup(pairs: DataFrame): DataFrame =
@@ -2688,24 +2657,14 @@ object Dedup {
     *
     * Scale shape: the split decision is map-only (pure function of
     * doc_id); the overlap join is the DF-CAPPED shingle equi-join
-    * ([[cappedPairCounts]]'s shape specialized to the val×train
-    * bipartition). Unlike d09/d19, BOTH sides here are corpus-
-    * proportional (10%/90% of the corpus), so an uncapped join is the
-    * exact k² boilerplate detonator the d04/d18 kernel eliminates: one
-    * shingle on every doc yields 0.09·n² candidate rows. The cap removes
-    * that structurally — hot shingles (corpus df > dfCap) never reach the
-    * pairing join; a (val, train) pair qualifies on ≥1 shared SUB-CAP
-    * shingle, and the hot-shingle overlap mass of qualifying pairs is
-    * recovered EXACTLY from per-doc hot arrays (two doc-keyed left joins
-    * + array_intersect), so every emitted count equals the uncapped
-    * arithmetic. A pair sharing ONLY corpus-hot boilerplate is,
-    * definitionally, boilerplate — not split leakage (d04's cap
-    * argument); the oracle mirrors the same qualification, so stated
-    * contract and executed semantics coincide at any df distribution.
-    * Capped ≡ uncapped on healthy corpora is spec-asserted
-    * (DedupCapSpec), same as d04/d18. The pairing join is merge-hinted:
-    * both sides are corpus-derived checkpoint-scan branches, so a
-    * broadcast is never right at target scale.
+    * ([[cappedSharedCounts]] over the val×train bipartition). Unlike
+    * d09/d19, BOTH sides here are corpus-proportional (10%/90% of the
+    * corpus), so an uncapped join is the exact k² boilerplate detonator
+    * the kernel eliminates: one shingle on every doc yields 0.09·n²
+    * candidate rows. A (val, train) pair qualifies on ≥1 shared SUB-CAP
+    * shingle, its hot-shingle mass is recovered exactly, and the oracle
+    * mirrors the same qualification. Capped ≡ uncapped on healthy
+    * corpora is spec-asserted (DedupCapSpec), same as d04/d18.
     */
   def splitLeakage(docs: DataFrame, valPct: Int = 10, n: Int = 5,
       severeAt: Long = 3L, dfCap: Int = ShingleDfCap): DataFrame =
@@ -2715,48 +2674,16 @@ object Dedup {
 
   /** [[splitLeakage]] over an already-materialized hashed shingle table
     * (the corpus path reads the session-memoized one). */
-  def splitLeakageFromHashes(hsIn: DataFrame, valPct: Int = 10,
+  def splitLeakageFromHashes(hs: DataFrame, valPct: Int = 10,
       severeAt: Long = 3L, dfCap: Int = ShingleDfCap): DataFrame = {
     // The shingle pass is materialized upstream: read by the df aggregate,
     // the rare carve-out, and the hot-set recovery (execution rule 2). The
-    // split bucket is a pure function of doc_id, so it rides the shingle
-    // rows as a COLUMN — attaching it by doc-keyed join would shuffle the
-    // whole shingle table once more for nothing (measured at 100×: the
-    // join variant ran 36 s vs 17 s for this shape).
-    val sh = hsIn.withColumn("bucket", Sampling.hashBucket(col("doc_id")))
-    val hot = sh.groupBy("sh_h").agg(count(lit(1)).as("df"))
-      .filter(col("df") > dfCap).select("sh_h").localCheckpoint()
-    // Empty-hot fast path — see cappedPairCounts: identical result
-    // (n_shared = n_rare) with the hot-set checkpoint and two left
-    // joins skipped when no shingle crosses the cap.
-    val hotEmpty = hot.isEmpty
-    val rare = if (hotEmpty) sh else sh.join(hot, Seq("sh_h"), "left_anti")
-    val train = rare.filter(col("bucket") >= valPct)
-      .select(col("doc_id").as("train_doc"), col("sh_h"))
-    val valSide = rare.filter(col("bucket") < valPct)
-      .select(col("doc_id").as("val_doc"), col("sh_h"))
-    val rarePairs = valSide.hint("merge").join(train.hint("merge"), Seq("sh_h"))
-      .groupBy("val_doc", "train_doc")
-      .agg(count(lit(1)).as("n_rare"))
-    val shared =
-      if (hotEmpty)
-        rarePairs.select(col("val_doc"), col("train_doc"),
-          col("n_rare").as("n_shared"))
-      else {
-        val hotSets = sh.join(hot, Seq("sh_h"))
-          .groupBy("doc_id").agg(sort_array(collect_set(col("sh_h"))).as("hot_set"))
-          .localCheckpoint()
-        rarePairs
-          .join(hotSets.select(col("doc_id").as("val_doc"), col("hot_set").as("hot_v")),
-            Seq("val_doc"), "left")
-          .join(hotSets.select(col("doc_id").as("train_doc"), col("hot_set").as("hot_t")),
-            Seq("train_doc"), "left")
-          .select(col("val_doc"), col("train_doc"),
-            (col("n_rare") +
-              coalesce(size(array_intersect(col("hot_v"), col("hot_t"))), lit(0)).cast("long"))
-              .as("n_shared"))
-      }
-    shared
+    // split bucket is a pure function of doc_id, so it is evaluated on the
+    // shingle rows — attaching it by doc-keyed join would shuffle the
+    // whole shingle table once more for nothing (measured at 500k docs:
+    // the join variant ran 36 s vs 17 s for this shape).
+    cappedSharedCounts(hs, dfCap, "val_doc", "train_doc",
+        Some(Sampling.hashBucket(col("doc_id")) < valPct))
       .groupBy("val_doc")
       .agg(
         count(lit(1)).as("n_train_neighbors"),
@@ -3850,68 +3777,30 @@ object Dedup {
     * a pair is a candidate at cap c iff min_df ≤ c, so the three curve
     * points are conditional counts over one pair table, not three kernel
     * runs; Jaccard stays exact over ALL shingles (hot-set recovery at
-    * the 256 boundary, d04's arithmetic). Output exactly 3 rows. */
-  /** d33's kernel over an already-materialized hashed shingle table (the
-    * corpus path reads the session-memoized one; DedupCapSpec's d33
-    * curve test drives a planted boiler corpus through it). */
+    * the 256 boundary, d04's arithmetic). Output exactly 3 rows.
+    *
+    * Takes an already-materialized hashed shingle table (the corpus path
+    * reads the session-memoized one; DedupCapSpec's d33 curve test drives
+    * a planted boiler corpus through it). */
   def capOperatingCurveFromHashes(hs: DataFrame,
       caps: Seq[Long] = Seq(8L, 64L, 256L)): DataFrame = {
-      import hs.sparkSession.implicits._
-      val maxCap = caps.max
-      val dfTab = hs.groupBy("sh_h").agg(count(lit(1)).as("df"))
-        .localCheckpoint() // read by the rare join (twice) + hot recovery
-      val rare = hs.join(dfTab.filter(col("df") <= maxCap), Seq("sh_h"))
-      val rarePairs = rare.select(col("doc_id").as("a"), col("sh_h"), col("df"))
-        .hint("merge")
-        .join(rare.select(col("doc_id").as("b"), col("sh_h")).hint("merge"), "sh_h")
-        .filter(col("a") < col("b"))
-        .groupBy("a", "b")
-        .agg(count(lit(1)).as("n_rare"), min("df").as("min_df"))
-      val sizes = hs.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      // Empty-hot fast path — see cappedPairCounts: no shingle above the
-      // largest cap ⇒ n_common = n_rare, hot-set checkpoint + two left
-      // joins skipped (result-identical; the boiler-corpus spec drives
-      // the non-empty arm).
-      val hotDf = dfTab.filter(col("df") > maxCap)
-      val common =
-        if (hotDf.isEmpty)
-          rarePairs.select(col("a"), col("b"), col("min_df"),
-            col("n_rare").as("n_common"))
-        else {
-          val hotSets = hs.join(hotDf, Seq("sh_h"))
-            .groupBy("doc_id").agg(sort_array(collect_set(col("sh_h"))).as("hot_set"))
-            .localCheckpoint()
-          rarePairs
-            .join(hotSets.select(col("doc_id").as("a"), col("hot_set").as("hot_a")),
-              Seq("a"), "left")
-            .join(hotSets.select(col("doc_id").as("b"), col("hot_set").as("hot_b")),
-              Seq("b"), "left")
-            .select(col("a"), col("b"), col("min_df"),
-              (col("n_rare") +
-                coalesce(size(array_intersect(col("hot_a"), col("hot_b"))), lit(0))
-                  .cast("long")).as("n_common"))
-        }
-      val stats = common
-        .join(sizes.select(col("doc_id").as("a"), col("n").as("n_a")), "a")
-        .join(sizes.select(col("doc_id").as("b"), col("n").as("n_b")), "b")
-        .select(col("min_df"), col("n_common"), col("n_a"), col("n_b"))
-        .select(col("min_df"),
-          round(col("n_common").cast("double") /
-            (col("n_a") + col("n_b") - col("n_common")).cast("double"), 4)
-            .as("jaccard"))
-      // 3-row base LEFT join so an empty corpus still reports zero rows
-      // per cap (the oracle's shape).
-      caps.toDF("df_cap")
-        .join(stats
-          .select(explode(typedLit(caps)).as("df_cap"), col("min_df"), col("jaccard"))
-          .filter(col("min_df") <= col("df_cap"))
-          .groupBy("df_cap")
-          .agg(count(lit(1)).as("nc"),
-            count(when(col("jaccard") >= 0.12, 1)).as("np")),
-          Seq("df_cap"), "left")
-        .select(col("df_cap"),
-          coalesce(col("nc"), lit(0L)).as("n_candidates"),
-          coalesce(col("np"), lit(0L)).as("n_pairs"))
+    import hs.sparkSession.implicits._
+    val stats = jaccardFromCounts(hs,
+      cappedSharedCounts(hs, caps.max, "a", "b", None, minDf = true)
+        .withColumnRenamed("n_shared", "n_common"))
+    // 3-row base LEFT join so an empty corpus still reports zero rows
+    // per cap (the oracle's shape).
+    caps.toDF("df_cap")
+      .join(stats
+        .select(explode(typedLit(caps)).as("df_cap"), col("min_df"), col("jaccard"))
+        .filter(col("min_df") <= col("df_cap"))
+        .groupBy("df_cap")
+        .agg(count(lit(1)).as("nc"),
+          count(when(col("jaccard") >= 0.12, 1)).as("np")),
+        Seq("df_cap"), "left")
+      .select(col("df_cap"),
+        coalesce(col("nc"), lit(0L)).as("n_candidates"),
+        coalesce(col("np"), lit(0L)).as("n_pairs"))
   }
 
   val capCurve = Q(
@@ -4106,7 +3995,7 @@ object Dedup {
     * matches), so the curve reads as a survival function of match
     * strictness.
     *
-    * Scale shape: three runs of [[cappedContamPairs]] (each one shingle
+    * Scale shape: three runs of [[cappedSharedCounts]] (each one shingle
     * pass + a dfCap²-bounded pairing join), all three retained in the
     * session memo (multi-entry, so this sweep never evicts d09/d19's
     * n=5 entry and a re-run hits all three; the n=3 shingle table is the
@@ -4126,12 +4015,8 @@ object Dedup {
     * planted boiler corpus). */
   def contamNgramCurveFrom(docs: DataFrame, ns: Seq[Int] = Seq(5, 3, 8)): DataFrame =
     ns.map { n =>
-      val sh = hashedShingles(shingleSets(docs, n)).localCheckpoint()
-      contamCurveRow(cappedContamPairs(
-        sh.filter(col("doc_id") % 19 =!= 0),
-        sh.filter(col("doc_id") % 19 === 0)
-          .select(col("doc_id").as("eval_doc"), col("sh_h")),
-        ShingleDfCap), n)
+      contamCurveRow(contamSplit(
+        hashedShingles(shingleSets(docs, n)).localCheckpoint(), ShingleDfCap), n)
     }.reduce(_ unionAll _)
 
   val contamCurve = Q(

@@ -957,11 +957,10 @@ object Relational {
     * corpus share, ratio to the hottest key, and a `is_hot` flag at
     * `hotShare`. This is the operational readout a pipeline computes
     * BEFORE keying a 100 TB shuffle: a key whose share exceeds what one
-    * task should own is the signal to reach for AQE skew splitting or
-    * [[SkewJoin.saltedJoin]] (`SourcesAndSkewSpec`'s salted-join test pins
-    * the salted join to the plain one; the skewed-corpus rehearsal that
-    * timed both was `graft.SkewRehearsal`, last held by commit `69812aa`;
-    * this query is how a run decides it needs them). Shipped over the
+    * task should own is the signal to reach for AQE skew splitting or an
+    * explicitly salted join (`SkewJoin.saltedJoin`, last held by commit
+    * `69118af`, with the skewed-corpus rehearsal that timed both; this
+    * query is how a run decides it needs them). Shipped over the
     * documents `lang` key, whose distribution is genuinely skewed (en ≈
     * 44%, others ≈ 14%), so the flag is exercised in both directions.
     *

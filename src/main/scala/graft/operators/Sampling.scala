@@ -235,38 +235,6 @@ object Sampling {
               FROM documents)
             WHERE rank <= 10 ORDER BY source, rank"""))
 
-  /** The two-phase, skew-proof variant of [[sourceCap]]'s kernel — the
-    * refinement q35's scaladoc promises for the regime where a single hot
-    * key outgrows a partition (one crawl domain holding 90% of the
-    * corpus). Phase 1 ranks within (source, salt) — the hot source's rows
-    * spread over `salts` balanced partitions, each sorting only its slice
-    * and keeping its local k smallest hashes; phase 2 ranks the ≤ k·salts
-    * survivors per source exactly. Output-identical to the single-window
-    * plan by a standard argument: each of a source's true top-k rows is
-    * among the top-k of its own salt bucket (anything smaller in its
-    * bucket would also be in the true top-k), so phase 1 never drops a
-    * winner. Spec-asserted identical on the real corpus and on a
-    * 90%-hot-source fixture; measured against the single-window plan on
-    * the skewed rehearsal corpus (SCALE.md).
-    *
-    * The salt is a pure function of doc_id (not RNG) so the whole sample
-    * stays deterministic and partition-invariant end to end.
-    */
-  def sourceCapTwoPhase(docs: org.apache.spark.sql.DataFrame, k: Int,
-      salts: Int = 32): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val keyed = docs.select(col("doc_id"), col("source"),
-        md5(col("doc_id").cast("string")).as("h"))
-      .withColumn("salt", pmod(col("doc_id"), lit(salts.toLong)))
-    val w1 = Window.partitionBy("source", "salt").orderBy(col("h"), col("doc_id"))
-    val survivors = keyed
-      .withColumn("r1", row_number().over(w1)).filter(col("r1") <= k)
-    val w2 = Window.partitionBy("source").orderBy(col("h"), col("doc_id"))
-    survivors.withColumn("rank", row_number().over(w2).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("doc_id"), col("source"), col("rank"))
-  }
-
   val all: Seq[Q] =
     Seq(hashSample, stratifiedSample, weightedMix, temperatureMix, sourceCap)
 }

@@ -415,31 +415,32 @@ object Similarity {
       .write.mode("append").partitionBy("cell").parquet(indexPath)
   }
 
-  /** Probe a written IVF index: per query, find its `nProbe` nearest cells
-    * from the persisted codebook, then scan ONLY those cell partitions
-    * (`cell IN (literal cells)` — static partition pruning) and score.
-    * Results are identical to [[ivfTopK]] with the same geometry; the
-    * difference is what gets READ. */
-  /** The probe's (cell, query_id, qe) assignment — each query mapped to its
-    * `nProbe` nearest cells under the persisted codebook. Shared by
-    * [[ivfProbeIndex]] and the scale rehearsal's work accounting (rows
-    * scanned / pairs scored), so the measured quantities use exactly the
-    * serving path's geometry. */
-  def ivfProbeQueries(spark: SparkSession, d: String, indexPath: String,
-      nQueries: Int, nProbe: Int): DataFrame = {
+  /** The IVF probe set-up shared by every IVF search: (cell, query_id, qe)
+    * — each query (the vectors of `e` = (vec_id, embedding) with vec_id <
+    * nQueries) mapped to its `nProbe` nearest cells under `codebook`. */
+  private def ivfProbeQueries(spark: SparkSession, e: DataFrame,
+      codebook: Array[(Int, Array[Double])], nQueries: Int, nProbe: Int): DataFrame = {
     import spark.implicits._
-    val codebook = spark.read.parquet(indexPath + "_codebook")
-      .as[(Int, Array[Double])].collect().sortBy(_._1) // codebook-sized
     val bc = spark.sparkContext.broadcast(codebook)
     def nearestCells(v: Array[Float], n: Int): Seq[Int] =
       bc.value.map { case (cid, c) => (cid, dotd(unit(v), c)) }
         .sortBy { case (cid, s) => (-s, cid) }.take(n).map(_._1).toSeq
-    Tables.embeddings(spark, d).select(col("vec_id"), col("embedding"))
-      .filter(col("vec_id") < nQueries)
-      .as[(Long, Array[Float])]
+    // Column filter BEFORE the typed view: the lambda form deserializes
+    // every corpus row to find nQueries of them.
+    e.filter(col("vec_id") < nQueries).as[(Long, Array[Float])]
       .flatMap { case (id, v) => nearestCells(v, nProbe).map(c => (c, id, v)) }
       .toDF("cell", "query_id", "qe")
   }
+
+  /** (query_id, neighbor_id, c): each query's cosine against every
+    * (cell, neighbor_id, ne) corpus row in its probed cells, one row per
+    * (query, neighbor) pair — the cosine cell join every IVF search
+    * shares. */
+  private def ivfProbeSims(corpus: DataFrame, queries: DataFrame): DataFrame =
+    corpus.join(broadcast(queries), Seq("cell"))
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), cosine(col("qe"), col("ne")).as("c"))
+      .dropDuplicates("query_id", "neighbor_id")
 
   /** Tombstone deletion — the third verb of the index lifecycle
     * (build → append → DELETE → compact): deleted ids land in a tiny
@@ -462,10 +463,19 @@ object Similarity {
     if (fs.exists(p)) Some(spark.read.parquet(indexPath + "_tombstones")) else None
   }
 
+  /** Probe a written IVF index: per query, find its `nProbe` nearest cells
+    * from the persisted codebook, then scan ONLY those cell partitions
+    * (`cell IN (literal cells)` — static partition pruning) and score.
+    * Results are identical to [[ivfTopK]] with the same geometry; the
+    * difference is what gets READ. */
   def ivfProbeIndex(spark: SparkSession, d: String, indexPath: String,
       nQueries: Int, k: Int, nProbe: Int = 4): DataFrame = {
     import spark.implicits._
-    val queries = ivfProbeQueries(spark, d, indexPath, nQueries, nProbe)
+    val codebook = spark.read.parquet(indexPath + "_codebook")
+      .as[(Int, Array[Double])].collect().sortBy(_._1) // codebook-sized
+    val queries = ivfProbeQueries(spark,
+      Tables.embeddings(spark, d).select(col("vec_id"), col("embedding")),
+      codebook, nQueries, nProbe)
     // The probe cell set is queries×nProbe ints — collecting it makes the
     // IN literal, which is what lets the scan prune partitions statically.
     val probeCells = queries.select("cell").distinct().as[Int].collect().toSeq.sorted
@@ -482,11 +492,7 @@ object Similarity {
       .fold(live)(ts => live.join(ts.withColumnRenamed("vec_id", "neighbor_id"),
         Seq("neighbor_id"), "left_anti"))
       .filter(col("cell").isin(probeCells: _*))
-    val sims = corpus.join(broadcast(queries), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), cosine(col("qe"), col("ne")).as("c"))
-      .dropDuplicates("query_id", "neighbor_id")
-    topKClose(sims, k)
+    topKClose(ivfProbeSims(corpus, queries), k)
   }
 
   def ivfTopK(spark: SparkSession, d: String, nQueries: Int, k: Int,
@@ -508,23 +514,9 @@ object Similarity {
     * feeds; the generic `ivfTopKFrom` builds both parts inline. */
   def ivfTopKFromIndex(spark: SparkSession, e: DataFrame,
       codebook: Array[(Int, Array[Double])], corpus: DataFrame,
-      nQueries: Int, k: Int, nProbe: Int): DataFrame = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(codebook)
-    def nearestCells(v: Array[Float], n: Int): Seq[Int] =
-      bc.value.map { case (cid, c) => (cid, dotd(unit(v), c)) }
-        .sortBy { case (cid, s) => (-s, cid) }.take(n).map(_._1).toSeq
-    // Column filter BEFORE the typed view: the lambda form deserializes
-    // every corpus row to find nQueries of them.
-    val queries = e.filter(col("vec_id") < nQueries).as[(Long, Array[Float])]
-      .flatMap { case (id, v) => nearestCells(v, nProbe).map(c => (c, id, v)) }
-      .toDF("cell", "query_id", "qe")
-    val sims = corpus.join(broadcast(queries), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), cosine(col("qe"), col("ne")).as("c"))
-      .dropDuplicates("query_id", "neighbor_id")
-    topKClose(sims, k)
-  }
+      nQueries: Int, k: Int, nProbe: Int): DataFrame =
+    topKClose(ivfProbeSims(corpus,
+      ivfProbeQueries(spark, e, codebook, nQueries, nProbe)), k)
 
   val annIvf = Q(
     "s04_ann_ivf",
@@ -595,7 +587,6 @@ object Similarity {
     */
   def ivfStaleTopK(spark: SparkSession, d: String, nQueries: Int, k: Int,
       nCells: Int = 16, nProbe: Int = 4, kmeansIters: Int = 3): DataFrame = {
-    import spark.implicits._
     val e = Tables.embeddings(spark, d).select(col("vec_id"), col("embedding"))
     // max over a ZERO-ROW table is NULL (empty daily delta): split 0 keeps
     // both halves empty instead of ROW_VALUE_IS_NULL.
@@ -603,20 +594,8 @@ object Similarity {
     val split = if (mxRow.isNullAt(0)) 0L else mxRow.getLong(0) * 4 / 5
     val codebook = ivfCodebookOf(spark, e.filter(col("vec_id") < split),
       nCells, kmeansIters)
-    val bc = spark.sparkContext.broadcast(codebook)
-    def nearestCells(v: Array[Float], n: Int): Seq[Int] =
-      bc.value.map { case (cid, c) => (cid, dotd(unit(v), c)) }
-        .sortBy { case (cid, s) => (-s, cid) }.take(n).map(_._1).toSeq
-    val corpus = assignCells(spark, e, codebook)
-    // Column filter BEFORE the typed view: the lambda form deserializes
-    // every corpus row to find nQueries of them.
-    val queries = e.filter(col("vec_id") < nQueries).as[(Long, Array[Float])]
-      .flatMap { case (id, v) => nearestCells(v, nProbe).map(c => (c, id, v)) }
-      .toDF("cell", "query_id", "qe")
-    val sims = corpus.join(broadcast(queries), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), cosine(col("qe"), col("ne")).as("c"))
-      .dropDuplicates("query_id", "neighbor_id")
+    val sims = ivfProbeSims(assignCells(spark, e, codebook),
+      ivfProbeQueries(spark, e, codebook, nQueries, nProbe))
     val w = Window.partitionBy("query_id").orderBy(col("c").desc, col("neighbor_id"))
     sims.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
@@ -645,25 +624,13 @@ object Similarity {
     * the recall floor lives in NoOracleReport/OperatorSpec. */
   def ivfDeletedTopK(spark: SparkSession, d: String, nQueries: Int, k: Int,
       nCells: Int = 16, nProbe: Int = 4, kmeansIters: Int = 3): DataFrame = {
-    import spark.implicits._
     // The pre-delete index is s04's — trained before the tombstones land
     // (the staleness stance), so it IS the memoized session index.
     val e = corpusEmbeddings(spark, d)
     val (codebook, corpus) = corpusIvfIndex(spark, d, nCells, kmeansIters)
-    val bc = spark.sparkContext.broadcast(codebook)
-    def nearestCells(v: Array[Float], n: Int): Seq[Int] =
-      bc.value.map { case (cid, c) => (cid, dotd(unit(v), c)) }
-        .sortBy { case (cid, s) => (-s, cid) }.take(n).map(_._1).toSeq
-    // Column filter BEFORE the typed view: the lambda form deserializes
-    // every corpus row to find nQueries of them.
-    val queries = e.filter(col("vec_id") < nQueries).as[(Long, Array[Float])]
-      .flatMap { case (id, v) => nearestCells(v, nProbe).map(c => (c, id, v)) }
-      .toDF("cell", "query_id", "qe")
+    val queries = ivfProbeQueries(spark, e, codebook, nQueries, nProbe)
     def topK(c: DataFrame): DataFrame = {
-      val sims = c.join(broadcast(queries), Seq("cell"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"), cosine(col("qe"), col("ne")).as("c"))
-        .dropDuplicates("query_id", "neighbor_id")
+      val sims = ivfProbeSims(c, queries)
       val w = Window.partitionBy("query_id").orderBy(col("c").desc, col("neighbor_id"))
       sims.withColumn("rank", row_number().over(w).cast("long"))
         .filter(col("rank") <= k)

@@ -20,6 +20,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object EventStreams {
 
+  /** A timestamp in epoch microseconds at full precision: getTime is
+    * millis-truncated, getNanos carries the sub-second part. */
+  private def micros(ts: java.sql.Timestamp): Long =
+    math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
+
   /** Events as a file stream (schema pinned from the batch table).
     *
     * FileStreamSource requires a directory; the testdata table is a single
@@ -219,8 +224,6 @@ object EventStreams {
     * continuously-maintained materialized view at 100 TB/day. */
   def latestSnapshot(spark: SparkSession, events: DataFrame): DataFrame = {
     import spark.implicits._
-    def micros(ts: java.sql.Timestamp): Long =
-      math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
     events
       .selectExpr("user_id", "event_type", "event_id", "ts", "value")
       .as[SnapEv]
@@ -271,8 +274,6 @@ object EventStreams {
   def funnel(spark: SparkSession, events: DataFrame,
       windowUs: Long = 3600L * 1000000L): DataFrame = {
     import spark.implicits._
-    def micros(ts: java.sql.Timestamp): Long =
-      math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
     events
       .selectExpr("user_id", "event_type", "event_id", "ts")
       .as[FunnelEv]
@@ -328,8 +329,6 @@ object EventStreams {
     */
   def cohortRetention(spark: SparkSession, events: DataFrame): DataFrame = {
     import spark.implicits._
-    def micros(ts: java.sql.Timestamp): Long =
-      math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
     val dayUs = 86400L * 1000000L
     val acts = events
       // date_trunc under the session's UTC zone: day boundaries are exact
@@ -386,8 +385,6 @@ object EventStreams {
   def attribution(spark: SparkSession, events: DataFrame,
       lookbackUs: Long = 86400L * 1000000L): DataFrame = {
     import spark.implicits._
-    def micros(ts: java.sql.Timestamp): Long =
-      math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
     events
       .selectExpr("user_id", "event_type", "event_id", "ts")
       .as[AttribEv]
@@ -441,8 +438,6 @@ object EventStreams {
     */
   def transitions(spark: SparkSession, events: DataFrame): DataFrame = {
     import spark.implicits._
-    def micros(ts: java.sql.Timestamp): Long =
-      math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
     events
       .selectExpr("user_id", "event_type", "event_id", "ts")
       .as[TransEv]
@@ -488,8 +483,6 @@ object EventStreams {
     */
   def scd2History(spark: SparkSession, events: DataFrame): DataFrame = {
     import spark.implicits._
-    def micros(ts: java.sql.Timestamp): Long =
-      math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
     events
       .selectExpr("user_id", "event_type", "event_id", "ts")
       .as[Scd2Ev]
@@ -532,11 +525,8 @@ object EventStreams {
       .flatMapGroupsWithState[SessionState, SessionOut](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (userId: Long, evs: Iterator[Ev], state: GroupState[SessionState]) =>
-          // Full microsecond precision (getTime is millis-truncated;
-          // getNanos carries the sub-second part) so the 30-min gap compare
-          // matches batch q12's unix_micros exactly on sub-ms timestamps.
-          def micros(ts: java.sql.Timestamp): Long =
-            math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
+          // Full microsecond precision (see micros) so the 30-min gap
+          // compare matches batch q12's unix_micros on sub-ms timestamps.
           val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.value))
           var st = state.getOption.getOrElse(SessionState(0L, Long.MinValue, 0L, 0.0))
           val closed = scala.collection.mutable.ArrayBuffer[SessionOut]()

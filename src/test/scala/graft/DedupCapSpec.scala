@@ -225,6 +225,75 @@ class DedupCapSpec extends SparkSpec {
       cp19.head.getLong(3) == allShingles, s"wrong d19 row: ${cp19.head}")
   }
 
+  /** The cap boundary planted at dfCap = `cap`: segment R sits in exactly
+    * `cap` docs (df == cap — must stay rare, and pairs sharing ONLY R must
+    * still be emitted); segment H sits in exactly cap + 1 (df == cap + 1 —
+    * goes hot), and every pair of H docs also shares a pair-unique
+    * segment, so the capped plans emit every pair the uncapped ones do
+    * while H's mass comes back only through the hot-set recovery.
+    * Segments are 5 tokens (one internal 5-gram, three 3-grams) joined by
+    * doc-unique separators, so no boundary n-gram is shared. Each group
+    * holds one doc that is both d09-eval (id % 19 == 0) and d21-val
+    * (bucket < 10), so every kernel arm sees crossing pairs. */
+  private def capBoundaryCorpus(cap: Int): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val ids = 0L until 4000L
+    val bucket = spark.range(0, 4000)
+      .select(col("id"), graft.operators.Sampling.hashBucket(col("id")))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val both = ids.filter(i => i % 19 == 0 && bucket(i) < 10)
+    val neither = ids.filter(i => i % 19 != 0 && bucket(i) >= 10)
+    val rIds = both(0) +: neither.take(cap - 1)
+    val hIds = both(1) +: neither.slice(cap - 1, 2 * cap - 1)
+    def seg(tag: String) = (0 until 5).map(j => s"$tag$j").mkString(" ")
+    def doc(i: Long, segs: Seq[String]) =
+      (i, segs.zipWithIndex.map { case (t, k) => s"$t s${i}x$k" }.mkString(" "))
+    val rDocs = rIds.map(i => doc(i, Seq(seg("rr"), s"u${i}a u${i}b u${i}c")))
+    val hDocs = hIds.map { i =>
+      doc(i, seg("hh") +: hIds.filter(_ != i).map(j =>
+        seg(s"p${math.min(i, j)}y${math.max(i, j)}w")))
+    }
+    (rDocs ++ hDocs).toDF("doc_id", "text")
+  }
+
+  test("cap boundary: df == cap stays rare, df == cap + 1 goes hot (d04/d18, d09/d19, d21, d33)") {
+    val cap = 4
+    val docs = capBoundaryCorpus(cap)
+    val n = docs.count().toInt + 1
+    val hs = Dedup.materializedShingleHashes(docs)
+    // The fixture itself: the corpus's df values are exactly {1, 2, cap, cap + 1}.
+    Seq(hs, Dedup.hashedShingles(Dedup.shingleSets(docs, 5))).foreach { t =>
+      val dfs = t.groupBy("sh_h").count().select("count").distinct()
+        .collect().map(_.getLong(0)).toSet
+      assert(dfs == Set(1L, 2L, cap.toLong, cap + 1L), s"planted df values drifted: $dfs")
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    def same(what: String, capped: org.apache.spark.sql.DataFrame,
+        uncapped: org.apache.spark.sql.DataFrame) = {
+      val (c, u) = (rows(capped), rows(uncapped))
+      assert(c == u, s"$what capped=$c uncapped=$u")
+      assert(u.nonEmpty, s"vacuous $what: no rows")
+    }
+    same("d04", Dedup.jaccardPairsCapped(hs, cap), Dedup.jaccardPairsCapped(hs, n))
+    same("d18", Dedup.containmentPairsHashed(hs, 0.0, cap),
+      Dedup.containmentPairsHashed(hs, 0.0, n))
+    val corpus = docs.filter(col("doc_id") % 19 =!= 0)
+    val evalD = docs.filter(col("doc_id") % 19 === 0)
+    same("d09", Dedup.decontaminate(corpus, evalD, 5, cap),
+      Dedup.decontaminate(corpus, evalD, 5, n))
+    same("d19", Dedup.evalLeakReport(corpus, evalD, 5, cap),
+      Dedup.evalLeakReport(corpus, evalD, 5, n))
+    same("d21", Dedup.splitLeakage(docs, dfCap = cap), Dedup.splitLeakage(docs, dfCap = n))
+    same("d33", Dedup.capOperatingCurveFromHashes(hs, Seq(cap.toLong)).drop("df_cap"),
+      Dedup.capOperatingCurveFromHashes(hs, Seq(n.toLong)).drop("df_cap"))
+    // Self pairs recover hot shared counts from ONE hot-set checkpoint
+    // read by both sides: hs + hot + hot sets = 3 checkpoints in the plan.
+    val ckpts = Dedup.cappedPairCounts(hs, cap).queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }.distinct
+    assert(ckpts.size == 3, s"self-pair plan reads ${ckpts.size} checkpoints, want 3")
+  }
+
   // -------------------------------------------- LSH band-bucket cap (d02/d32)
 
   test("band-capped LSH candidates ≡ uncapped on the sf0.001 corpus (shipped cap)") {

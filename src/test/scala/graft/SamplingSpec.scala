@@ -90,32 +90,4 @@ class SamplingSpec extends SparkSpec {
     assert(canon(Dedup.connectedComponents(p1, driverThreshold = 0L)) ==
       canon(Dedup.connectedComponents(p7, driverThreshold = 0L)))
   }
-
-  test("two-phase source cap == single-window q35 on real and 90%-hot corpora") {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sf)
-    def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getString(1), r.getLong(2))
-    val single = Sampling.sourceCap.fn(spark, sf).collect().map(key).toSet
-    val two = Sampling.sourceCapTwoPhase(docs, 10).collect().map(key).toSet
-    assert(two == single, "two-phase drifted from the single-window plan")
-    // Hot fixture: one source holds 90% of rows — the regime the
-    // two-phase exists for; equality must hold there too, for several
-    // salt counts (including salts > rows-per-source edge).
-    val hot = docs.withColumn("source",
-      when(col("doc_id") % 10 < 9, lit("hot_src")).otherwise(col("source")))
-    def rankSet(df: org.apache.spark.sql.DataFrame) = df.collect().map(key).toSet
-    val wHot = {
-      import org.apache.spark.sql.expressions.Window
-      val keyed = hot.select(col("doc_id"), col("source"),
-        md5(col("doc_id").cast("string")).as("h"))
-      val w = Window.partitionBy("source").orderBy(col("h"), col("doc_id"))
-      keyed.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 10).select("doc_id", "source", "rank")
-    }
-    val refHot = rankSet(wHot)
-    Seq(2, 32, 1000).foreach { salts =>
-      assert(rankSet(Sampling.sourceCapTwoPhase(hot, 10, salts)) == refHot,
-        s"two-phase(salts=$salts) drifted on the hot corpus")
-    }
-  }
 }

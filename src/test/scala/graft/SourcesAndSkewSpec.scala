@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Similarity, SkewJoin}
+import graft.operators.Similarity
 import graft.sources.{ScaledCorpora, TextSource}
 
 class SourcesAndSkewSpec extends SparkSpec {
@@ -27,22 +27,6 @@ class SourcesAndSkewSpec extends SparkSpec {
     TextSource.write(Seq("x\t1", "y\t2").toDF("value"), out)
     val back = spark.read.text(out).collect().map(_.getString(0)).toSet
     assert(back == Set("x\t1", "y\t2"))
-  }
-
-  test("salted join == plain join on skewed data") {
-    import spark.implicits._
-    // 90% of rows share one hot key.
-    val large = spark.range(0, 20000)
-      .select(
-        when(col("id") % 10 =!= 0, lit(1L)).otherwise(col("id") % 100).as("k"),
-        col("id").as("payload"))
-    val small = Seq((0L, "zero"), (1L, "one"), (42L, "forty-two")).toDF("k", "name")
-    val expected = large.join(small, Seq("k"))
-      .select("k", "payload", "name").collect().map(_.toSeq).toSet
-    val got = SkewJoin.saltedJoin(large, small, "k", 8)
-      .select("k", "payload", "name").collect().map(_.toSeq).toSet
-    assert(got == expected)
-    assert(got.nonEmpty)
   }
 
   test("hot-cell vector corpus: s17 balance flags the cell, probe traffic stays nProbe-bounded, recalls hold") {

@@ -3,14 +3,25 @@
 runs Verify's parquet dumps against the DuckDB oracle SQL and compares
 values with columns sorted by name and rows sorted. Dev-only tool (the
 engine itself has no Python dependency)."""
-import json, sys, glob, os, time
+import atexit, json, sys, glob, os, shutil, tempfile, time
 import duckdb
 import pandas as pd
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
 
-con = duckdb.connect()
+# DuckDB spills large joins to its temp directory, by default ./.tmp under
+# the working directory (GBs at sf0.1): keep it out of the checkout.
+tmp_dir = tempfile.mkdtemp(prefix="check_oracle_duckdb_")
+con = duckdb.connect(config={"temp_directory": tmp_dir})
+
+
+def _cleanup():
+    con.close()
+    shutil.rmtree(tmp_dir, ignore_errors=True)
+
+
+atexit.register(_cleanup)
 for t in ["region","nation","customer","supplier","part","orders",
           "lineitem","events","documents","embeddings"]:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
