@@ -1,6 +1,12 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
+import java.io.IOException
+import java.nio.charset.StandardCharsets
+import java.util.Locale
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.functions.Md5Partitioner
@@ -69,7 +75,7 @@ object MapReduceJob {
           // the URI, resolved against the broadcast session config.
           val in = p.getFileSystem(hadoopConfB.value.value).open(p)
           val reader = new java.io.BufferedReader(
-            new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
+            new java.io.InputStreamReader(in, StandardCharsets.UTF_8))
           new Iterator[String] {
             private var line = reader.readLine()
             if (line == null) reader.close()
@@ -94,19 +100,23 @@ object MapReduceJob {
     * the pattern is compiled once here instead of once per line. */
   private val wcSeparators = java.util.regex.Pattern.compile("[ \t\\[\\]]")
   val wcMapper: String => IterableOnce[(String, String)] =
-    line => wcSeparators.split(line.toLowerCase, -1).map(w => (w, "1"))
+    line => wcSeparators.split(line.toLowerCase(Locale.ROOT), -1).map(w => (w, "1"))
+  /** Sums in a `Long`, as the reference's Python ints never wrap; a
+    * non-numeric value still throws. */
   val wcReducer: (String, Iterator[String]) => IterableOnce[String] =
-    (key, vals) => Iterator.single(s"$key\t${vals.map(_.toInt).sum}")
+    (key, vals) => Iterator.single(s"$key\t${vals.map(_.toLong).sum}")
 
   /** Grep mapper/reducer (reference `tests/testdata/exec/grep_map.py:14-28`,
     * `grep_reduce.py:14-27`): emit matching lines under constant key "1".
     * Only the LINE is lowercased for the match — the reference does
     * `query in line.lower()` without lowering the query, so an uppercase
-    * query matches nothing (reproduced here for parity). */
+    * query matches nothing (reproduced here for parity). Both mappers
+    * lowercase in `Locale.ROOT`, like Python's locale-free `str.lower()`:
+    * under a Turkish default locale `"I"` would become a dotless `"ı"`. */
   def grepMapper(query: String): String => IterableOnce[(String, String)] =
     line => {
       val t = line.strip()
-      if (t.nonEmpty && t.toLowerCase.contains(query)) Iterator.single(("1", t))
+      if (t.nonEmpty && t.toLowerCase(Locale.ROOT).contains(query)) Iterator.single(("1", t))
       else Iterator.empty
     }
   val grepReducer: (String, Iterator[String]) => IterableOnce[String] =
@@ -157,34 +167,64 @@ object MapReduceJob {
     * output directory is byte-identical to the reference's layout: exactly
     * `numReducers` files named `part-{NNNNN}` (reference
     * `worker/__main__.py:237-238`), existing output deleted first
-    * (reference `manager/__main__.py:345-355`), no `_SUCCESS`/checksum
-    * droppings. */
+    * (reference `manager/__main__.py:345-355`), committed by
+    * [[writeExact]]'s temp-and-rename in the reduce stage itself. */
   def runToDir(spark: SparkSession, spec: JobSpec, outputDir: String,
       exactPartNames: Boolean = false): Unit =
     if (!exactPartNames) run(spark, spec).write.mode("overwrite").text(outputDir)
     else writeExact(spark, run(spark, spec), outputDir, spec.numReducers)
 
-  /** Commit a per-partition line dataset to `outputDir` with the
-    * reference's exact `part-{NNNNN}` names. `saveAsTextFile` already
-    * emits Hadoop's `part-NNNNN` (no UUID suffix) one per partition —
-    * including empty partitions, matching the reference's always-R-files
-    * contract — so the cleanup is just the `_SUCCESS` marker + CRCs. */
+  /** Commit a per-partition line dataset to `outputDir` as exactly one
+    * `part-{NNNNN}` file per partition, empty partitions included (a 0-byte
+    * file), each line UTF-8 with a trailing `\n` — the reference's
+    * always-R-files contract and MapReduce's own commit (Dean & Ghemawat
+    * §3.3): every reduce attempt writes a private hidden
+    * `.part-NNNNN.<taskAttemptId>` and renames it to `part-NNNNN`. If the
+    * rename finds `part-NNNNN` already committed by another attempt of the
+    * same task, that attempt wrote the same bytes (job output is
+    * deterministic under retry, see RetryDeterminismSpec), so the temp is
+    * dropped. After the job, the driver deletes every non-`part-` entry:
+    * the temps of killed attempts. No Hadoop output committer runs, so there
+    * is no `_temporary` dir and no `_SUCCESS` marker. Files go through the
+    * raw filesystem, so a checksummed local FS writes no `.crc` siblings
+    * (and its JVM-wide cached instance keeps checksumming other writes). */
   def writeExact(spark: SparkSession, out: Dataset[String], outputDir: String,
       numReducers: Int): Unit = {
-    val dir = new Path(outputDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // LocalFileSystem writes hidden .part-NNNNN.crc siblings (and hides
-    // them from listStatus); turn checksums off so the directory holds
-    // exactly what the reference's would.
-    fs.setWriteChecksum(false)
+    val sc = spark.sparkContext
+    val fs = rawFileSystem(new Path(outputDir), sc.hadoopConfiguration)
+    // Qualified on the driver, so every task resolves the same directory.
+    val dir = fs.makeQualified(new Path(outputDir))
     if (fs.exists(dir)) fs.delete(dir, true)
-    out.rdd.saveAsTextFile(outputDir)
-    fs.listStatus(dir).map(_.getPath)
-      .filter(p => p.getName == "_SUCCESS" || p.getName.endsWith(".crc"))
-      .foreach(p => fs.delete(p, false))
-    require(fs.listStatus(dir).count(_.getPath.getName.startsWith("part-")) == numReducers,
-      s"writeExact: expected $numReducers part files in $outputDir")
+    if (!fs.mkdirs(dir)) throw new IOException(s"writeExact: cannot create $dir")
+    val dirName = dir.toString
+    val hadoopConfB = sc.broadcast(new SerializableHadoopConf(sc.hadoopConfiguration))
+    out.rdd.foreachPartition { lines =>
+      val task = TaskContext.get()
+      val name = f"part-${task.partitionId()}%05d"
+      val part = new Path(dirName, name)
+      val tmp = new Path(dirName, s".$name.${task.taskAttemptId()}")
+      val tfs = rawFileSystem(part, hadoopConfB.value.value)
+      val os = tfs.create(tmp, false, 1 << 16)
+      try lines.foreach { l => os.write(l.getBytes(StandardCharsets.UTF_8)); os.write('\n') }
+      finally os.close()
+      // A local rename replaces an existing target; HDFS's returns false.
+      if (!tfs.rename(tmp, part)) {
+        if (tfs.exists(part)) tfs.delete(tmp, false)
+        else throw new IOException(s"writeExact: cannot rename $tmp to $part")
+      }
+    }
+    val (parts, stray) = fs.listStatus(dir).map(_.getPath).partition(_.getName.startsWith("part-"))
+    stray.foreach(fs.delete(_, true))
+    require(parts.length == numReducers,
+      s"writeExact: expected $numReducers part files in $outputDir, found ${parts.length}")
   }
+
+  /** The filesystem of `p` without its checksum layer, if it has one. */
+  private def rawFileSystem(p: Path, conf: Configuration): FileSystem =
+    p.getFileSystem(conf) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case f => f
+    }
 
   /** External-executable map stage (Hadoop-streaming compatibility,
     * reference `worker/__main__.py:167-186`): stream partition lines through

@@ -66,6 +66,13 @@ class MapReduceParitySpec extends SparkSpec {
     assert(got == Map("" -> 1, "hello" -> 1, "world" -> 1))
   }
 
+  test("word count sums in a Long: a count past Int.MaxValue does not wrap") {
+    assert(MapReduceJob.wcReducer("k", Iterator("2147483647", "1")).iterator.toList ==
+      List("k\t2147483648"))
+    intercept[NumberFormatException](
+      MapReduceJob.wcReducer("k", Iterator("1", "x")).iterator.toList)
+  }
+
   test("wc tokenizer parity: brackets are separators (tr SET1 is literal [ \\t])") {
     // reference wc_map.sh:12 — tr '[ \t]' '\n' translates the four literal
     // chars '[', ' ', '\t', ']' to newlines, so "[tag] x" yields tokens

@@ -547,6 +547,18 @@ class PropertySpec extends SparkSpec {
     assert(got == expected)
   }
 
+  test("wc and grep mappers lowercase the same under a Turkish default locale") {
+    import graft.operators.MapReduceJob
+    val saved = java.util.Locale.getDefault
+    try {
+      java.util.Locale.setDefault(new java.util.Locale("tr"))
+      assert("TITLE".toLowerCase != "title") // the locale really is dotless-i
+      assert(MapReduceJob.wcMapper("TITLE").iterator.toList == List("title" -> "1"))
+      assert(MapReduceJob.grepMapper("title")("A TITLE line").iterator.toList ==
+        List("1" -> "A TITLE line"))
+    } finally java.util.Locale.setDefault(saved)
+  }
+
   test("scrubProfile (streaming kernel) == batch templateScrub on random corpora") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, count, lit}

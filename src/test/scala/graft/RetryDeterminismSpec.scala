@@ -18,7 +18,8 @@ import graft.operators.MapReduceJob.JobSpec
   * `tests/test_manager_05.py:212-306`); here Spark's scheduler does it.
   * A listener kills attempt 0 of the first reduce-stage task mid-job; the
   * spec checks that Spark re-ran that task and that every partition's
-  * lines equal those of a clean run.
+  * lines equal those of a clean run, and, through `runToDir`'s direct
+  * commit, that the output dir holds exactly the clean run's part files.
   */
 class RetryDeterminismSpec extends SparkSpec {
 
@@ -68,22 +69,26 @@ class RetryDeterminismSpec extends SparkSpec {
     }
   }
 
-  /** Runs `job` once with the kill listener and returns its partitions.
+  /** Runs `job` once with the kill listener and returns its partitions. */
+  private def killedRun(job: () => Dataset[String]): Seq[Seq[String]] =
+    killedAction(() => partitions(job()))
+
+  /** Runs `action` (one job) with the kill listener and returns its result.
     * A kill that lands after the attempt already succeeded is a miss, not
-    * a retry, so the run is repeated (at most three times). */
-  private def killedRun(job: () => Dataset[String]): Seq[Seq[String]] = {
+    * a retry, so the action is repeated (at most three times). */
+  private def killedAction[T](action: () => T): T = {
     val sc = spark.sparkContext
-    def attempt(left: Int): Seq[Seq[String]] = {
+    def attempt(left: Int): T = {
       val l = new KillFirstReduceTask
       sc.addSparkListener(l)
-      val parts = try {
-        val p = partitions(job())
+      val result = try {
+        val r = action()
         // Task-end events reach the listener asynchronously after the job
         // returns: wait for the successful end of task 0.
         val deadline = System.nanoTime() + 30L * 1000000000L
         while (!l.endsOfTask0.exists(_.reason == Success) &&
             System.nanoTime() < deadline) Thread.sleep(20)
-        p
+        r
       } finally sc.removeSparkListener(l)
       val ends = l.endsOfTask0
       val missed = ends.exists(t => t.taskInfo.attemptNumber == 0 && t.reason == Success)
@@ -95,7 +100,7 @@ class RetryDeterminismSpec extends SparkSpec {
         assert(ends.exists(t => t.taskInfo.attemptNumber >= 1 && t.reason == Success),
           s"killed reduce task 0 was not re-run: ${ends.map(e =>
             e.taskInfo.attemptNumber -> e.reason)}")
-        parts
+        result
       }
     }
     attempt(3)
@@ -116,5 +121,22 @@ class RetryDeterminismSpec extends SparkSpec {
     val clean = partitions(job())
     assert(clean.length == 4 && clean.forall(_.nonEmpty))
     assertSameParts(killedRun(job), clean)
+  }
+
+  test("word count through runToDir: a killed reduce attempt commits the clean part files") {
+    val job = JobSpec(input, MapReduceJob.wcMapper, MapReduceJob.wcReducer,
+      numReducers = 4, numMappers = 4)
+    val names = (0 until 4).map(p => f"part-$p%05d")
+    val clean = Files.createTempDirectory("graft-retry-clean").toFile
+    MapReduceJob.runToDir(spark, job, clean.getPath, exactPartNames = true)
+    val dir = Files.createTempDirectory("graft-retry-killed").toFile
+    killedAction(() => MapReduceJob.runToDir(spark, job, dir.getPath, exactPartNames = true))
+    // Exactly the part files: no killed attempt's hidden temp is left.
+    assert(dir.list().sorted.toSeq == names)
+    names.foreach { n =>
+      val got = Files.readAllBytes(new java.io.File(dir, n).toPath)
+      assert(got.nonEmpty && got.sameElements(
+        Files.readAllBytes(new java.io.File(clean, n).toPath)), s"$n differs from the clean run")
+    }
   }
 }
