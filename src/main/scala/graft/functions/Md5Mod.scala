@@ -56,13 +56,11 @@ object Md5Mod {
     partitionOf(key.getBytes(StandardCharsets.UTF_8), n)
 }
 
-/** RDD partitioner with the reference's exact md5-mod routing. */
+/** RDD partitioner with the reference's exact md5-mod routing of the key's
+  * string. */
 class Md5Partitioner(n: Int) extends Partitioner {
   override def numPartitions: Int = n
-  override def getPartition(key: Any): Int = key match {
-    case (k: String, _) => Md5Mod.partitionOf(k, n)
-    case k => Md5Mod.partitionOf(String.valueOf(k), n)
-  }
+  override def getPartition(key: Any): Int = Md5Mod.partitionOf(String.valueOf(key), n)
   override def equals(other: Any): Boolean = other match {
     case p: Md5Partitioner => p.numPartitions == n
     case _ => false

@@ -4,9 +4,11 @@ import java.io.IOException
 import java.nio.charset.StandardCharsets
 import java.util.Locale
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
-import org.apache.spark.TaskContext
+import org.apache.spark.{ShuffleSort, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.functions.Md5Partitioner
@@ -124,41 +126,90 @@ object MapReduceJob {
 
   /** Run a job: returns one `Dataset[String]` whose partition p contains the
     * reducer output for md5-routed partition p, key-sorted — the in-memory
-    * form of the reference's `part-{p:05d}` files. */
+    * form of the reference's `part-{p:05d}` files. The map output is
+    * shuffled as plain `(key, value)` pairs and each reduce partition is
+    * sorted by whole pair ([[routeSorted]]); the reducer then streams over
+    * one key group at a time ([[reduceGroups]]). */
   def run(spark: SparkSession, spec: JobSpec): Dataset[String] = {
     import spark.implicits._
     val mapped = mapInput(spark, spec.inputDir, spec.numMappers).flatMap(spec.mapper)
-    // Key by (key, value) so repartitionAndSortWithinPartitions gives the
-    // reference's whole-line sort; the partitioner routes on key only.
-    val routed = mapped
-      .map { case (k, v) => ((k, v), ()) }
-      .repartitionAndSortWithinPartitions(new Md5Partitioner(spec.numReducers))
-    val reduced = routed.mapPartitions { it =>
-      // Streaming group-by over the sorted run (itertools.groupby analog —
-      // reference `tests/testdata/exec/wc_reduce.py:26`): O(1) memory.
-      new Iterator[String] {
-        private val buf = it.buffered
-        private var out: Iterator[String] = Iterator.empty
-        private def advance(): Unit = {
-          while (!out.hasNext && buf.hasNext) {
-            val key = buf.head._1._1
-            val vals = new Iterator[String] {
-              def hasNext: Boolean = buf.hasNext && buf.head._1._1 == key
-              def next(): String = buf.next()._1._2
-            }
-            out = spec.reducer(key, vals).iterator.toList.iterator
-            // A reducer need not consume all its values (the reference
-            // pipes the whole group regardless); drain the remainder so
-            // the next loop iteration starts at the next key instead of
-            // re-reducing this one (or spinning forever).
-            while (vals.hasNext) vals.next()
+    spark.createDataset(routeSorted(mapped, spec.numReducers)
+      .mapPartitions(reduceGroups(_, spec.reducer)))
+  }
+
+  /** Streaming group-by over a `(key, value)`-sorted run (itertools.groupby
+    * analog — reference `tests/testdata/exec/wc_reduce.py:26`): the
+    * reducer's own output iterator is returned line by line, pulling its
+    * group's values as it goes, so this step holds O(1) lines (grep's
+    * pass-through reducer holds none). */
+  private[graft] def reduceGroups(sorted: Iterator[(String, String)],
+      reducer: (String, Iterator[String]) => IterableOnce[String]): Iterator[String] =
+    new Iterator[String] {
+      private val buf = sorted.buffered
+      private var vals: Iterator[String] = Iterator.empty
+      private var out: Iterator[String] = Iterator.empty
+      private def advance(): Unit =
+        while (!out.hasNext && {
+          // A reducer need not consume all its values (the reference pipes
+          // the whole group regardless); once its output is exhausted,
+          // drain the rest so the next group starts at the next key
+          // instead of re-reducing this one (or spinning forever).
+          while (vals.hasNext) vals.next()
+          buf.hasNext
+        }) {
+          val key = buf.head._1
+          vals = new Iterator[String] {
+            def hasNext: Boolean = buf.hasNext && buf.head._1 == key
+            def next(): String = buf.next()._2
           }
+          out = reducer(key, vals).iterator
         }
-        def hasNext: Boolean = { advance(); out.hasNext }
-        def next(): String = { advance(); out.next() }
-      }
+      def hasNext: Boolean = { advance(); out.hasNext }
+      def next(): String = { advance(); out.next() }
     }
-    spark.createDataset(reduced)
+
+  /** Md5-route `(key, value)` pairs to `numReducers` partitions on the key
+    * and sort each partition by whole pair — the reference's whole-line
+    * sort of every partition file (`worker/__main__.py:191-198`). The
+    * shuffle reads unsorted; [[sortPartition]] sorts it, in memory below
+    * the size at which Spark's reduce-side sorter would first ask for
+    * execution memory. */
+  private def routeSorted(pairs: RDD[(String, String)], numReducers: Int): RDD[(String, String)] =
+    pairs.partitionBy(new Md5Partitioner(numReducers))
+      .mapPartitions(sortPartition(_, ShuffleSort.initialMemoryThreshold))
+
+  private val pairOrdering = Ordering[(String, String)]
+
+  /** Upper bound of one buffered pair's JVM bytes beyond 2 bytes per char,
+    * with 16-byte headers and 8-byte references, and at least what Spark's
+    * sorter estimates per record: its `(partition, key)` and `(key, value)`
+    * `Tuple2`s (2 × 32), two `String`s with their byte arrays' headers and
+    * padding (2 × 56), and two slots of a buffer that grows by doubling
+    * (32). */
+  private val PairBytes = 208L
+
+  /** Sort one reduce partition by `(key, value)`. While the pairs read so
+    * far fit `maxBytes` (by the [[PairBytes]] bound) they are buffered; a
+    * partition that fits whole is sorted in memory. One that outgrows it
+    * goes, buffered prefix first, through Spark's `ExternalSorter`, which
+    * spills as a shuffle read would. [[routeSorted]] passes the size below
+    * which that sorter neither spills nor asks for execution memory, so
+    * memory behaviour stays the sorter's. */
+  private[graft] def sortPartition(it: Iterator[(String, String)],
+      maxBytes: Long): Iterator[(String, String)] = {
+    val buf = new java.util.ArrayList[(String, String)]()
+    var bytes = 0L
+    var fits = true
+    while (fits && it.hasNext) {
+      val p = it.next()
+      buf.add(p)
+      bytes += PairBytes + 2L * (p._1.length + p._2.length)
+      fits = bytes <= maxBytes
+    }
+    if (fits) {
+      buf.sort(pairOrdering) // java.util.Arrays.sort over the list's array
+      buf.iterator.asScala
+    } else ShuffleSort.sorted(buf.iterator.asScala ++ it)(pairOrdering)
   }
 
   /** Write job output as the reference does: overwrite-mode text files, one
@@ -242,19 +293,18 @@ object MapReduceJob {
     * every intermediate file, `worker/__main__.py:195-198`, and
     * `heapq.merge`s them), then stream each partition's merged run through
     * `command` once via RDD.pipe — one reducer process per partition,
-    * exactly the reference's layout. Lines are kept verbatim (a line with
-    * no tab reduces under itself as key, like the reference). */
+    * exactly the reference's layout. The shuffle carries `(key, line)`
+    * pairs, sorted by key, then line, by [[routeSorted]] as in [[run]].
+    * Lines are kept verbatim (a line with no tab reduces under itself as
+    * key, like the reference). */
   def pipeReduce(spark: SparkSession, mapped: Dataset[String], command: Seq[String],
       numReducers: Int): Dataset[String] = {
     import spark.implicits._
-    val routed = mapped.rdd
-      .map { line =>
-        val i = line.indexOf('\t')
-        val k = if (i >= 0) line.substring(0, i) else line
-        ((k, line), ())
-      }
-      .repartitionAndSortWithinPartitions(new Md5Partitioner(numReducers))
-    spark.createDataset(routed.map(_._1._2).pipe(command))
+    val keyed = mapped.rdd.map { line =>
+      val i = line.indexOf('\t')
+      (if (i >= 0) line.substring(0, i) else line, line)
+    }
+    spark.createDataset(routeSorted(keyed, numReducers).map(_._2).pipe(command))
   }
 
   /** Full Hadoop-streaming job with EXTERNAL mapper and reducer — the

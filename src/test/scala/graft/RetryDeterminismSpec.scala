@@ -1,11 +1,12 @@
 package graft
 
+import java.io.File
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.{Success, TaskKilled}
+import org.apache.spark.{Success, TaskContext, TaskKilled}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted,
   SparkListenerTaskEnd, SparkListenerTaskStart}
 import org.apache.spark.sql.Dataset
@@ -19,7 +20,8 @@ import graft.operators.MapReduceJob.JobSpec
   * A listener kills attempt 0 of the first reduce-stage task mid-job; the
   * spec checks that Spark re-ran that task and that every partition's
   * lines equal those of a clean run, and, through `runToDir`'s direct
-  * commit, that the output dir holds exactly the clean run's part files.
+  * commit, that a kill landing mid-write leaves exactly the clean run's
+  * part files.
   */
 class RetryDeterminismSpec extends SparkSpec {
 
@@ -40,8 +42,10 @@ class RetryDeterminismSpec extends SparkSpec {
   }
 
   /** Kills attempt 0 of task index 0 in the first stage that reads a
-    * shuffle (the reduce stage) and records every task end. */
-  private final class KillFirstReduceTask extends SparkListener {
+    * shuffle (the reduce stage) and records every task end. With
+    * `awaitTempIn`, the kill waits (at most 60 s) until that attempt's
+    * hidden `.part-00000.<taskAttemptId>` temp is in the directory. */
+  private final class KillFirstReduceTask(awaitTempIn: Option[File]) extends SparkListener {
     @volatile var reduceStage: Int = -1
     val ends = new ConcurrentLinkedQueue[SparkListenerTaskEnd]()
     override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
@@ -49,9 +53,19 @@ class RetryDeterminismSpec extends SparkSpec {
         reduceStage = e.stageInfo.stageId
     override def onTaskStart(e: SparkListenerTaskStart): Unit =
       if (e.stageId == reduceStage && e.taskInfo.index == 0 &&
-          e.taskInfo.attemptNumber == 0)
-        spark.sparkContext.killTaskAttempt(e.taskInfo.taskId,
-          interruptThread = true, reason = "retry-determinism kill")
+          e.taskInfo.attemptNumber == 0) {
+        val kill: Runnable = () => {
+          awaitTempIn.foreach { dir =>
+            val temp = new File(dir, s".part-00000.${e.taskInfo.taskId}")
+            val deadline = System.nanoTime() + 60L * 1000000000L
+            while (!temp.exists && System.nanoTime() < deadline) Thread.sleep(10)
+          }
+          spark.sparkContext.killTaskAttempt(e.taskInfo.taskId,
+            interruptThread = true, reason = "retry-determinism kill")
+        }
+        // Waiting on the listener bus would stall every other listener.
+        if (awaitTempIn.isEmpty) kill.run() else new Thread(kill).start()
+      }
     def endsOfTask0: Seq[SparkListenerTaskEnd] = ends.asScala.toSeq
       .filter(t => t.stageId == reduceStage && t.taskInfo.index == 0)
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = ends.add(e)
@@ -76,10 +90,10 @@ class RetryDeterminismSpec extends SparkSpec {
   /** Runs `action` (one job) with the kill listener and returns its result.
     * A kill that lands after the attempt already succeeded is a miss, not
     * a retry, so the action is repeated (at most three times). */
-  private def killedAction[T](action: () => T): T = {
+  private def killedAction[T](action: () => T, awaitTempIn: Option[File] = None): T = {
     val sc = spark.sparkContext
     def attempt(left: Int): T = {
-      val l = new KillFirstReduceTask
+      val l = new KillFirstReduceTask(awaitTempIn)
       sc.addSparkListener(l)
       val result = try {
         val r = action()
@@ -129,8 +143,19 @@ class RetryDeterminismSpec extends SparkSpec {
     val names = (0 until 4).map(p => f"part-$p%05d")
     val clean = Files.createTempDirectory("graft-retry-clean").toFile
     MapReduceJob.runToDir(spark, job, clean.getPath, exactPartNames = true)
+    // Attempt 0 of partition 0 blocks in its first reducer call, after its
+    // temp is open, until the kill's interrupt ends it (at most 60 s): the
+    // kill lands mid-write and leaves that temp behind.
+    val blocking = job.copy(reducer = (k, vals) => {
+      val t = TaskContext.get()
+      if (t.partitionId() == 0 && t.attemptNumber() == 0 &&
+          RetryDeterminismSpec.blockedAttempts.add(t.taskAttemptId()))
+        Thread.sleep(60000)
+      MapReduceJob.wcReducer(k, vals)
+    })
     val dir = Files.createTempDirectory("graft-retry-killed").toFile
-    killedAction(() => MapReduceJob.runToDir(spark, job, dir.getPath, exactPartNames = true))
+    killedAction(() => MapReduceJob.runToDir(spark, blocking, dir.getPath, exactPartNames = true),
+      awaitTempIn = Some(dir))
     // Exactly the part files: no killed attempt's hidden temp is left.
     assert(dir.list().sorted.toSeq == names)
     names.foreach { n =>
@@ -139,4 +164,9 @@ class RetryDeterminismSpec extends SparkSpec {
         Files.readAllBytes(new java.io.File(clean, n).toPath)), s"$n differs from the clean run")
     }
   }
+}
+
+object RetryDeterminismSpec {
+  /** Task attempts that have blocked once (tasks run in this JVM). */
+  val blockedAttempts: java.util.Set[Long] = ConcurrentHashMap.newKeySet[Long]()
 }
