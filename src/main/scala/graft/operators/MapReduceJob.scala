@@ -8,8 +8,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
-import org.apache.spark.{ShuffleSort, TaskContext}
-import org.apache.spark.rdd.RDD
+import org.apache.spark.{ShuffleSort, StringPairSerializer, TaskContext}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.functions.Md5Partitioner
 
@@ -171,11 +171,17 @@ object MapReduceJob {
   /** Md5-route `(key, value)` pairs to `numReducers` partitions on the key
     * and sort each partition by whole pair — the reference's whole-line
     * sort of every partition file (`worker/__main__.py:191-198`). The
-    * shuffle reads unsorted; [[sortPartition]] sorts it, in memory below
-    * the size at which Spark's reduce-side sorter would first ask for
-    * execution memory. */
-  private def routeSorted(pairs: RDD[(String, String)], numReducers: Int): RDD[(String, String)] =
-    pairs.partitionBy(new Md5Partitioner(numReducers))
+    * shuffle moves the pairs through [[StringPairSerializer]] (varint
+    * length + UTF-8 bytes per string, no per-stream state), not the
+    * session's Kryo: Spark ships the serializer inside every map task with
+    * an empty Kryo pool, so Kryo would build a fresh instance for each
+    * reduce-partition stream a task opens. The shuffle reads unsorted;
+    * [[sortPartition]] sorts it, in memory below the size at which Spark's
+    * reduce-side sorter would first ask for execution memory. */
+  private[graft] def routeSorted(pairs: RDD[(String, String)],
+      numReducers: Int): RDD[(String, String)] =
+    new ShuffledRDD[String, String, String](pairs, new Md5Partitioner(numReducers))
+      .setSerializer(StringPairSerializer)
       .mapPartitions(sortPartition(_, ShuffleSort.initialMemoryThreshold))
 
   private val pairOrdering = Ordering[(String, String)]
@@ -277,13 +283,18 @@ object MapReduceJob {
       case f => f
     }
 
+  /** Charset of both pipes' stdin and stdout. */
+  private val PipeEncoding = StandardCharsets.UTF_8.name
+
   /** External-executable map stage (Hadoop-streaming compatibility,
     * reference `worker/__main__.py:167-186`): stream partition lines through
-    * `command` via RDD.pipe. */
+    * `command` via RDD.pipe, in UTF-8 both ways as [[mapInput]] reads and
+    * [[writeExact]] writes (the pipe's own default is the JVM charset). */
   def pipeMap(spark: SparkSession, inputDir: String, command: Seq[String],
       numMappers: Int = 0): Dataset[String] = {
     import spark.implicits._
-    spark.createDataset(mapInput(spark, inputDir, numMappers).pipe(command))
+    spark.createDataset(
+      mapInput(spark, inputDir, numMappers).pipe(command, encoding = PipeEncoding))
   }
 
   /** External-executable reduce stage (reference
@@ -294,7 +305,8 @@ object MapReduceJob {
     * `heapq.merge`s them), then stream each partition's merged run through
     * `command` once via RDD.pipe — one reducer process per partition,
     * exactly the reference's layout. The shuffle carries `(key, line)`
-    * pairs, sorted by key, then line, by [[routeSorted]] as in [[run]].
+    * pairs, sorted by key, then line, by [[routeSorted]] as in [[run]],
+    * and talks to `command` in UTF-8 like [[pipeMap]].
     * Lines are kept verbatim (a line with no tab reduces under itself as
     * key, like the reference). */
   def pipeReduce(spark: SparkSession, mapped: Dataset[String], command: Seq[String],
@@ -304,7 +316,8 @@ object MapReduceJob {
       val i = line.indexOf('\t')
       (if (i >= 0) line.substring(0, i) else line, line)
     }
-    spark.createDataset(routeSorted(keyed, numReducers).map(_._2).pipe(command))
+    spark.createDataset(
+      routeSorted(keyed, numReducers).map(_._2).pipe(command, encoding = PipeEncoding))
   }
 
   /** Full Hadoop-streaming job with EXTERNAL mapper and reducer — the

@@ -68,9 +68,10 @@ class ReduceSortSpec extends SparkSpec {
 
   test("pipeReduce routes on the key before the first tab and sorts by (key, line)") {
     import spark.implicits._
-    // ASCII only: RDD.pipe talks to the command in the JVM's default charset.
+    // Multi-byte lines too: the pipe must talk to `cat` in UTF-8, whatever
+    // the JVM's default charset.
     val lines = Seq("b\t1", "a\t2", "a\t10", "tabless", "", "ab\t1", "a b\tc",
-      "k\tv\tw", "tabless", "a\t", "\tx", "abc")
+      "k\tv\tw", "tabless", "a\t", "\tx", "abc", "naïve\tx", "日本\t語", "🎉\tz🎉")
     val got = MapReduceJob.pipeReduce(spark, lines.toDS().repartition(3), Seq("cat"), R)
       .rdd.glom().collect().map(_.toSeq).toSeq
     def key(l: String): String = if (l.contains('\t')) l.substring(0, l.indexOf('\t')) else l
